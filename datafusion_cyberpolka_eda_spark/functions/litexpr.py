@@ -20,6 +20,18 @@ fold direction (``aggregate`` left-fold over ``zip_with``) as the
 ``F.array``-based forms they replace, so integer results are identical
 and float results are IEEE-identical — verified bitwise against the old
 expressions in tests and by the full-registry sweeps.
+
+The same holds for wide expression LISTS: under PySpark 4's origin
+tracking each Column call (``F.col``, ``.cast``, ``F.sum``, ``.alias``)
+is its own py4j round-trip or more, so an aggregate list of a few
+hundred entries costs thousands of them. Rendering each expression as
+SQL text (``sql_ident`` for names, the literals above) and passing the
+list to ``DataFrame.selectExpr`` costs about one round-trip per
+expression; the text spells each expression exactly as the Column form
+did (same casts, same operand order), so Catalyst builds the same plan
+and the values are bit-identical. (``spark.sql`` over a ``{df}``
+argument would be cheaper still, but its temporary view hides the
+DataFrame's lineage from the cache manager: a cached input is re-read.)
 """
 
 from __future__ import annotations
@@ -52,6 +64,11 @@ def sql_double(x: float) -> str:
     if x == float("-inf"):
         return "CAST('-Infinity' AS DOUBLE)"
     return repr(x) + "D"
+
+
+def sql_ident(name: str) -> str:
+    """One backquoted identifier (an embedded backquote is doubled)."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def sql_long_array(vec: Iterable[int]) -> str:

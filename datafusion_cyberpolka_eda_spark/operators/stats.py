@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from datafusion_cyberpolka_eda_spark.functions.litexpr import sql_double, sql_ident
+
 
 def _chunks(xs: list, size: int) -> list[list]:
     return [xs[i : i + size] for i in range(0, len(xs), size)]
@@ -60,19 +62,9 @@ def cross_moments(
     # cross products — chunked globally, so small problems (e.g. a 4x4 corr
     # matrix) run as a SINGLE distributed pass, and wide screens split into
     # ceil(total/chunk_size) passes sharing the same scan.
-    exprs: list = [F.count(F.lit(1)).alias("__n")]
-    for c in all_cols:
-        d = F.col(c).cast("double")
-        exprs.append(F.sum(d).alias(f"s_{c}"))
-        exprs.append(F.sum(d * d).alias(f"q_{c}"))
-    for i, (x, y) in enumerate(pairs):
-        exprs.append(
-            F.sum(F.col(x).cast("double") * F.col(y).cast("double")).alias(f"xy_{i}")
-        )
-
     row: dict = {}
-    for batch in _chunks(exprs, max(chunk_size, 1)):
-        row.update(df.agg(*batch).collect()[0].asDict())
+    for batch in _chunks(moment_aggs_sql(xs, ys), max(chunk_size, 1)):
+        row.update(df.selectExpr(*batch).collect()[0].asDict())
 
     n = row["__n"]
     sum_ = {c: float(row[f"s_{c}"]) for c in all_cols}
@@ -94,6 +86,26 @@ def cross_moments(
         "sumsq_y": np.array([sumsq[c] for c in ys]),
         "sum_xy": sum_xy,
     }
+
+
+def moment_aggs_sql(xs: list[str], ys: list[str]) -> list[str]:
+    """cross_moments' aggregate list as SQL text: `__n`, then s_/q_ (sum,
+    sum of squares) per distinct column, then xy_<i> per (x, y) pair in
+    row-major order — the expressions of the former Column form, spelled
+    out (see functions/litexpr.py)."""
+    exprs = ["count(1) AS `__n`"]
+    for c in dict.fromkeys(list(xs) + list(ys)):
+        d = _double(c)
+        exprs.append(f"sum({d}) AS {sql_ident('s_' + c)}")
+        exprs.append(f"sum({d} * {d}) AS {sql_ident('q_' + c)}")
+    pairs = [(x, y) for x in xs for y in ys]
+    for i, (x, y) in enumerate(pairs):
+        exprs.append(f"sum({_double(x)} * {_double(y)}) AS `xy_{i}`")
+    return exprs
+
+
+def _double(c: str) -> str:
+    return f"CAST({sql_ident(c)} AS DOUBLE)"
 
 
 def corr_from_moments(m: dict, eps: float = 1e-12) -> pd.DataFrame:
@@ -158,13 +170,22 @@ def mean_impute(df: DataFrame, cols: list[str], chunk_size: int = 1500) -> DataF
     """
     means: dict[str, float] = {}
     for batch in _chunks(cols, chunk_size):
-        r = df.agg(*[F.avg(F.col(c).cast("double")).alias(c) for c in batch]).collect()[0]
+        r = df.selectExpr(*[f"avg({_double(c)}) AS {sql_ident(c)}" for c in batch]).collect()[0]
         for c in batch:
             means[c] = float(r[c]) if r[c] is not None else 0.0
-    return df.select(
-        *[c for c in df.columns if c not in cols],
-        *[F.coalesce(F.col(c).cast("double"), F.lit(means[c])).alias(c) for c in cols],
-    )
+    return df.selectExpr(*impute_sql(df.columns, means))
+
+
+def impute_sql(columns: list[str], means: dict[str, float]) -> list[str]:
+    """mean_impute's projection as SQL text: the untouched columns, then
+    coalesce(double cast, exact mean literal) per imputed column."""
+    return [
+        *[sql_ident(c) for c in columns if c not in means],
+        *[
+            f"coalesce({_double(c)}, {sql_double(m)}) AS {sql_ident(c)}"
+            for c, m in means.items()
+        ],
+    ]
 
 
 def pair_stats(df: DataFrame, cols: list[str]) -> pd.DataFrame:
@@ -359,11 +380,8 @@ def whale_scan(
     if exact:
         # ALL cutoffs in one agg pass — a per-feature exact_quantiles loop
         # costs one full-table job per feature (O(features) scans)
-        row = df.agg(
-            *[
-                F.expr(f"percentile({f}, {quantile})").alias(f"q_{i}")
-                for i, f in enumerate(features)
-            ]
+        row = df.selectExpr(
+            *[f"percentile({f}, {quantile}) AS `q_{i}`" for i, f in enumerate(features)]
         ).collect()[0]
         cut = {
             f: (float(row[f"q_{i}"]) if row[f"q_{i}"] is not None else float("nan"))
@@ -376,17 +394,7 @@ def whale_scan(
     pairs = [(f, t) for f in features for t in targets]
     records: list[dict] = []
     for batch in _chunks(pairs, max(1, chunk_size // 4)):
-        aggs = []
-        for i, (f, t) in enumerate(batch):
-            top = F.col(f) >= F.lit(cut[f])
-            y = F.col(t).cast("double")
-            aggs += [
-                F.sum(top.cast("long")).alias(f"tn_{i}"),
-                F.sum(F.when(top, y).otherwise(F.lit(0.0))).alias(f"tp_{i}"),
-                F.sum((~top).cast("long")).alias(f"rn_{i}"),
-                F.sum(F.when(~top, y).otherwise(F.lit(0.0))).alias(f"rp_{i}"),
-            ]
-        r = df.agg(*aggs).collect()[0].asDict()
+        r = df.selectExpr(*contingency_aggs_sql(batch, cut)).collect()[0].asDict()
         for i, (f, t) in enumerate(batch):
             tn, tp = int(r[f"tn_{i}"]), int(r[f"tp_{i}"])
             rn, rp = int(r[f"rn_{i}"]), int(r[f"rp_{i}"])
@@ -409,6 +417,25 @@ def whale_scan(
                 }
             )
     return pd.DataFrame(records)
+
+
+def contingency_aggs_sql(
+    pairs: list[tuple[str, str]], cut: dict[str, float]
+) -> list[str]:
+    """whale_scan's 2x2 contingency aggregates as SQL text: per (feature,
+    target) pair i, top = feature >= its cutoff; tn_/rn_ count the top and
+    rest rows, tp_/rp_ sum the target over them."""
+    aggs = []
+    for i, (f, t) in enumerate(pairs):
+        top = f"{sql_ident(f)} >= {sql_double(cut[f])}"
+        y = _double(t)
+        aggs += [
+            f"sum(CAST({top} AS BIGINT)) AS `tn_{i}`",
+            f"sum(CASE WHEN {top} THEN {y} ELSE 0.0D END) AS `tp_{i}`",
+            f"sum(CAST(NOT ({top}) AS BIGINT)) AS `rn_{i}`",
+            f"sum(CASE WHEN NOT ({top}) THEN {y} ELSE 0.0D END) AS `rp_{i}`",
+        ]
+    return aggs
 
 
 def _log_comb(n: int, k: int) -> float:

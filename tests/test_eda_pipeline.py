@@ -88,17 +88,20 @@ SUMMARY_KEYS = [
 ]
 
 
+def _test_config() -> EdaConfig:
+    return EdaConfig(
+        whale_sample_pct=100,  # 20k rows: 12% would break the top>=50 guard
+        min_co_count_lift=20,  # ref's 100 is tuned to 750k rows
+        adv_max_iter=15,  # keep the GBT cheap in tests
+    )
+
+
 @pytest.fixture(scope="module")
 def pipeline_run(spark, tmp_path_factory):
     data_dir = str(tmp_path_factory.mktemp("eda_data"))
     out_dir = str(tmp_path_factory.mktemp("eda_out"))
     generate_eda_fixture(data_dir, n_train=20000, n_test=6000, seed=42)
-    cfg = EdaConfig(
-        whale_sample_pct=100,  # 20k rows: 12% would break the top>=50 guard
-        min_co_count_lift=20,  # ref's 100 is tuned to 750k rows
-        adv_max_iter=15,  # keep the GBT cheap in tests
-    )
-    summary = run_pipeline(spark, data_dir, out_dir, cfg)
+    summary = run_pipeline(spark, data_dir, out_dir, _test_config())
     return data_dir, out_dir, summary
 
 
@@ -573,3 +576,147 @@ def test_small_fixture_regeneration_is_deterministic(tmp_path):
                 assert np.array_equal(a, b, equal_nan=True), (name, c)
             else:
                 assert np.array_equal(a, b), (name, c)
+
+
+# ---- the stage graph: reruns, job groups, failure cleanup ----------------
+
+# the one artifact value that varies run to run (see the eda.py docstring)
+NONDETERMINISTIC_SUMMARY_KEYS = {"adversarial_auc_main_features"}
+
+
+@pytest.fixture(scope="module")
+def grouped_rerun(spark, pipeline_run, tmp_path_factory):
+    """A second run over pipeline_run's fixture, under a caller job group;
+    returns (out_dir, summary, jobs in the group, new jobs in no group)."""
+    data_dir, _, _ = pipeline_run
+    out_dir = str(tmp_path_factory.mktemp("eda_rerun"))
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("eda-test", "stage-graph rerun")
+    try:
+        summary = run_pipeline(spark, data_dir, out_dir, _test_config())
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    grouped = set(tracker.getJobIdsForGroup("eda-test"))
+    ungrouped_new = set(tracker.getJobIdsForGroup(None)) - ungrouped_before
+    return out_dir, summary, grouped, ungrouped_new
+
+
+def _read(directory: str, name: str) -> bytes:
+    with open(os.path.join(directory, name), "rb") as fh:
+        return fh.read()
+
+
+def _assert_inputs_uncached(spark, data_dir: str) -> None:
+    from pyspark import StorageLevel
+
+    for table in ("train_main_features", "test_main_features", "train_extra_features",
+                  "train_target"):
+        df = spark.read.parquet(os.path.join(data_dir, f"{table}.parquet"))
+        assert df.storageLevel == StorageLevel.NONE, table
+
+
+class TestStageGraph:
+    def test_run_leaves_its_inputs_uncached(self, spark, grouped_rerun, pipeline_run):
+        _assert_inputs_uncached(spark, pipeline_run[0])
+
+    def test_rerun_is_byte_identical(self, pipeline_run, grouped_rerun):
+        _, out_a, _ = pipeline_run
+        out_b = grouped_rerun[0]
+        ta, tb = os.path.join(out_a, "public_tables"), os.path.join(out_b, "public_tables")
+        csvs = sorted(f for f in os.listdir(ta) if f.endswith(".csv"))
+        assert len(csvs) == 29
+        assert sorted(f for f in os.listdir(tb) if f.endswith(".csv")) == csvs
+        for name in csvs:
+            assert _read(ta, name) == _read(tb, name), name
+        sa, sb = json.loads(_read(ta, "summary.json")), json.loads(_read(tb, "summary.json"))
+        assert list(sa) == list(sb)
+        for k in sa.keys() - NONDETERMINISTIC_SUMMARY_KEYS:
+            assert sa[k] == sb[k], k
+
+    def test_every_job_keeps_the_callers_job_group(self, grouped_rerun):
+        _, _, grouped, ungrouped_new = grouped_rerun
+        assert len(grouped) > 50  # the run's jobs, GBT's included
+        assert ungrouped_new == set()
+
+    def test_stage_times_and_spans(self, grouped_rerun):
+        summary = grouped_rerun[1]
+        seconds, spans = summary["stage_seconds"], summary["stage_spans"]
+        assert set(seconds) == (
+            {*spans, "adversarial_gbt_wall", "adversarial_join_wait"} - {"adversarial_gbt"}
+        )
+        for name, (start, end) in spans.items():
+            key = "adversarial_gbt_wall" if name == "adversarial_gbt" else name
+            assert 0 <= start <= end
+            assert seconds[key] == pytest.approx(end - start, abs=2e-3)
+        # the report starts after every stage it quotes has ended
+        report_start = spans["summary_report"][0]
+        assert all(end <= report_start for n, (_, end) in spans.items() if n != "summary_report")
+        # the GBT overlaps the stages beside it
+        gbt_start, gbt_end = spans["adversarial_gbt"]
+        assert any(
+            s < gbt_end and e > gbt_start
+            for n, (s, e) in spans.items()
+            if n not in ("adversarial_gbt", "summary_report")
+        )
+
+    def test_stage_error_cancels_joins_and_cleans_up(
+        self, spark, pipeline_run, tmp_path, monkeypatch
+    ):
+        import threading
+        import time
+
+        from datafusion_cyberpolka_eda_spark.operators import ml as ML
+        from datafusion_cyberpolka_eda_spark.operators import profile as P
+
+        class StageFailure(RuntimeError):
+            pass
+
+        # the GBT runs beside the failing stage: it must be cancelled in
+        # mid-boosting (where it holds persisted RDDs), not run to its end
+        sc = spark.sparkContext
+        gbt_outcome = []
+        real_fit = ML.adversarial_shift_auc
+
+        def fit(*args, **kwargs):
+            try:
+                auc = real_fit(*args, **kwargs)
+            except Exception:
+                gbt_outcome.append("raised")
+                raise
+            gbt_outcome.append("returned")
+            return auc
+
+        def boosting() -> bool:
+            store = sc._jsc.sc().statusStore()
+            for job_id in sc.statusTracker().getActiveJobsIds():
+                try:
+                    if "RandomForest" in store.job(job_id).name():
+                        return True
+                except Exception:  # not in the store yet
+                    pass
+            return False
+
+        def boom(*args, **kwargs):
+            deadline = time.monotonic() + 60
+            while not boosting() and time.monotonic() < deadline:
+                time.sleep(0.01)
+            raise StageFailure("cardinality stage failed")
+
+        monkeypatch.setattr(ML, "adversarial_shift_auc", fit)
+        monkeypatch.setattr(P, "cardinality_unseen_profile", boom)
+        persistent_before = sc._jsc.getPersistentRDDs().size()
+        with pytest.raises(StageFailure):
+            run_pipeline(spark, pipeline_run[0], str(tmp_path), _test_config())
+        assert gbt_outcome == ["raised"]
+        assert not [t for t in threading.enumerate() if t.name.startswith("eda-stage")]
+        assert sc._jsc.getPersistentRDDs().size() == persistent_before
+        _assert_inputs_uncached(spark, pipeline_run[0])
+        assert not os.path.exists(os.path.join(str(tmp_path), "EDA_REPORT.md"))
+        # the status store hears of the cancelled jobs' ends asynchronously
+        deadline = time.monotonic() + 30
+        while sc.statusTracker().getActiveJobsIds() and time.monotonic() < deadline:
+            time.sleep(0.2)
+        assert list(sc.statusTracker().getActiveJobsIds()) == []
