@@ -132,8 +132,8 @@ def simhash(col: str | Column, hash_fn=None, n_bits: int | None = None) -> Colum
     # transform over sequence(0, n_bits-1) using shift-by-column (not
     # exposed in the Python API, fine in SQL). Bit arithmetic, token
     # hashing, fold order and the pow-based bit values are unchanged —
-    # fingerprints are bitwise-identical (tests/test_litexpr.py pins
-    # old-vs-new equality for both hash families on real text).
+    # tests/test_llm_ops.py::test_portable_simhash_matches_python pins the
+    # md5 family's fingerprints to a plain-Python simhash.
     from datafusion_cyberpolka_eda_spark.functions.hashing import md5_hash64
 
     if isinstance(col, str) and (hash_fn is F.xxhash64 or hash_fn is md5_hash64):

@@ -1,11 +1,15 @@
 """ML-backed operators (SURVEY.md §2 family F).
 
 - F1 adversarial train/test-shift classifier: the reference trains CatBoost
-  on a hash-sampled train=0/test=1 stack and reads validation AUC
-  (ref: public_eda_pipeline.py:410-459). Spark-first: pyspark.ml
-  GBTClassifier + BinaryClassificationEvaluator; stratified split via
-  sampleBy. Exact AUC won't reproduce across GBM implementations — the
-  behavioral contract is AUC ~ 0.5 on shift-free data (ref report 0.5007).
+  in-process on a hash-sampled train=0/test=1 stack and reads validation
+  AUC (ref: public_eda_pipeline.py:410-459). Here Spark does the sampling
+  and the key-hash holdout split in one job, and the driver fits a seeded
+  NumPy histogram GBT on the sample (SURVEY.md "Path 3"): a distributed
+  fit of a few depth-6 trees on ~12k rows is one barrier per tree level,
+  dozens of jobs for seconds of work. Exact AUC won't reproduce across GBM
+  implementations — the behavioral contract, test-locked in
+  tests/test_operators.py, is AUC ~ 0.5 on shift-free data (ref report
+  0.5007) and >> 0.5 under an injected shift.
 - F2/F3 agglomerative clustering + silhouette over a precomputed distance
   matrix: driver-scale ops on tiny (n_targets x n_targets) matrices
   (ref lines 183-209). sklearn/scipy are unavailable here, so both are
@@ -14,6 +18,8 @@
 """
 
 from __future__ import annotations
+
+import math
 
 import numpy as np
 from pyspark.sql import DataFrame
@@ -28,67 +34,145 @@ def adversarial_shift_auc(
     df_a: DataFrame,
     df_b: DataFrame,
     feature_cols: list[str],
-    key_col: str | None = None,
+    key_col: str,
     sample_pct: float = 20,
     seed: int = 42,
     max_iter: int = 40,
     max_depth: int = 6,
     step_size: float = 0.08,
-    feature_subset_strategy: str = "sqrt",
 ) -> float:
     """Train a GBT to distinguish df_a (label 0) from df_b (label 1); return
     holdout AUC. AUC ~ 0.5 => no covariate shift between the two tables.
 
-    Scale notes: sampling happens below the union (pushdown filter); the
-    assembled vector keeps only ``feature_cols``; training data is the only
-    thing that grows with sample_pct. Split-finding evaluates only a sqrt
-    subset of features per node by default — the same idea as CatBoost's
-    rsm feature subsampling; shift-detection power comes from many trees,
-    not exhaustive per-node feature scans (measured ~2x on the fit; the
-    behavioral contract — AUC~0.5 shift-free, >>0.5 under injected shift —
-    is test-locked either way).
-    """
-    from pyspark.ml.classification import GBTClassifier
-    from pyspark.ml.evaluation import BinaryClassificationEvaluator
-    from pyspark.ml.feature import VectorAssembler
+    One Spark job: the key-hash sample (a filter under each scan), the
+    double casts and the -1.0 fill, and the 75/25 holdout bucket
+    pmod(xxhash64(key, seed + 7), 100) < 75 (ref train_test_split, lines
+    437-443) run in Spark; the sample comes to the driver through one Arrow
+    toPandas(). The driver fits _boosted_scores on the train bucket and
+    scores the holdout with _rank_auc. Like the reference's in-process
+    CatBoost fit, this holds the sample (sample_pct of both tables) in
+    driver memory.
 
+    Deterministic: rows are sorted by (label, key, features) before the
+    fit, so neither Spark's partitioning nor its row order reaches the
+    float sums, and the per-node feature draws come from one seeded
+    generator.
+    """
     def prep(df: DataFrame) -> DataFrame:
-        if key_col is not None and sample_pct < 100:
-            df = hash_sample(df, key_col, sample_pct, seed)
-        keep = [key_col] if key_col is not None else []
+        df = hash_sample(df, key_col, sample_pct, seed)
         return df.select(
-            *keep, *[F.col(c).cast("double").alias(c) for c in feature_cols]
+            key_col, *[F.col(c).cast("double").alias(c) for c in feature_cols]
         ).na.fill(-1.0, feature_cols)
 
-    stacked = union_stack([prep(df_a), prep(df_b)], "label", [0, 1]).withColumn(
-        "label", F.col("label").cast("double")
+    stacked = union_stack([prep(df_a), prep(df_b)], "label", [0, 1])
+    bucket = F.pmod(F.xxhash64(F.col(key_col), F.lit(seed + 7)), F.lit(100))
+    pdf = (
+        stacked.select(bucket.alias("__bucket"), "label", key_col, *feature_cols)
+        .toPandas()
+        .sort_values(["label", key_col, *feature_cols])
     )
-    # 75/25 holdout (ref train_test_split, lines 437-443). With a key
-    # column the split is a deterministic hash filter — no extra shuffle,
-    # reproducible under retries; per-row bernoulli either way, matching
-    # sampleBy's distribution. exceptAll would cost a full-width shuffle.
-    if key_col is not None:
-        bucket = F.pmod(F.xxhash64(F.col(key_col), F.lit(seed + 7)), F.lit(100))
-        train = stacked.filter(bucket < 75).drop(key_col)
-        test = stacked.filter(bucket >= 75).drop(key_col)
-    else:
-        train = stacked.stat.sampleBy("label", {0.0: 0.75, 1.0: 0.75}, seed=seed)
-        test = stacked.exceptAll(train)
+    train = pdf["__bucket"].to_numpy() < 75
+    y = pdf["label"].to_numpy(dtype=np.float64)
+    x = pdf[feature_cols].to_numpy(dtype=np.float64)
+    scores = _boosted_scores(
+        x[train], y[train], x[~train], max_iter, max_depth, step_size, seed
+    )
+    return _rank_auc(y[~train], scores)
 
-    assembler = VectorAssembler(inputCols=feature_cols, outputCol="features")
-    gbt = GBTClassifier(
-        labelCol="label",
-        featuresCol="features",
-        maxIter=max_iter,
-        maxDepth=max_depth,
-        stepSize=step_size,
-        seed=seed,
-        featureSubsetStrategy=feature_subset_strategy,
-    )
-    model = gbt.fit(assembler.transform(train))
-    pred = model.transform(assembler.transform(test))
-    ev = BinaryClassificationEvaluator(labelCol="label", metricName="areaUnderROC")
-    return float(ev.evaluate(pred))
+
+def _boosted_scores(
+    x_fit: np.ndarray,
+    y_fit: np.ndarray,
+    x_score: np.ndarray,
+    max_iter: int,
+    max_depth: int,
+    step_size: float,
+    seed: int,
+) -> np.ndarray:
+    """Fit a gradient-boosted tree ensemble for log loss on (x_fit, y_fit in
+    {0, 1}) and return its raw scores (log-odds) for the rows of x_score.
+
+    Each tree is a regression tree on the residuals y - sigmoid(F), grown
+    depth-wise to max_depth over histogram bins: every feature is cut at up
+    to max_bins - 1 quantile thresholds of its x_fit values (Spark's maxBins
+    default is 32), a node splits on the bin threshold with the largest
+    variance gain among ceil(sqrt(d)) features drawn for it from
+    np.random.default_rng(seed) (Spark's "sqrt" feature subset), and a node
+    whose best gain is not positive stays a leaf. Leaf value = the mean
+    residual of its rows, added with shrinkage step_size; F starts at 0.
+    x_score rows follow the same splits, so no tree is stored."""
+    max_bins = 32
+    n, d = x_fit.shape
+    k = min(d, math.ceil(math.sqrt(d)))
+    bins_fit = np.empty((n, d), dtype=np.intp)
+    bins_score = np.empty((len(x_score), d), dtype=np.intp)
+    q = np.arange(1, max_bins) / max_bins
+    for j in range(d):
+        col = x_fit[:, j]
+        values = np.unique(col)
+        if len(values) > max_bins:
+            values = np.unique(np.quantile(col, q, method="lower"))
+        # bin b holds edges[b-1] < x <= edges[b]; the top value cuts nothing
+        edges = values[values < col.max()]
+        bins_fit[:, j] = np.searchsorted(edges, col)
+        bins_score[:, j] = np.searchsorted(edges, x_score[:, j])
+
+    rng = np.random.default_rng(seed)
+    f_fit = np.zeros(n)
+    f_score = np.zeros(len(x_score))
+    slots = np.arange(k)
+    for _ in range(max_iter):
+        resid = y_fit - 1.0 / (1.0 + np.exp(-f_fit))
+        node_fit = np.zeros(n, dtype=np.intp)
+        node_score = np.zeros(len(x_score), dtype=np.intp)
+        leaf = np.zeros(1, dtype=bool)  # per node: no further splits
+        for depth in range(max_depth):
+            n_nodes = 2**depth
+            feats = np.argsort(rng.random((n_nodes, d)), axis=1)[:, :k]
+            row_bins = np.take_along_axis(bins_fit, feats[node_fit], axis=1)
+            cell = ((node_fit[:, None] * k + slots) * max_bins + row_bins).ravel()
+            shape = (n_nodes, k, max_bins)
+            size = n_nodes * k * max_bins
+            sum_l = np.bincount(cell, np.repeat(resid, k), size).reshape(shape).cumsum(2)
+            cnt_l = np.bincount(cell, minlength=size).reshape(shape).cumsum(2)
+            sum_t, cnt_t = sum_l[:, :, -1:], cnt_l[:, :, -1:]
+            sum_r, cnt_r = sum_t - sum_l, cnt_t - cnt_l
+            with np.errstate(divide="ignore", invalid="ignore"):
+                gain = sum_l**2 / cnt_l + sum_r**2 / cnt_r - sum_t**2 / cnt_t
+            gain[(cnt_l == 0) | (cnt_r == 0)] = -np.inf
+            gain = gain.reshape(n_nodes, -1)
+            best = gain.argmax(axis=1)
+            leaf = leaf | ~(gain[np.arange(n_nodes), best] > 0)
+            feat = feats[np.arange(n_nodes), best // max_bins]
+            # a leaf sends every row left: its bins are all < max_bins
+            cut = np.where(leaf, max_bins, best % max_bins)
+            node_fit = 2 * node_fit + (bins_fit[np.arange(n), feat[node_fit]] > cut[node_fit])
+            node_score = 2 * node_score + (
+                bins_score[np.arange(len(x_score)), feat[node_score]] > cut[node_score]
+            )
+            leaf = np.repeat(leaf, 2)
+        n_leaves = 2**max_depth
+        sums = np.bincount(node_fit, resid, n_leaves)
+        counts = np.bincount(node_fit, minlength=n_leaves)
+        value = step_size * np.divide(sums, counts, out=np.zeros(n_leaves), where=counts > 0)
+        f_fit += value[node_fit]
+        f_score += value[node_score]
+    return f_score
+
+
+def _rank_auc(labels: np.ndarray, scores: np.ndarray) -> float:
+    """Mann-Whitney ROC AUC of scores for labels in {0, 1}, tied scores
+    sharing their average rank (the same statistic as stats.auc_by_rank).
+    NaN when either class is absent."""
+    pos = labels == 1
+    n_pos = int(pos.sum())
+    n_neg = len(labels) - n_pos
+    if n_pos == 0 or n_neg == 0:
+        return float("nan")
+    _, inverse, counts = np.unique(scores, return_inverse=True, return_counts=True)
+    mean_rank = np.cumsum(counts) - (counts - 1) / 2.0
+    rank_sum = mean_rank[inverse][pos].sum()
+    return float((rank_sum - n_pos * (n_pos + 1) / 2.0) / (n_pos * n_neg))
 
 
 def agglomerative_average(dist: np.ndarray, k: int) -> np.ndarray:
@@ -210,8 +294,6 @@ def logreg_train_supersteps(
     (n <= ~4e9 rows at the test feature ranges — assert upstream at
     extreme scale). Ref anchor: similarity.py lloyd_kmeans_q (superstep
     discipline), registry/llm.py l60 (planting recipe)."""
-    import math
-
     n = feats.count()
     if len(precond) != dim:
         raise ValueError(f"precond has {len(precond)} entries, dim={dim}")

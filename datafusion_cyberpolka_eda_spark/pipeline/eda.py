@@ -8,9 +8,11 @@ Execution split (SURVEY.md §3):
 - distributed (Spark): row counts, target moments, horizontal fill
   counts, customer_id joins, chunked null-rate profiling, distinct counts,
   anti-join unseen categories, moment matrices for every correlation,
-  contingency counts, quantiles, rank-based AUC, GBT adversarial model
+  contingency counts, quantiles, rank-based AUC, the adversarial model's
+  hash sample and holdout split
 - driver (pandas/numpy over <=O(features x targets) reductions): pair
-  loops, clustering, Fisher p-values, artifact shaping, report text
+  loops, clustering, Fisher p-values, artifact shaping, report text; and
+  the adversarial GBT fit over its 20% sample, as the reference does
 
 Stage graph: run_pipeline declares each stage as a function of the stage
 results it reads (the `stages` list at its end is the graph) and starts
@@ -20,8 +22,8 @@ once; the model is Shark's partial DAG execution — schedule from the
 dependency graph, not in program order. Each of the four table reads
 caches its table and builds the cache with one job before any other
 stage reads it, so no two stages race to build one cache and the job
-count repeats exactly. The adversarial GBT, the longest stage, needs
-only the two main-feature tables, so it starts right after their reads.
+count repeats exactly. The adversarial GBT needs only the two
+main-feature tables, so it starts right after their reads.
 
 Stage threads inherit the caller's job group, description and scheduler
 pool (pyspark.util.inheritable_thread_target), and every job of a run
@@ -29,17 +31,14 @@ carries one job tag. On the first stage error the run cancels the jobs
 with that tag, waits for every started stage, unpersists what it cached
 and re-raises that error.
 
-Determinism: two runs on one fixture write byte-identical artifacts
-except `adversarial_auc_main_features`. pyspark.ml's seeded GBT fit and
-BinaryClassificationEvaluator vary in the low digits between runs
-(0.5118844 vs 0.5119023 on the 60k-row seed-101 fixture; three fits in
-one session gave three AUCs, and three evaluations of one fitted model's
-cached predictions gave three values). The variation is in pyspark.ml,
-not in the stage graph: the GBT varies the same way when it runs alone.
+Determinism: two runs on one fixture write byte-identical artifacts,
+summary.json and EDA_REPORT.md included. The adversarial GBT sorts its
+sample before a seeded in-process fit (ml.adversarial_shift_auc), so its
+AUC does not depend on thread timing or Spark's row order.
 
 Scale notes: the driver only ever holds moment matrices and result tables;
 row data never leaves the executors except the explicitly driver-scale
-screen sample (mirroring the reference's design).
+screen and adversarial samples (mirroring the reference's design).
 """
 
 from __future__ import annotations
@@ -251,10 +250,8 @@ def run_pipeline(
             target_df=target_df,
         )
 
-    # ---- adversarial shift (ref 410-459): pyspark.ml GBT. Boosting is
-    # sequential (depth x iterations distributed passes, most cores idle
-    # between barriers), so it runs beside the stages that keep the
-    # cluster busy ----
+    # ---- adversarial shift (ref 410-459): one Spark job collects the
+    # hash sample; the GBT fits on the driver, beside the other stages ----
     def adversarial_gbt(train_main: DataFrame, test_main: DataFrame) -> float:
         return ML.adversarial_shift_auc(
             train_main,

@@ -162,6 +162,65 @@ class TestAucByRank:
                 assert "bucket" in line, f"unpartitioned window: {line}"
 
 
+@pytest.fixture(scope="module")
+def shift_tables(spark, tmp_path_factory):
+    """{inject_shift: (train_main, test_main)} of the EDA fixture."""
+    from datafusion_cyberpolka_eda_spark.pipeline.fixtures import generate_eda_fixture
+
+    tables = {}
+    for shift in (False, True):
+        d = str(tmp_path_factory.mktemp(f"shift_{shift}"))
+        paths = generate_eda_fixture(d, n_train=20000, n_test=6000, seed=42, inject_shift=shift)
+        tables[shift] = tuple(
+            spark.read.parquet(paths[t]) for t in ("train_main_features", "test_main_features")
+        )
+    return tables
+
+
+def _adversarial_auc(tables) -> float:
+    from datafusion_cyberpolka_eda_spark.operators import ml as ML
+
+    train, test = tables
+    feats = [c for c in train.columns if c != "customer_id"]
+    return ML.adversarial_shift_auc(train, test, feats, "customer_id", max_iter=8)
+
+
+class TestAdversarialShift:
+    def test_auc_separates_shift_from_no_shift(self, shift_tables):
+        assert 0.40 <= _adversarial_auc(shift_tables[False]) <= 0.62
+        assert _adversarial_auc(shift_tables[True]) > 0.75
+
+    def test_one_spark_job(self, spark, shift_tables):
+        sc = spark.sparkContext
+        sc.setJobGroup("adversarial-one-job", "adversarial_shift_auc")
+        try:
+            _adversarial_auc(shift_tables[False])
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description",
+                        "spark.job.interruptOnCancel"):
+                sc.setLocalProperty(key, None)
+        assert len(sc.statusTracker().getJobIdsForGroup("adversarial-one-job")) == 1
+
+    def test_rank_auc_matches_pairwise_and_auc_by_rank(self, spark):
+        from datafusion_cyberpolka_eda_spark.operators.ml import _rank_auc
+
+        rng = np.random.default_rng(5)
+        n = 600
+        y = (rng.random(n) < 0.3).astype(int)
+        # coarse scores: heavy ties, across and within the classes
+        s = np.round(rng.normal(0, 1, n) + y * 0.7, 1)
+        pos, neg = s[y == 1], s[y == 0]
+        wins = (pos[:, None] > neg[None, :]).sum()
+        ties = (pos[:, None] == neg[None, :]).sum()
+        assert ties > 0
+        naive = (wins + 0.5 * ties) / (len(pos) * len(neg))
+        auc = _rank_auc(y, s)
+        assert auc == pytest.approx(naive, rel=1e-12)
+        df = spark.createDataFrame(pd.DataFrame({"y": y, "s": s}))
+        assert auc == pytest.approx(S.auc_by_rank(df, "y", "s").collect()[0]["auc"], rel=1e-12)
+        assert np.isnan(_rank_auc(np.ones(3), np.arange(3.0)))
+
+
 class TestHashSampler:
     def test_deterministic_and_key_stable(self, spark):
         df = spark.range(0, 20000).withColumnRenamed("id", "k")
