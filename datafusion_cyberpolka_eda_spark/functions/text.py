@@ -133,7 +133,9 @@ def simhash(col: str | Column, hash_fn=None, n_bits: int | None = None) -> Colum
     # exposed in the Python API, fine in SQL). Bit arithmetic, token
     # hashing, fold order and the pow-based bit values are unchanged —
     # tests/test_llm_ops.py::test_portable_simhash_matches_python pins the
-    # md5 family's fingerprints to a plain-Python simhash.
+    # md5 family's fingerprints to a plain-Python simhash, and
+    # ::test_xxhash_simhash_fast_path_matches_unrolled pins this path to
+    # the unrolled form below for the xxhash64 family.
     from datafusion_cyberpolka_eda_spark.functions.hashing import md5_hash64
 
     if isinstance(col, str) and (hash_fn is F.xxhash64 or hash_fn is md5_hash64):

@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from datafusion_cyberpolka_eda_spark.functions.litexpr import sql_long_array
 from datafusion_cyberpolka_eda_spark.functions.sampling import hash_sample
+from datafusion_cyberpolka_eda_spark.operators import stats as S
 from datafusion_cyberpolka_eda_spark.operators.relational import union_stack
 
 
@@ -49,7 +50,7 @@ def adversarial_shift_auc(
     pmod(xxhash64(key, seed + 7), 100) < 75 (ref train_test_split, lines
     437-443) run in Spark; the sample comes to the driver through one Arrow
     toPandas(). The driver fits _boosted_scores on the train bucket and
-    scores the holdout with _rank_auc. Like the reference's in-process
+    scores the holdout with stats.rank_auc. Like the reference's in-process
     CatBoost fit, this holds the sample (sample_pct of both tables) in
     driver memory.
 
@@ -77,7 +78,7 @@ def adversarial_shift_auc(
     scores = _boosted_scores(
         x[train], y[train], x[~train], max_iter, max_depth, step_size, seed
     )
-    return _rank_auc(y[~train], scores)
+    return S.rank_auc(y[~train], scores)
 
 
 def _boosted_scores(
@@ -158,21 +159,6 @@ def _boosted_scores(
         f_fit += value[node_fit]
         f_score += value[node_score]
     return f_score
-
-
-def _rank_auc(labels: np.ndarray, scores: np.ndarray) -> float:
-    """Mann-Whitney ROC AUC of scores for labels in {0, 1}, tied scores
-    sharing their average rank (the same statistic as stats.auc_by_rank).
-    NaN when either class is absent."""
-    pos = labels == 1
-    n_pos = int(pos.sum())
-    n_neg = len(labels) - n_pos
-    if n_pos == 0 or n_neg == 0:
-        return float("nan")
-    _, inverse, counts = np.unique(scores, return_inverse=True, return_counts=True)
-    mean_rank = np.cumsum(counts) - (counts - 1) / 2.0
-    rank_sum = mean_rank[inverse][pos].sum()
-    return float((rank_sum - n_pos * (n_pos + 1) / 2.0) / (n_pos * n_neg))
 
 
 def agglomerative_average(dist: np.ndarray, k: int) -> np.ndarray:

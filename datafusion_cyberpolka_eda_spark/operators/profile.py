@@ -14,8 +14,12 @@ from __future__ import annotations
 
 from functools import reduce
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from datafusion_cyberpolka_eda_spark.operators.relational import union_stack
 
 
 def _chunks(xs: list[str], size: int) -> list[list[str]]:
@@ -97,45 +101,51 @@ def stacked_values(df: DataFrame, cols: list[str]) -> DataFrame:
 
 def cardinality_unseen_profile(
     train: DataFrame, test: DataFrame, cols: list[str]
-) -> DataFrame:
-    """Per-feature cardinality + unseen-category stats for ALL columns in
-    a constant number of distributed passes (operators D8 + C6 batched;
-    ref: public_eda_pipeline.py:369-405 loops Python sets per feature).
+) -> pd.DataFrame:
+    """Per-feature cardinality + unseen-category stats for ALL columns with
+    one Spark action (operators D8 + C6 batched; ref:
+    public_eda_pipeline.py:369-405 loops Python sets per feature).
 
-    Returns (feature, train_nunique, test_nunique, unseen_unique_categories,
-    unseen_rate_test_rows). A per-feature loop costs 4 full-table jobs per
-    column — O(features) scans; stacking makes it: two distinct passes
-    (map-side-combined, shuffle = distinct pairs only), one anti-join of
-    those small distinct sets, and one left join of stacked test rows
-    against the train set for the row-weighted rate. Scale-invariant in
-    the number of profiled columns."""
-    tr = stacked_values(train, cols).distinct().localCheckpoint(eager=True)
-    te = stacked_values(test, cols).distinct().localCheckpoint(eager=True)
-    tr_card = tr.groupBy("feature").agg(F.count(F.lit(1)).alias("train_nunique"))
-    te_card = te.groupBy("feature").agg(F.count(F.lit(1)).alias("test_nunique"))
-    unseen = (
-        te.join(tr, ["feature", "value"], "left_anti")
-        .groupBy("feature")
-        .agg(F.count(F.lit(1)).alias("unseen_unique_categories"))
-    )
-    rate = (
-        stacked_values(test, cols)
-        .join(tr.withColumn("__seen", F.lit(1)), ["feature", "value"], "left")
-        .groupBy("feature")
-        .agg(
-            F.avg(F.col("__seen").isNull().cast("double")).alias(
-                "unseen_rate_test_rows"
-            )
+    Returns a pandas frame (feature, train_nunique, test_nunique,
+    unseen_unique_categories, unseen_rate_test_rows), one row per column
+    in ``cols`` order. The stacked train and test values, tagged by
+    source, reduce to one (source, feature, value) -> rows count table
+    (map-side-combined; O(sum of distinct categories) rows), which comes
+    to the driver; distinct counts, unseen categories and the
+    row-weighted unseen rate (unseen test rows / non-null test rows) are
+    set lookups there. A feature with no test rows has rate 0.0."""
+    counts = (
+        union_stack(
+            [stacked_values(train, cols), stacked_values(test, cols)],
+            "source", ["train", "test"],
         )
+        .groupBy("source", "feature", "value")
+        .count()
+        .toPandas()
     )
-    out = (
-        tr_card.join(te_card, "feature", "full")
-        .join(unseen, "feature", "full")
-        .join(rate, "feature", "full")
-        .na.fill({"train_nunique": 0, "test_nunique": 0, "unseen_unique_categories": 0})
-        .na.fill({"unseen_rate_test_rows": 0.0})
+    tr = counts[counts["source"] == "train"]
+    te = counts[counts["source"] == "test"]
+    seen = set(zip(tr["feature"], tr["value"]))
+    unseen = te[[fv not in seen for fv in zip(te["feature"], te["value"])]]
+    prof = (
+        pd.DataFrame(
+            {
+                "train_nunique": tr.groupby("feature").size(),
+                "test_nunique": te.groupby("feature").size(),
+                "unseen_unique_categories": unseen.groupby("feature").size(),
+                "unseen_rows": unseen.groupby("feature")["count"].sum(),
+                "test_rows": te.groupby("feature")["count"].sum(),
+            }
+        )
+        .reindex(cols)
+        .fillna(0)
+        .astype("int64")
     )
-    return out
+    rows = prof.pop("test_rows").to_numpy()
+    prof["unseen_rate_test_rows"] = np.divide(
+        prof.pop("unseen_rows").to_numpy(), rows, out=np.zeros(len(prof)), where=rows > 0
+    )
+    return prof.rename_axis("feature").reset_index()
 
 
 def unseen_categories(train: DataFrame, test: DataFrame, col: str) -> DataFrame:

@@ -163,7 +163,7 @@ def ntile_bucket(
 
     NOTE: a global-order window is a single-partition sort — fine for the
     reference's driver-scale decile tables, but at 100 TB callers should
-    prefer `approx_quantile_buckets` (cutpoint-based, fully parallel).
+    prefer `quantile_buckets` (cutpoint-based, fully parallel).
     """
     order = [F.col(value_col).asc()] + [F.col(t).asc() for t in (tiebreak_cols or [])]
     w = Window.orderBy(*order)

@@ -1,18 +1,25 @@
-"""Distributed statistics engine — the heart of the reference's analytics.
+"""Statistics engine — the heart of the reference's analytics.
 
 Covers SURVEY.md §2 family E: single-pass moment aggregations from which
 correlation matrices (E1), the wide feature x target screen (E5),
 point-biserial (E6) and pair lift (E2-E4) all derive; rank-based ROC AUC
-(E7); exact quantiles (E10); whale/outlier uplift contingencies (E12);
-Fisher exact test (E13, pure-Python — scipy is not available in this
-environment).
+(E7); exact quantiles and deciles (E10/E11); whale/outlier uplift
+contingencies (E12); Fisher exact test (E13, pure-Python — scipy is not
+available in this environment).
 
 Design rule (ref pattern, SURVEY.md §4.2): distribute the *moments*, never
 the pair loop. TB-scale inputs reduce to tiny moment matrices (e.g. 519x41
 doubles) in one or a few chunked aggregation passes with map-side partial
 aggregation; all O(pairs) arithmetic then runs on the driver over numpy
-arrays. The driver never holds row data.
-"""
+arrays, and the Spark operators here never bring row data to the driver.
+
+Driver twins: rank_auc, point_biserial_ints, ntile_by and screen_corr
+compute auc_by_rank, point_biserial, relational.ntile_bucket and the
+mean-impute + Pearson screen over arrays a caller has already collected —
+the EDA pipeline's filled-count and linear-screen stages, whose inputs
+are driver-sized after one Spark action (as in the reference, which
+holds them in pandas). rank_auc and ntile_by equal their Spark
+operators bit for bit (ntile_by when its keys order every row)."""
 
 from __future__ import annotations
 
@@ -137,31 +144,32 @@ def corr_matrix(df: DataFrame, cols: list[str], chunk_size: int = 1500) -> pd.Da
     return corr_from_moments(m)
 
 
-def corr_matrix_assembled(
-    df: DataFrame, xs: list[str], ys: list[str]
-) -> pd.DataFrame:
-    """Pearson corr of the xs x ys block via ONE `Correlation.corr` pass
-    over an assembled vector (operator E5 route (b), SURVEY.md §2) —
-    BLAS-backed co-moment accumulation inside the JVM instead of thousands
-    of individual codegen'd sum expressions. For wide screens (hundreds of
-    features x dozens of targets) the expression-count cost of the chunked
-    moments path dominates its runtime (measured: 519-ish-wide screen
-    62s -> seconds); this path is O(d^2) FLOPs per row in tight loops and
-    one treeAggregate. Inputs must be null-free (mean_impute first, as the
-    reference does; ref: public_eda_pipeline.py:496-511). Constant columns
-    yield NaN, matching corr_from_moments' guard. Pearson r is
-    ddof-invariant, so this equals the population-std route exactly."""
-    from pyspark.ml.feature import VectorAssembler
-    from pyspark.ml.stat import Correlation
-
-    cols = list(dict.fromkeys(list(xs) + list(ys)))
-    assembled = VectorAssembler(inputCols=cols, outputCol="__v").transform(
-        df.select(*[F.col(c).cast("double").alias(c) for c in cols])
+def screen_corr(pdf: pd.DataFrame, xs: list[str], ys: list[str]) -> pd.DataFrame:
+    """Pearson corr of the xs x ys block of a driver-scale sample
+    (operator E5; ref: public_eda_pipeline.py:496-511): nulls (NaN) in xs
+    become their column's mean (0.0 for an all-null column, as
+    mean_impute), then every column is centered and the block is one
+    matrix product. Population std, so constant columns yield NaN under
+    corr_from_moments' guard (std_x * std_y <= 1e-12); Pearson r is
+    ddof-invariant. Sort the rows first (callers sort by key) so the
+    float sums do not depend on the order rows arrived in."""
+    x = pdf[list(xs)].to_numpy(dtype=np.float64)
+    y = pdf[list(ys)].to_numpy(dtype=np.float64)
+    nulls = np.isnan(x)
+    present = (~nulls).sum(axis=0)
+    means = np.divide(
+        np.where(nulls, 0.0, x).sum(axis=0), present,
+        out=np.zeros(len(xs)), where=present > 0,
     )
-    mat = Correlation.corr(assembled, "__v", "pearson").head()[0].toArray()
-    idx = {c: i for i, c in enumerate(cols)}
-    block = mat[np.ix_([idx[x] for x in xs], [idx[y] for y in ys])]
-    return pd.DataFrame(block, index=list(xs), columns=list(ys))
+    x = np.where(nulls, means, x)
+    x = x - x.mean(axis=0)
+    y = y - y.mean(axis=0)
+    n = len(pdf)
+    cov = x.T @ y / n
+    denom = np.outer(np.sqrt((x * x).sum(axis=0) / n), np.sqrt((y * y).sum(axis=0) / n))
+    ok = denom > 1e-12
+    corr = np.where(ok, cov / np.where(ok, denom, 1.0), np.nan)
+    return pd.DataFrame(corr, index=list(xs), columns=list(ys))
 
 
 def mean_impute(df: DataFrame, cols: list[str], chunk_size: int = 1500) -> DataFrame:
@@ -331,13 +339,32 @@ def auc_by_rank(
     )
 
 
+def rank_auc(labels: np.ndarray, scores: np.ndarray) -> float:
+    """auc_by_rank's statistic on the driver, with the same per-distinct-
+    score formula: pos/neg counts per distinct score (ascending, NaN last
+    as in Spark), cum_neg_below their exclusive prefix sum, AUC =
+    sum(pos * (cum_neg_below + 0.5 * neg)) / (P * N). Every sum is over
+    integers or halves, exact in doubles below 2^53, so the result is
+    bit-identical to auc_by_rank's. Labels in {0, 1}; NaN when either
+    class is absent (auc_by_rank returns NULL)."""
+    _, inverse = np.unique(scores, return_inverse=True)
+    y = np.asarray(labels, dtype=np.float64)
+    pos = np.bincount(inverse, weights=y)
+    neg = np.bincount(inverse, weights=1.0 - y)
+    n_pos, n_neg = pos.sum(), neg.sum()
+    if n_pos == 0 or n_neg == 0:
+        return float("nan")
+    cum_neg_below = np.cumsum(neg) - neg
+    return float((pos * (cum_neg_below + 0.5 * neg)).sum() / (n_pos * n_neg))
+
+
 def effective_auc_col(auc: F.Column) -> F.Column:
     """max(auc, 1-auc) (operator E8; ref line 354)."""
     return F.greatest(auc, 1 - auc)
 
 
 # ---------------------------------------------------------------------------
-# Quantiles (E10)
+# Quantiles and deciles (E10/E11)
 # ---------------------------------------------------------------------------
 
 
@@ -350,6 +377,23 @@ def exact_quantiles(df: DataFrame, col: str, probs: list[float]) -> list[float]:
         F.expr(f"percentile({col}, array({probs_sql}))").alias("q")
     ).collect()[0]["q"]
     return [float(v) for v in r]
+
+
+def ntile_by(keys: list[np.ndarray], n: int = 10) -> np.ndarray:
+    """relational.ntile_bucket on the driver (operator E11; ref qcut at
+    public_eda_pipeline.py:306-307): the 1-based SQL ntile(n) bucket of
+    each row, in input order, over the ascending lexicographic order of
+    ``keys``, primary key first. As in Spark's NTile, the first (rows % n)
+    buckets hold one row more than the rest; when the keys order every row
+    (a unique tie-breaker last), tie groups straddle a bucket edge exactly
+    where ntile_bucket splits them."""
+    order = np.lexsort(keys[::-1])
+    rows = len(order)
+    sizes = np.full(n, rows // n)
+    sizes[: rows % n] += 1
+    buckets = np.empty(rows, dtype=np.int64)
+    buckets[order] = np.repeat(np.arange(1, n + 1), sizes)
+    return buckets
 
 
 # ---------------------------------------------------------------------------
@@ -540,7 +584,33 @@ def point_biserial(df: DataFrame, binary_col: str, value_col: str) -> tuple[floa
         F.count(F.lit(1)).alias("n"),
     ).collect()[0]
     r, n = r_row["r"], r_row["n"]
-    if r is None or n < 3 or abs(r) >= 1.0:
-        return (float("nan") if r is None else float(r), float("nan"))
+    if r is None:
+        return float("nan"), float("nan")
+    return float(r), _pearson_pvalue(r, n)
+
+
+def point_biserial_ints(binary: np.ndarray, values: np.ndarray) -> tuple[float, float]:
+    """point_biserial on the driver for integer columns: r from the exact
+    integer sums n, sum x, sum y, sum x^2, sum y^2, sum xy (Python ints,
+    so only the final sqrt and division round), the same p. NaN r for a
+    constant column."""
+    x = np.asarray(binary, dtype=np.int64)
+    y = np.asarray(values, dtype=np.int64)
+    n = len(x)
+    sx, sy = int(x.sum()), int(y.sum())
+    cov = n * int((x * y).sum()) - sx * sy
+    var_x = n * int((x * x).sum()) - sx * sx
+    var_y = n * int((y * y).sum()) - sy * sy
+    if var_x == 0 or var_y == 0:
+        return float("nan"), float("nan")
+    r = cov / (math.sqrt(var_x) * math.sqrt(var_y))
+    return r, _pearson_pvalue(r, n)
+
+
+def _pearson_pvalue(r: float, n: int) -> float:
+    """Two-sided p of a Pearson r over n rows via t = r sqrt((n-2)/(1-r^2));
+    NaN when n < 3 or |r| >= 1."""
+    if n < 3 or abs(r) >= 1.0:
+        return float("nan")
     t = r * math.sqrt((n - 2) / (1 - r * r))
-    return float(r), t_sf(abs(t), n - 2)
+    return t_sf(abs(t), n - 2)

@@ -6,13 +6,21 @@ FIXTURES.md §A5 / the reference's public_tables/).
 
 Execution split (SURVEY.md §3):
 - distributed (Spark): row counts, target moments, horizontal fill
-  counts, customer_id joins, chunked null-rate profiling, distinct counts,
-  anti-join unseen categories, moment matrices for every correlation,
-  contingency counts, quantiles, rank-based AUC, the adversarial model's
-  hash sample and holdout split
-- driver (pandas/numpy over <=O(features x targets) reductions): pair
-  loops, clustering, Fisher p-values, artifact shaping, report text; and
-  the adversarial GBT fit over its 20% sample, as the reference does
+  counts, customer_id joins, chunked null-rate profiling, per-(feature,
+  value) category counts, target moment matrices, contingency counts,
+  quantiles, the hash samples and the adversarial holdout split
+- driver (pandas/numpy): pair loops, clustering, Fisher p-values, artifact
+  shaping, report text; and, as the reference does, the stages whose
+  input is driver-sized after one Spark action: the filled-count AUC,
+  point-biserial and deciles (one row per customer, three integer
+  columns), distinct and unseen category counts (one row per distinct
+  category), the linear screen's mean impute and Pearson block (its
+  hash sample), and the adversarial GBT fit (its hash sample). Each of
+  those stages submits one action; on a few-core box a Spark job costs
+  more to launch than these reductions cost to run (Shark's point on
+  small inputs). The AUC, deciles and category counts equal the Spark
+  operators' results bit for bit; the point-biserial and the screen's
+  correlations agree with them to 1e-12 (tests/test_operators.py)
 
 Stage graph: run_pipeline declares each stage as a function of the stage
 results it reads (the `stages` list at its end is the graph) and starts
@@ -33,12 +41,16 @@ and re-raises that error.
 
 Determinism: two runs on one fixture write byte-identical artifacts,
 summary.json and EDA_REPORT.md included. The adversarial GBT sorts its
-sample before a seeded in-process fit (ml.adversarial_shift_auc), so its
-AUC does not depend on thread timing or Spark's row order.
+sample before a seeded in-process fit (ml.adversarial_shift_auc) and the
+linear screen sorts its sample by customer_id, so no float sum depends on
+thread timing or Spark's row order.
 
-Scale notes: the driver only ever holds moment matrices and result tables;
-row data never leaves the executors except the explicitly driver-scale
-screen and adversarial samples (mirroring the reference's design).
+Scale notes: what reaches the driver is what the reference holds in
+pandas. At the reference's 750k rows: the filled-count frame (three
+integer columns, ~15 MB), the category counts (O(sum of distinct
+categories) rows), the linear-screen sample (~90k rows x ~560 doubles,
+~400 MB) and the adversarial sample; every other stage brings back only
+moment matrices and result tables.
 """
 
 from __future__ import annotations
@@ -66,7 +78,6 @@ from datafusion_cyberpolka_eda_spark.operators import stats as S
 from datafusion_cyberpolka_eda_spark.operators.relational import (
     horizontal_not_null_count,
     horizontal_sum,
-    ntile_bucket,
 )
 from datafusion_cyberpolka_eda_spark.sources.catalog import target_family
 
@@ -433,16 +444,18 @@ def run_pipeline(
         save(miss_bands, "extra_missingness_bands.csv")
         return SimpleNamespace(extra=extra_miss_df, all=miss_all_df, bands=miss_bands)
 
-    # ---- filled-count as activity signal (ref 283-318): stays
-    # distributed end-to-end (the reference pulls 750k rows to pandas;
-    # Spark computes AUC/deciles/point-biserial without materializing) ----
+    # ---- filled-count as activity signal (ref 283-318): one Spark action
+    # brings (id, filled count, any-open label) to the driver, as the
+    # reference does; AUC, point-biserial and deciles are exact integer
+    # arithmetic there, equal to the Spark operators' (tests pin it) ----
     def filled_count(train_extra: DataFrame, train_target: DataFrame):
         open_cols = [c for c in features(train_target) if c != cfg.antagonist]
-        fill_df = cache(
+        fill_df = (
             train_extra.select(
                 F.col(id_col),
                 horizontal_not_null_count(features(train_extra)).alias("filled_extra_count"),
-            ).join(
+            )
+            .join(
                 train_target.select(
                     F.col(id_col),
                     (
@@ -452,34 +465,30 @@ def run_pipeline(
                 on=id_col,
                 how="inner",
             )
-        )
-        auc_row = S.auc_by_rank(fill_df, "target_any_open", "filled_extra_count").collect()[0]
-        auc = auc_row["auc"] if auc_row["auc"] is not None else float("nan")
-        pb_corr, pb_p = S.point_biserial(fill_df, "target_any_open", "filled_extra_count")
-
-        deciles = ntile_bucket(
-            fill_df,
-            "filled_extra_count",
-            10,
-            bucket_col="decile",
-            tiebreak_cols=[id_col],
-        )
-        fill_dec_df = (
-            deciles.groupBy("decile")
-            .agg(
-                F.count(F.lit(1)).alias("n"),
-                F.avg("filled_extra_count").alias("avg_filled"),
-                F.min("filled_extra_count").alias("min_filled"),
-                F.max("filled_extra_count").alias("max_filled"),
-                F.avg(F.col("target_any_open").cast("double")).alias("target_rate"),
-            )
-            .orderBy("decile")
             .toPandas()
         )
+        filled = fill_df["filled_extra_count"].to_numpy()
+        label = fill_df["target_any_open"].to_numpy()
+        auc = S.rank_auc(label, filled)
+        pb_corr, pb_p = S.point_biserial_ints(label, filled)
+
         # 0-based decile labels like pd.qcut(labels=False) (ref line 307);
         # ntile splits ties across buckets where qcut keeps them together — a
         # documented divergence (SURVEY.md §5.3 tie policy)
-        fill_dec_df["decile"] = fill_dec_df["decile"] - 1
+        fill_dec_df = (
+            fill_df.assign(
+                decile=S.ntile_by([filled, fill_df[id_col].to_numpy()], 10) - 1,
+                target_any_open=label.astype(np.float64),
+            )
+            .groupby("decile", as_index=False)
+            .agg(
+                n=("filled_extra_count", "size"),
+                avg_filled=("filled_extra_count", "mean"),
+                min_filled=("filled_extra_count", "min"),
+                max_filled=("filled_extra_count", "max"),
+                target_rate=("target_any_open", "mean"),
+            )
+        )
         save(fill_dec_df, "filled_extra_count_deciles.csv")
         return SimpleNamespace(auc=auc, pb_corr=pb_corr, pb_p=pb_p, deciles=fill_dec_df)
 
@@ -550,33 +559,24 @@ def run_pipeline(
         save(miss_auc_df, "missing_indicator_auc_popular_targets.csv")
 
     # ---- cardinality + unseen categories (ref 369-405): ALL features in
-    # a constant number of stacked passes (a per-feature loop costs 4
-    # full-table jobs per column) ----
+    # one Spark action (a per-feature loop costs 4 full-table jobs per
+    # column) ----
     def cardinality_unseen(train_main: DataFrame, test_main: DataFrame):
         cat_main = [c for c in features(train_main) if c.startswith("cat_feature_")]
-        prof = (
-            P.cardinality_unseen_profile(train_main, test_main, cat_main)
-            .toPandas()
-            .set_index("feature")
-            .reindex(cat_main)
-            .fillna({"train_nunique": 0, "test_nunique": 0,
-                     "unseen_unique_categories": 0, "unseen_rate_test_rows": 0.0})
-            .reset_index()
+        prof = P.cardinality_unseen_profile(train_main, test_main, cat_main)
+        card_df = prof[["feature", "train_nunique", "test_nunique"]].sort_values(
+            "train_nunique", ascending=False
         )
-        card_df = prof[["feature", "train_nunique", "test_nunique"]].astype(
-            {"train_nunique": int, "test_nunique": int}
-        ).sort_values("train_nunique", ascending=False)
         unseen_df = prof[
             ["feature", "unseen_unique_categories", "unseen_rate_test_rows"]
-        ].astype({"unseen_unique_categories": int}).sort_values(
-            "unseen_rate_test_rows", ascending=False
-        )
+        ].sort_values("unseen_rate_test_rows", ascending=False)
         save(card_df, "categorical_cardinality.csv")
         save(unseen_df, "categorical_unseen_categories.csv")
         return SimpleNamespace(card=card_df, unseen=unseen_df)
 
-    # ---- wide linear screen (ref 463-594): sampled 3-way join, mean
-    # impute, ONE assembled-vector pass for the feature x target corr ----
+    # ---- wide linear screen (ref 463-594): one Spark action brings the
+    # sampled 3-way join to the driver, the explicitly driver-scale screen
+    # the reference also holds; mean impute and Pearson run in NumPy ----
     def linear_screen(
         train_main: DataFrame, train_extra: DataFrame, train_target: DataFrame, miss
     ):
@@ -598,7 +598,7 @@ def run_pipeline(
             )
             for c in main_features
         ]
-        screen = cache(
+        screen = (
             hash_sample(train_main, id_col, cfg.screen_sample_pct, cfg.seed)
             .select(F.col(id_col), *main_exprs)
             .join(
@@ -615,12 +615,11 @@ def run_pipeline(
                 on=id_col,
                 how="inner",
             )
+            .toPandas()
+            .sort_values(id_col)
         )
-        n_screen = screen.count()
-        screen_imp = S.mean_impute(screen, feat_screen)
-        # one assembled-vector Correlation pass instead of thousands of chunked
-        # sum expressions — same values (ddof cancels), ~10x on wide screens
-        corr_mat = S.corr_matrix_assembled(screen_imp, feat_screen, target_cols)
+        n_screen = len(screen)
+        corr_mat = S.screen_corr(screen, feat_screen, target_cols)
 
         miss_rate_map = dict(zip(miss.all["feature"], miss.all["null_rate"]))
         type_map = {

@@ -590,15 +590,64 @@ def grouped_rerun(spark, pipeline_run, tmp_path_factory):
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     ungrouped_before = set(tracker.getJobIdsForGroup(None))
+    first_job = sc._jsc.sc().dagScheduler().nextJobId()
     sc.setJobGroup("eda-test", "stage-graph rerun")
     try:
         summary = run_pipeline(spark, data_dir, out_dir, _test_config())
     finally:
         for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
             sc.setLocalProperty(key, None)
+    run_jobs = set(range(first_job, sc._jsc.sc().dagScheduler().nextJobId()))
+    _wait_for_job_events(spark)
     grouped = set(tracker.getJobIdsForGroup("eda-test"))
     ungrouped_new = set(tracker.getJobIdsForGroup(None)) - ungrouped_before
-    return out_dir, summary, grouped, ungrouped_new
+    return out_dir, summary, grouped, ungrouped_new, run_jobs
+
+
+def _wait_for_job_events(spark) -> None:
+    """The status tracker hears of jobs through the listener bus,
+    asynchronously; wait until it has delivered every event so far."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+
+
+# the stages that finish on the driver after one Spark action each
+DRIVER_FINISHED_STAGES = ("filled_count", "cardinality_unseen", "linear_screen")
+
+
+@pytest.fixture(scope="module")
+def stage_job_counts(spark, pipeline_run, tmp_path_factory):
+    """A run over pipeline_run's fixture with each stage's jobs under a job
+    group of its own; returns {stage name: jobs it submitted}."""
+    from dataclasses import replace
+
+    from datafusion_cyberpolka_eda_spark.pipeline import eda
+
+    sc = spark.sparkContext
+    run_stages = eda._run_stages
+
+    def in_own_group(stage):
+        def fn(*args):
+            # the stage thread's own copy of the local properties
+            sc.setJobGroup(f"eda-stage-{stage.name}", stage.name)
+            return stage.fn(*args)
+
+        return replace(stage, fn=fn)
+
+    def grouped_run_stages(spark_, stages):
+        return run_stages(spark_, [in_own_group(s) for s in stages])
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(eda, "_run_stages", grouped_run_stages)
+        summary = run_pipeline(
+            spark, pipeline_run[0], str(tmp_path_factory.mktemp("eda_stage_jobs")),
+            _test_config(),
+        )
+    _wait_for_job_events(spark)
+    tracker = sc.statusTracker()
+    return {
+        name: len(tracker.getJobIdsForGroup(f"eda-stage-{name}"))
+        for name in summary["stage_spans"]
+    }
 
 
 def _read(directory: str, name: str) -> bytes:
@@ -632,9 +681,19 @@ class TestStageGraph:
         assert _read(out_a, "EDA_REPORT.md") == _read(out_b, "EDA_REPORT.md")
 
     def test_every_job_keeps_the_callers_job_group(self, grouped_rerun):
-        _, _, grouped, ungrouped_new = grouped_rerun
-        assert len(grouped) > 50  # every stage's jobs, the GBT's one included
+        _, _, grouped, ungrouped_new, run_jobs = grouped_rerun
+        assert run_jobs  # every stage's jobs, the GBT's one included
+        assert grouped == run_jobs
         assert ungrouped_new == set()
+
+    def test_driver_finished_stages_make_one_action_each(self, stage_job_counts):
+        # one action each; AQE runs each shuffle or broadcast stage below
+        # it as a job of its own
+        assert {n: stage_job_counts[n] for n in DRIVER_FINISHED_STAGES} == {
+            "filled_count": 2,
+            "cardinality_unseen": 2,
+            "linear_screen": 3,
+        }
 
     def test_stage_times_and_spans(self, grouped_rerun):
         summary = grouped_rerun[1]
@@ -675,7 +734,7 @@ class TestStageGraph:
         sc = spark.sparkContext
         slow_group = "eda-test-slow-stage"
         slow_outcome = []
-        real_corr = S.corr_matrix_assembled
+        real_corr = S.screen_corr
 
         def slow_corr(*args, **kwargs):
             # changes only this stage thread's local properties; the
@@ -702,7 +761,7 @@ class TestStageGraph:
                 time.sleep(0.01)
             raise StageFailure("cardinality stage failed")
 
-        monkeypatch.setattr(S, "corr_matrix_assembled", slow_corr)
+        monkeypatch.setattr(S, "screen_corr", slow_corr)
         monkeypatch.setattr(P, "cardinality_unseen_profile", boom)
         persistent_before = sc._jsc.getPersistentRDDs().size()
         with pytest.raises(StageFailure):

@@ -494,6 +494,26 @@ class TestPortableHashFamily:
         for t in texts:
             assert got[t] == py_simhash(t), t
 
+    def test_xxhash_simhash_fast_path_matches_unrolled(self, spark):
+        """simhash on a column name takes the parsed-SQL fast path; on a
+        Column it builds the unrolled per-bit form. Same fingerprints."""
+        from pyspark.sql import functions as F
+
+        from datafusion_cyberpolka_eda_spark.functions.text import simhash
+
+        fast, unrolled = simhash("t"), simhash(F.col("t"))
+        assert str(fast) != str(unrolled)
+        texts = [
+            "one two three four", "a b a b a", "solo", "x x x x", "the cat the dog the end",
+            "", None,
+        ]
+        df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, t string")
+        rows = df.select("i", fast.alias("fast"), unrolled.alias("unrolled")).collect()
+        assert len(rows) == len(texts)
+        for r in rows:
+            assert r["fast"] == r["unrolled"], texts[r["i"]]
+        assert len({r["fast"] for r in rows if r["fast"] is not None}) == len(texts) - 1
+
 
 class TestClusterCheckpoint:
     """connected_components(checkpoint_dir=...) must produce identical

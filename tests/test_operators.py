@@ -62,26 +62,27 @@ class TestMomentsEngine:
         m2 = S.cross_moments(sdf, cols, cols, chunk_size=1000)
         np.testing.assert_allclose(m1["sum_xy"], m2["sum_xy"])
 
-    def test_assembled_corr_matches_moments_route(self, sdf, synth):
-        """The one-pass Correlation.corr screen must agree with the
-        chunked-moments route, including the xs x ys block slicing and
-        the constant-column NaN guard."""
+    def test_screen_corr_matches_moments_route(self, sdf, synth):
+        """The driver-side screen (impute + Pearson in NumPy) must agree
+        with mean_impute + the chunked-moments route, including the
+        xs x ys block slicing."""
         xs, ys = ["x1", "x2", "x3"], ["y1", "y2"]
+        assert synth["x3"].isna().any()
         imputed = S.mean_impute(sdf, ["x3"])
         via_moments = S.corr_from_moments(S.cross_moments(imputed, xs, ys))
-        via_assembled = S.corr_matrix_assembled(imputed, xs, ys)
-        assert list(via_assembled.index) == xs
-        assert list(via_assembled.columns) == ys
+        via_screen = S.screen_corr(synth, xs, ys)
+        assert list(via_screen.index) == xs
+        assert list(via_screen.columns) == ys
         np.testing.assert_allclose(
-            via_assembled.to_numpy(), via_moments.to_numpy(), rtol=1e-9, atol=1e-12
+            via_screen.to_numpy(), via_moments.to_numpy(), rtol=1e-9, atol=1e-12
         )
 
-    def test_assembled_corr_constant_column_nan(self, spark):
-        df = spark.createDataFrame(
-            pd.DataFrame({"a": [1.0, 1.0, 1.0], "b": [1.0, 2.0, 3.0]})
-        )
-        corr = S.corr_matrix_assembled(df, ["a", "b"], ["b"])
+    def test_screen_corr_constant_column_nan(self):
+        # an all-null column imputes to 0.0, so it is constant too
+        pdf = pd.DataFrame({"a": [0.1, 0.1, 0.1], "n": [np.nan] * 3, "b": [1.0, 2.0, 3.0]})
+        corr = S.screen_corr(pdf, ["a", "n", "b"], ["b"])
         assert np.isnan(corr.loc["a", "b"])
+        assert np.isnan(corr.loc["n", "b"])
         assert corr.loc["b", "b"] == pytest.approx(1.0)
 
     def test_mean_impute(self, sdf, synth):
@@ -185,6 +186,40 @@ def _adversarial_auc(tables) -> float:
     return ML.adversarial_shift_auc(train, test, feats, "customer_id", max_iter=8)
 
 
+class TestDriverTwins:
+    """The pipeline's driver-side filled-count statistics against the Spark
+    operators they replace."""
+
+    @pytest.mark.parametrize("n_rows", [1003, 7])
+    def test_ntile_by_equals_ntile_bucket(self, spark, n_rows):
+        rng = np.random.default_rng(3)
+        # few distinct values: tie groups straddle decile edges; 1003 rows
+        # leave a remainder of 3, 7 rows leave buckets 8-10 empty
+        v = rng.integers(0, 6, n_rows)
+        ids = rng.permutation(n_rows) * 7
+        df = spark.createDataFrame(pd.DataFrame({"id": ids, "v": v}))
+        rows = relational.ntile_bucket(df, "v", 10, tiebreak_cols=["id"]).collect()
+        spark_bucket = {r["id"]: r["bucket"] for r in rows}
+        got = S.ntile_by([v, ids], 10)
+        assert [int(b) for b in got] == [spark_bucket[i] for i in ids]
+        if n_rows > 10:
+            straddling = pd.DataFrame({"v": v, "b": got}).groupby("v")["b"].nunique()
+            assert (straddling > 1).sum() >= 3
+
+    def test_rank_auc_and_point_biserial_match_spark(self, spark):
+        rng = np.random.default_rng(9)
+        n = 5000
+        y = (rng.random(n) < 0.3).astype(np.int32)
+        filled = rng.integers(0, 40, n) + 5 * y  # integer counts, heavy ties
+        df = spark.createDataFrame(pd.DataFrame({"y": y, "f": filled}))
+        assert S.rank_auc(y, filled) == S.auc_by_rank(df, "y", "f").collect()[0]["auc"]
+        r, p = S.point_biserial_ints(y, filled)
+        r_spark, p_spark = S.point_biserial(df, "y", "f")
+        assert abs(r - r_spark) <= 1e-12
+        assert p == pytest.approx(p_spark, rel=1e-9)
+        assert np.isnan(S.point_biserial_ints(y, np.full(n, 3))[0])
+
+
 class TestAdversarialShift:
     def test_auc_separates_shift_from_no_shift(self, shift_tables):
         assert 0.40 <= _adversarial_auc(shift_tables[False]) <= 0.62
@@ -202,8 +237,6 @@ class TestAdversarialShift:
         assert len(sc.statusTracker().getJobIdsForGroup("adversarial-one-job")) == 1
 
     def test_rank_auc_matches_pairwise_and_auc_by_rank(self, spark):
-        from datafusion_cyberpolka_eda_spark.operators.ml import _rank_auc
-
         rng = np.random.default_rng(5)
         n = 600
         y = (rng.random(n) < 0.3).astype(int)
@@ -214,11 +247,11 @@ class TestAdversarialShift:
         ties = (pos[:, None] == neg[None, :]).sum()
         assert ties > 0
         naive = (wins + 0.5 * ties) / (len(pos) * len(neg))
-        auc = _rank_auc(y, s)
+        auc = S.rank_auc(y, s)
         assert auc == pytest.approx(naive, rel=1e-12)
         df = spark.createDataFrame(pd.DataFrame({"y": y, "s": s}))
-        assert auc == pytest.approx(S.auc_by_rank(df, "y", "s").collect()[0]["auc"], rel=1e-12)
-        assert np.isnan(_rank_auc(np.ones(3), np.arange(3.0)))
+        assert auc == S.auc_by_rank(df, "y", "s").collect()[0]["auc"]
+        assert np.isnan(S.rank_auc(np.ones(3), np.arange(3.0)))
 
 
 class TestHashSampler:
@@ -334,19 +367,18 @@ class TestProfile:
                 }
             )
         )
-        prof = {
-            r["feature"]: r
-            for r in profile.cardinality_unseen_profile(train, test, ["a", "b"]).collect()
-        }
+        prof = profile.cardinality_unseen_profile(train, test, ["a", "b"])
+        assert list(prof["feature"]) == ["a", "b"]
+        prof = prof.set_index("feature")
         for c in ["a", "b"]:
             tr_uni = train.select(c).na.drop().distinct().count()
             te_uni = test.select(c).na.drop().distinct().count()
             unseen = profile.unseen_categories(train, test, c).count()
             rate = profile.unseen_rate_rows(train, test, c).collect()[0]["unseen_rate"]
-            assert prof[c]["train_nunique"] == tr_uni, c
-            assert prof[c]["test_nunique"] == te_uni, c
-            assert prof[c]["unseen_unique_categories"] == unseen, c
-            assert prof[c]["unseen_rate_test_rows"] == pytest.approx(rate), c
+            assert prof.loc[c, "train_nunique"] == tr_uni, c
+            assert prof.loc[c, "test_nunique"] == te_uni, c
+            assert prof.loc[c, "unseen_unique_categories"] == unseen, c
+            assert prof.loc[c, "unseen_rate_test_rows"] == rate, c
 
 
 class TestRelational:
