@@ -19,6 +19,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from datafusion_cyberpolka_eda_spark.functions.litexpr import sql_ident
 from datafusion_cyberpolka_eda_spark.operators.relational import union_stack
 
 
@@ -45,6 +46,36 @@ def null_rates(df: DataFrame, cols: list[str] | None = None, chunk_size: int = 4
             )
         )
     return reduce(lambda a, b: a.unionByName(b), out)
+
+
+def nonnull_counts(
+    df: DataFrame, cols: list[str] | None = None, chunk_size: int = 400
+) -> tuple[int, dict[str, int]]:
+    """Row count and per-column non-null count, count(1) and count(c),
+    in one agg pass per chunk of columns (null_rates' chunking). On a
+    cached frame the first pass builds the whole cache: InMemoryRelation
+    materializes every column whatever the scan reads."""
+    cols = list(cols if cols is not None else df.columns)
+    rows, counts = 0, {}
+    for batch in _chunks(cols, chunk_size) or [[]]:
+        counts_sql = [f"count({sql_ident(c)}) AS `c{i}`" for i, c in enumerate(batch)]
+        r = df.selectExpr("count(1) AS `__n`", *counts_sql).collect()[0]
+        rows = r["__n"]
+        counts.update({c: r[f"c{i}"] for i, c in enumerate(batch)})
+    return rows, counts
+
+
+def null_rates_from_counts(rows: int, nonnull: dict[str, int], cols: list[str]) -> pd.DataFrame:
+    """null_rates(df, cols).toPandas() from nonnull_counts(df), bit for
+    bit: (rows - nonnull) / rows is one correctly rounded division of
+    integers below 2^53, as avg(CAST(isNull AS DOUBLE)) is. NaN for no
+    rows (avg is NULL)."""
+    return pd.DataFrame(
+        {
+            "column": list(cols),
+            "null_rate": [(rows - nonnull[c]) / rows if rows else np.nan for c in cols],
+        }
+    )
 
 
 def missingness_bands(

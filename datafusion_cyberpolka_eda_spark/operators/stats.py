@@ -13,13 +13,16 @@ doubles) in one or a few chunked aggregation passes with map-side partial
 aggregation; all O(pairs) arithmetic then runs on the driver over numpy
 arrays, and the Spark operators here never bring row data to the driver.
 
-Driver twins: rank_auc, point_biserial_ints, ntile_by and screen_corr
-compute auc_by_rank, point_biserial, relational.ntile_bucket and the
-mean-impute + Pearson screen over arrays a caller has already collected —
-the EDA pipeline's filled-count and linear-screen stages, whose inputs
-are driver-sized after one Spark action (as in the reference, which
-holds them in pandas). rank_auc and ntile_by equal their Spark
-operators bit for bit (ntile_by when its keys order every row)."""
+Driver twins: rank_auc, point_biserial_ints, ntile_by, screen_corr,
+spark_percentile and whale_screen compute auc_by_rank, point_biserial,
+relational.ntile_bucket, the mean-impute + Pearson screen, Spark's exact
+`percentile` and whale_scan over data a caller has already collected —
+the EDA pipeline's filled-count, linear-screen and whale stages, whose
+inputs are driver-sized after one Spark action (as in the reference,
+which holds them in pandas). rank_auc, ntile_by (when its keys order
+every row), spark_percentile and whale_screen equal their Spark
+counterparts bit for bit; whale_scan stays as the registry's operator and
+the reference its twin is tested against."""
 
 from __future__ import annotations
 
@@ -28,6 +31,8 @@ from functools import reduce
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -440,27 +445,89 @@ def whale_scan(
     for batch in _chunks(pairs, max(1, chunk_size // 4)):
         r = df.selectExpr(*contingency_aggs_sql(batch, cut)).collect()[0].asDict()
         for i, (f, t) in enumerate(batch):
-            tn, tp = int(r[f"tn_{i}"]), int(r[f"tp_{i}"])
-            rn, rp = int(r[f"rn_{i}"]), int(r[f"rp_{i}"])
-            if tn < min_top or rn < min_rest or rp == 0:
-                continue
-            top_rate = tp / tn
-            rest_rate = rp / rn
-            records.append(
-                {
-                    "feature": f,
-                    "target": t,
-                    "top_n": tn,
-                    "top_pos": tp,
-                    "rest_n": rn,
-                    "rest_pos": rp,
-                    "top1_rate": top_rate,
-                    "rest99_rate": rest_rate,
-                    "lift": top_rate / rest_rate,
-                    "pvalue": fisher_exact_greater(tp, tn - tp, rp, rn - rp),
-                }
-            )
+            # a sum over no non-null input is NULL (an all-null feature)
+            tn, tp, rn, rp = (int(r[f"{k}_{i}"] or 0) for k in ("tn", "tp", "rn", "rp"))
+            _whale_record(records, f, t, tn, tp, rn, rp, min_top, min_rest)
     return pd.DataFrame(records)
+
+
+def _whale_record(
+    records: list[dict], f: str, t: str, tn: int, tp: int, rn: int, rp: int,
+    min_top: int, min_rest: int,
+) -> None:
+    """Append the (feature, target) uplift record unless a guard (ref lines
+    625-636) drops it."""
+    if tn < min_top or rn < min_rest or rp == 0:
+        return
+    top_rate = tp / tn
+    rest_rate = rp / rn
+    records.append(
+        {
+            "feature": f,
+            "target": t,
+            "top_n": tn,
+            "top_pos": tp,
+            "rest_n": rn,
+            "rest_pos": rp,
+            "top1_rate": top_rate,
+            "rest99_rate": rest_rate,
+            "lift": top_rate / rest_rate,
+            "pvalue": fisher_exact_greater(tp, tn - tp, rp, rn - rp),
+        }
+    )
+
+
+def spark_percentile(values: np.ndarray, q: float) -> float:
+    """Spark's exact ``percentile(col, q)`` of a column's non-null values,
+    bit for bit: sort them (NaN last, as Spark orders doubles), pos =
+    (n - 1) * q; the lower value when pos is whole or both neighbours are
+    equal, else (hi - pos) * v[lo] + (pos - lo) * v[hi]. NaN for no values
+    (Spark returns NULL)."""
+    v = np.sort(np.asarray(values, dtype=np.float64))
+    if len(v) == 0:
+        return float("nan")
+    pos = (len(v) - 1) * q
+    lo, hi = math.floor(pos), math.ceil(pos)
+    lo_v, hi_v = float(v[lo]), float(v[hi])
+    if lo == hi or lo_v == hi_v:
+        return lo_v
+    return (hi - pos) * lo_v + (pos - lo) * hi_v
+
+
+def whale_screen(
+    table: pa.Table,
+    features: list[str],
+    targets: list[str],
+    quantile: float = 0.99,
+    min_top: int = 50,
+    min_rest: int = 1000,
+) -> pd.DataFrame:
+    """whale_scan (exact cutoffs) over a collected Arrow table, on the
+    driver, bit for bit: the cutoff is spark_percentile of the feature's
+    non-null values; top = non-null and (x >= cutoff or x is NaN), as
+    Spark's >= puts NaN above every value; rest = non-null and not top; a
+    null target adds 0 to either sum. Targets are integer-valued, so the
+    sums are exact in any order. Arrow keeps nulls apart from NaN."""
+    y = {t: _filled(table.column(t)) for t in targets}
+    records: list[dict] = []
+    for f in features:
+        col = table.column(f)
+        valid = col.is_valid().to_numpy(zero_copy_only=False)
+        x = _filled(col)
+        cut = spark_percentile(x[valid], quantile)
+        with np.errstate(invalid="ignore"):
+            top = valid & ((x >= cut) | np.isnan(x))
+        rest = valid & ~top
+        tn, rn = int(top.sum()), int(rest.sum())
+        for t in targets:
+            tp, rp = int(y[t][top].sum()), int(y[t][rest].sum())
+            _whale_record(records, f, t, tn, tp, rn, rp, min_top, min_rest)
+    return pd.DataFrame(records)
+
+
+def _filled(col: pa.ChunkedArray) -> np.ndarray:
+    """A column as float64, nulls as 0.0 (callers mask them or add them)."""
+    return pc.fill_null(col.cast(pa.float64()), 0.0).to_numpy()
 
 
 def contingency_aggs_sql(

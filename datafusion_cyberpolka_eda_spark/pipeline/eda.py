@@ -5,22 +5,27 @@ summary.json + markdown report (schemas locked by tests against
 FIXTURES.md §A5 / the reference's public_tables/).
 
 Execution split (SURVEY.md §3):
-- distributed (Spark): row counts, target moments, horizontal fill
-  counts, customer_id joins, chunked null-rate profiling, per-(feature,
-  value) category counts, target moment matrices, contingency counts,
-  quantiles, the hash samples and the adversarial holdout split
+- distributed (Spark): the table reads, each of which builds its cache in
+  a pass that also counts the rows and every column's non-null values
+  (the null rates and row counts come from there), target moments,
+  horizontal fill counts, customer_id joins, per-(feature, value)
+  category counts, target moment matrices, the hash samples and the
+  adversarial holdout split
 - driver (pandas/numpy): pair loops, clustering, Fisher p-values, artifact
   shaping, report text; and, as the reference does, the stages whose
   input is driver-sized after one Spark action: the filled-count AUC,
   point-biserial and deciles (one row per customer, three integer
   columns), distinct and unseen category counts (one row per distinct
-  category), the linear screen's mean impute and Pearson block (its
-  hash sample), and the adversarial GBT fit (its hash sample). Each of
-  those stages submits one action; on a few-core box a Spark job costs
-  more to launch than these reductions cost to run (Shark's point on
-  small inputs). The AUC, deciles and category counts equal the Spark
-  operators' results bit for bit; the point-biserial and the screen's
-  correlations agree with them to 1e-12 (tests/test_operators.py)
+  category), the linear screen's mean impute and Pearson block, the
+  missing-indicator AUC screen's integer sums, the whale screen's exact
+  percentile cutoffs and 2x2 contingencies, and the adversarial GBT fit
+  (each over its hash sample). Each of those stages submits one action;
+  on a few-core box a Spark job costs more to launch than these
+  reductions cost to run (Shark's point on small inputs). The AUCs,
+  deciles, category counts, null rates, indicator sums and whale records
+  equal the Spark operators' results bit for bit; the point-biserial and
+  the screen's correlations agree with them to 1e-12
+  (tests/test_operators.py, tests/test_litexpr.py)
 
 Stage graph: run_pipeline declares each stage as a function of the stage
 results it reads (the `stages` list at its end is the graph) and starts
@@ -28,10 +33,12 @@ every stage as soon as those results exist, each on a thread of a pool
 sized to the graph. Spark's scheduler takes jobs from many threads at
 once; the model is Shark's partial DAG execution — schedule from the
 dependency graph, not in program order. Each of the four table reads
-caches its table and builds the cache with one job before any other
-stage reads it, so no two stages race to build one cache and the job
-count repeats exactly. The adversarial GBT needs only the two
-main-feature tables, so it starts right after their reads.
+caches its table and builds the whole cache in its profile pass before
+any other stage reads it, so no two stages race to build one cache and
+the job count repeats exactly. The adversarial GBT needs only the two
+main-feature tables, so it starts right after their reads. The report
+also waits for the stages that write only artifacts, so a run in which
+one of them fails leaves no report behind.
 
 Stage threads inherit the caller's job group, description and scheduler
 pool (pyspark.util.inheritable_thread_target), and every job of a run
@@ -43,14 +50,19 @@ Determinism: two runs on one fixture write byte-identical artifacts,
 summary.json and EDA_REPORT.md included. The adversarial GBT sorts its
 sample before a seeded in-process fit (ml.adversarial_shift_auc) and the
 linear screen sorts its sample by customer_id, so no float sum depends on
-thread timing or Spark's row order.
+thread timing or Spark's row order; the indicator and whale screens sum
+integers, exact in any order.
 
 Scale notes: what reaches the driver is what the reference holds in
 pandas. At the reference's 750k rows: the filled-count frame (three
 integer columns, ~15 MB), the category counts (O(sum of distinct
 categories) rows), the linear-screen sample (~90k rows x ~560 doubles,
-~400 MB) and the adversarial sample; every other stage brings back only
-moment matrices and result tables.
+~400 MB), the indicator sample (~225k rows x ~40 int32 columns, ~36 MB),
+the whale sample (~90k rows x the main numeric features in doubles, plus
+the rare targets) and the adversarial sample; every other stage brings
+back only moment matrices, per-column counts and result tables. The
+read profile aggregates 400 columns per pass, so the reference's
+2,241-column extra table takes six passes; the first builds its cache.
 """
 
 from __future__ import annotations
@@ -62,7 +74,7 @@ import uuid
 from concurrent.futures import FIRST_COMPLETED, Future, ThreadPoolExecutor, wait
 from dataclasses import dataclass, field
 from types import SimpleNamespace
-from typing import Any, Callable
+from typing import Any, Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -120,21 +132,28 @@ def _pretty(df: pd.DataFrame, n: int = 10) -> str:
     return df.head(n).to_string(index=False)
 
 
-def indicator_aggs_sql(feats: list[str], targets: list[str]) -> list[str]:
-    """The missing-indicator screen's aggregates as SQL text: `__n`, then
-    per feature f its null count ind_<f> and, per target t, iy_<f>_<t> =
-    sum(null indicator * target), then y_<t> per target."""
-    aggs = ["count(1) AS `__n`"]
-    for f in feats:
-        ind = f"CAST(({sql_ident(f)} IS NULL) AS DOUBLE)"
-        aggs.append(f"sum({ind}) AS {sql_ident('ind_' + f)}")
-        for t in targets:
-            aggs.append(
-                f"sum({ind} * CAST({sql_ident(t)} AS DOUBLE)) AS {sql_ident(f'iy_{f}_{t}')}"
-            )
-    for t in targets:
-        aggs.append(f"sum(CAST({sql_ident(t)} AS DOUBLE)) AS {sql_ident('y_' + t)}")
-    return aggs
+def indicator_sums(sample: DataFrame, feats: list[str], targets: list[str]) -> SimpleNamespace:
+    """The missing-indicator screen's integer sums from one Arrow action:
+    n rows; ind[i], the null count of feats[i]; iy[i, j], the sum of
+    targets[j] over the rows where feats[i] is null; y[j], the sum of
+    targets[j]. A null target adds 0, as sum() skips it."""
+    table = sample.selectExpr(
+        *[f"CAST({sql_ident(f)} IS NULL AS INT) AS `i{k}`" for k, f in enumerate(feats)],
+        *[f"CAST(coalesce({sql_ident(t)}, 0) AS INT) AS `y{k}`" for k, t in enumerate(targets)],
+    ).toArrow()
+    cols = np.array([c.to_numpy() for c in table.columns], dtype=np.int64)
+    cols = cols.reshape(table.num_columns, table.num_rows).T
+    ind, y = cols[:, : len(feats)], cols[:, len(feats) :]
+    return SimpleNamespace(n=table.num_rows, ind=ind.sum(axis=0), iy=ind.T @ y, y=y.sum(axis=0))
+
+
+class _Table(NamedTuple):
+    """A read stage's result: the cached table and the profile taken in
+    the pass that built its cache."""
+
+    df: DataFrame
+    rows: int
+    nonnull: dict[str, int]  # non-null values per column
 
 
 @dataclass(frozen=True)
@@ -216,21 +235,23 @@ def run_pipeline(
         cached.append(df)
         return df.cache()
 
-    def read(table: str) -> DataFrame:
+    def read(table: str) -> _Table:
         df = cache(spark.read.parquet(os.path.join(data_dir, f"{table}.parquet")))
-        # one job that builds the whole cache and returns nothing
-        df.write.format("noop").mode("overwrite").save()
-        return df
+        # the pass that builds the whole cache also counts the rows and each
+        # column's non-null values (one pass per 400 columns)
+        return _Table(df, *P.nonnull_counts(df))
+
+    def null_rates(table: _Table) -> pd.DataFrame:
+        return P.null_rates_from_counts(table.rows, table.nonnull, features(table.df))
 
     # ---- inventory + target prevalence (ref 76-116) ----
-    def inventory(train_main: DataFrame, test_main: DataFrame, train_target: DataFrame):
-        target_cols = features(train_target)
-        n_train = train_main.count()
-        n_test = test_main.count()
+    def inventory(train_main: _Table, test_main: _Table, train_target: _Table):
+        target_cols = features(train_target.df)
+        n_train, n_test = train_main.rows, test_main.rows
         # ONE moments pass over the targets: positive counts here (sums of
         # 0/1 columns, exact in doubles below 2^53), the corr matrix and
         # co-occurrence counts in target_dependencies
-        m = S.cross_moments(train_target, target_cols, target_cols)
+        m = S.cross_moments(train_target.df, target_cols, target_cols)
         positives = [int(v) for v in m["sum_x"]]
         target_df = pd.DataFrame(
             [
@@ -263,11 +284,11 @@ def run_pipeline(
 
     # ---- adversarial shift (ref 410-459): one Spark job collects the
     # hash sample; the GBT fits on the driver, beside the other stages ----
-    def adversarial_gbt(train_main: DataFrame, test_main: DataFrame) -> float:
+    def adversarial_gbt(train_main: _Table, test_main: _Table) -> float:
         return ML.adversarial_shift_auc(
-            train_main,
-            test_main,
-            feature_cols=features(train_main),
+            train_main.df,
+            test_main.df,
+            feature_cols=features(train_main.df),
             key_col=id_col,
             sample_pct=cfg.adv_sample_pct,
             seed=cfg.seed,
@@ -278,8 +299,8 @@ def run_pipeline(
 
     # ---- opened-targets histogram (ref 126-135): horizontal sum, no
     # driver row data ----
-    def opened_histogram(train_target: DataFrame, inv) -> None:
-        opened = train_target.select(
+    def opened_histogram(train_target: _Table, inv) -> None:
+        opened = train_target.df.select(
             horizontal_sum([F.col(t).cast("int") for t in inv.target_cols]).alias(
                 "opened_targets"
             )
@@ -406,9 +427,10 @@ def run_pipeline(
         save(cluster_summary_df, "target_cluster_summary.csv")
         return cluster_eval_df
 
-    # ---- missingness (ref 235-280): chunked wide null-rate aggs ----
-    def missingness(train_main: DataFrame, train_extra: DataFrame):
-        extra_miss = P.null_rates(train_extra, features(train_extra)).toPandas()
+    # ---- missingness (ref 235-280): null rates from the reads' profiles,
+    # no Spark job ----
+    def missingness(train_main: _Table, train_extra: _Table):
+        extra_miss = null_rates(train_extra)
         extra_miss_df = (
             extra_miss.rename(columns={"column": "feature"})
             .assign(source="extra", feature_type="num")
@@ -416,7 +438,7 @@ def run_pipeline(
         )
         save(extra_miss_df, "extra_missingness_summary.csv")
 
-        main_miss = P.null_rates(train_main, features(train_main)).toPandas()
+        main_miss = null_rates(train_main)
         main_miss_df = main_miss.rename(columns={"column": "feature"}).assign(source="main")
         main_miss_df["feature_type"] = np.where(
             main_miss_df["feature"].str.startswith("cat_feature_"), "cat", "num"
@@ -448,15 +470,15 @@ def run_pipeline(
     # brings (id, filled count, any-open label) to the driver, as the
     # reference does; AUC, point-biserial and deciles are exact integer
     # arithmetic there, equal to the Spark operators' (tests pin it) ----
-    def filled_count(train_extra: DataFrame, train_target: DataFrame):
-        open_cols = [c for c in features(train_target) if c != cfg.antagonist]
+    def filled_count(train_extra: _Table, train_target: _Table):
+        open_cols = [c for c in features(train_target.df) if c != cfg.antagonist]
         fill_df = (
-            train_extra.select(
+            train_extra.df.select(
                 F.col(id_col),
-                horizontal_not_null_count(features(train_extra)).alias("filled_extra_count"),
+                horizontal_not_null_count(features(train_extra.df)).alias("filled_extra_count"),
             )
             .join(
-                train_target.select(
+                train_target.df.select(
                     F.col(id_col),
                     (
                         horizontal_sum([F.col(c).cast("int") for c in open_cols]) > 0
@@ -494,8 +516,9 @@ def run_pipeline(
 
     # ---- missing-indicator AUC screen (ref 321-364): closed-form AUC for
     # a binary score — AUC = 0.5 + (P(ind|pos) - P(ind|neg))/2 — so the
-    # whole screen is ONE chunked conditional-agg pass, no per-pair jobs ----
-    def indicator_auc(train_extra: DataFrame, train_target: DataFrame, inv, miss) -> None:
+    # whole screen needs only integer sums over the sample: one Arrow
+    # action brings its indicator and target columns to the driver ----
+    def indicator_auc(train_extra: _Table, train_target: _Table, inv, miss) -> None:
         target_df, extra_miss_df = inv.target_df, miss.extra
         pop_targets = (
             target_df[target_df["target"] != cfg.antagonist]
@@ -512,35 +535,32 @@ def run_pipeline(
         miss_auc_rows = []
         if moderate_feats:
             sample = hash_sample(
-                train_extra.select(id_col, *moderate_feats), id_col, cfg.indicator_sample_pct,
-                cfg.seed,
+                train_extra.df.select(id_col, *moderate_feats), id_col,
+                cfg.indicator_sample_pct, cfg.seed,
             ).join(
                 hash_sample(
-                    train_target.select(id_col, *pop_targets), id_col,
+                    train_target.df.select(id_col, *pop_targets), id_col,
                     cfg.indicator_sample_pct, cfg.seed,
                 ),
                 on=id_col,
                 how="inner",
             )
-            aggs = indicator_aggs_sql(moderate_feats, pop_targets)
-            row = {}
-            for batch in [aggs[i : i + 1000] for i in range(0, len(aggs), 1000)]:
-                row.update(sample.selectExpr(*batch).collect()[0].asDict())
-            n_s = row["__n"]
+            sums = indicator_sums(sample, moderate_feats, pop_targets)
+            n_s = sums.n
             null_rate_map = dict(zip(extra_miss_df["feature"], extra_miss_df["null_rate"]))
-            for f in moderate_feats:
-                ind_sum = float(row[f"ind_{f}"])
+            for i, f in enumerate(moderate_feats):
+                ind_sum = float(sums.ind[i])
                 if ind_sum == 0 or ind_sum == n_s:
                     continue  # constant indicator (ref line 348-349)
                 miss_rate = ind_sum / n_s
-                for t in pop_targets:
-                    pos = float(row[f"y_{t}"])
+                for j, t in enumerate(pop_targets):
+                    pos = float(sums.y[j])
                     neg = n_s - pos
                     if pos == 0 or neg == 0:
                         auc = np.nan  # degenerate class guard (ref safe_auc)
                     else:
-                        a = float(row[f"iy_{f}_{t}"]) / pos
-                        b = (ind_sum - float(row[f"iy_{f}_{t}"])) / neg
+                        a = float(sums.iy[i, j]) / pos
+                        b = (ind_sum - float(sums.iy[i, j])) / neg
                         auc = 0.5 + (a - b) / 2.0
                     auc_eff = np.nan if not np.isfinite(auc) else max(auc, 1.0 - auc)
                     miss_auc_rows.append(
@@ -561,9 +581,9 @@ def run_pipeline(
     # ---- cardinality + unseen categories (ref 369-405): ALL features in
     # one Spark action (a per-feature loop costs 4 full-table jobs per
     # column) ----
-    def cardinality_unseen(train_main: DataFrame, test_main: DataFrame):
-        cat_main = [c for c in features(train_main) if c.startswith("cat_feature_")]
-        prof = P.cardinality_unseen_profile(train_main, test_main, cat_main)
+    def cardinality_unseen(train_main: _Table, test_main: _Table):
+        cat_main = [c for c in features(train_main.df) if c.startswith("cat_feature_")]
+        prof = P.cardinality_unseen_profile(train_main.df, test_main.df, cat_main)
         card_df = prof[["feature", "train_nunique", "test_nunique"]].sort_values(
             "train_nunique", ascending=False
         )
@@ -577,12 +597,10 @@ def run_pipeline(
     # ---- wide linear screen (ref 463-594): one Spark action brings the
     # sampled 3-way join to the driver, the explicitly driver-scale screen
     # the reference also holds; mean impute and Pearson run in NumPy ----
-    def linear_screen(
-        train_main: DataFrame, train_extra: DataFrame, train_target: DataFrame, miss
-    ):
-        main_features = features(train_main)
+    def linear_screen(train_main: _Table, train_extra: _Table, train_target: _Table, miss):
+        main_features = features(train_main.df)
         cat_main = [c for c in main_features if c.startswith("cat_feature_")]
-        target_cols = features(train_target)
+        target_cols = features(train_target.df)
         extra_dense = (
             miss.extra.sort_values("null_rate", ascending=True)
             .head(cfg.n_extra_dense)["feature"]
@@ -599,17 +617,17 @@ def run_pipeline(
             for c in main_features
         ]
         screen = (
-            hash_sample(train_main, id_col, cfg.screen_sample_pct, cfg.seed)
+            hash_sample(train_main.df, id_col, cfg.screen_sample_pct, cfg.seed)
             .select(F.col(id_col), *main_exprs)
             .join(
-                hash_sample(train_extra, id_col, cfg.screen_sample_pct, cfg.seed).select(
+                hash_sample(train_extra.df, id_col, cfg.screen_sample_pct, cfg.seed).select(
                     F.col(id_col), *[F.col(c).cast("double").alias(c) for c in extra_dense]
                 ),
                 on=id_col,
                 how="inner",
             )
             .join(
-                hash_sample(train_target, id_col, cfg.screen_sample_pct, cfg.seed).select(
+                hash_sample(train_target.df, id_col, cfg.screen_sample_pct, cfg.seed).select(
                     F.col(id_col), *[F.col(t).cast("double").alias(t) for t in target_cols]
                 ),
                 on=id_col,
@@ -715,26 +733,32 @@ def run_pipeline(
             n_features=len(feat_screen), n_rows=n_screen, signal=feature_signal
         )
 
-    # ---- whale screen (ref 598-669): distributed contingencies + exact
-    # Fisher tail on the driver ----
-    def whale(train_main: DataFrame, train_target: DataFrame, inv):
+    # ---- whale screen (ref 598-669): one Arrow action brings the hash
+    # sample to the driver, as the reference holds it; cutoffs,
+    # contingencies and the exact Fisher tail run there ----
+    def whale(train_main: _Table, train_target: _Table, inv):
         target_df = inv.target_df
-        num_main = [c for c in features(train_main) if c.startswith("num_feature_")]
+        num_main = [c for c in features(train_main.df) if c.startswith("num_feature_")]
         rare_targets = target_df[target_df["positive_rate"] < cfg.rare_rate_threshold][
             "target"
         ].tolist()
         if rare_targets and num_main:
-            whale_in = hash_sample(
-                train_main.select(id_col, *num_main), id_col, cfg.whale_sample_pct, cfg.seed
-            ).join(
+            whale_in = (
                 hash_sample(
-                    train_target.select(id_col, *rare_targets), id_col,
-                    cfg.whale_sample_pct, cfg.seed,
-                ),
-                on=id_col,
-                how="inner",
+                    train_main.df.select(id_col, *num_main), id_col, cfg.whale_sample_pct,
+                    cfg.seed,
+                )
+                .join(
+                    hash_sample(
+                        train_target.df.select(id_col, *rare_targets), id_col,
+                        cfg.whale_sample_pct, cfg.seed,
+                    ),
+                    on=id_col,
+                    how="inner",
+                )
+                .toArrow()
             )
-            whale_all = S.whale_scan(
+            whale_all = S.whale_screen(
                 whale_in,
                 features=num_main,
                 targets=rare_targets,
@@ -781,12 +805,14 @@ def run_pipeline(
 
     # ---- summary + report (ref 674-905) ----
     def summary_report(
-        train_main: DataFrame, train_extra: DataFrame, inv, deps, cluster_eval_df,
-        fill, adv_auc: float, cat, linear, miss, whales,
+        train_main: _Table, train_extra: _Table, inv, deps, cluster_eval_df,
+        fill, adv_auc: float, cat, linear, miss, whales, *_written_before,
     ) -> dict:
+        # _written_before: the stages that write only artifacts; the report
+        # waits for them, so a run that fails writes no report
         target_cols, target_df = inv.target_cols, inv.target_df
         n_train, n_test = inv.n_train, inv.n_test
-        n_main, n_extra = len(features(train_main)), len(features(train_extra))
+        n_main, n_extra = len(features(train_main.df)), len(features(train_extra.df))
         corr_anti, unseen_df, whale_sig = deps.corr_anti, cat.unseen, whales.sig
         n_lt_1 = int((target_df["positive_rate"] < 0.01).sum())
         n_lt_01 = int((target_df["positive_rate"] < 0.001).sum())
@@ -935,7 +961,7 @@ All tables in `public_tables/`; summary scalars in `public_tables/summary.json`.
             (
                 main, extra, "inventory_targets", "target_dependencies", "clustering",
                 "filled_count", "adversarial_gbt", "cardinality_unseen", "linear_screen",
-                "missingness", "whale",
+                "missingness", "whale", "indicator_auc", "opened_histogram",
             ),
         ),
     ]

@@ -10,8 +10,30 @@ Arrow for toPandas crossings) and cluster scale (AQE, skew join handling).
 from __future__ import annotations
 
 import os
+import warnings
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+# JIT code cache: the default -XX:ReservedCodeCacheSize (240 MB,
+# segmented ~116 MB per nmethod heap on JDK 17) is too small for a JVM
+# that JITs thousands of whole-stage-codegen classes — measured: HALF the
+# registry fills the non-profiled segment to 89/116 MB, and a
+# full-registry bench session overflows it mid-run, at which point the
+# sweeper flushes hot nmethods and the code-heavy entries step +16-19%
+# slower (pass totals 244.0 -> 268.5/272.8 concentrated in the registry's
+# second half, flat on a half-registry probe that stays under the limit).
+# Same math on any long-running many-query driver or executor JVM; 512 MB
+# holds the whole registry's JIT output.
+CODE_CACHE_FLAG = "-XX:ReservedCodeCacheSize=512m"
+
+
+def java_options() -> str:
+    """The driver's and executors' JVM flags: CODE_CACHE_FLAG, then
+    $SPARK_GRAFT_DRIVER_JAVA_OPTS. The JVM takes the last of repeated
+    flags, so the user's win."""
+    user = os.environ.get("SPARK_GRAFT_DRIVER_JAVA_OPTS", "").strip()
+    return f"{CODE_CACHE_FLAG} {user}".strip()
 
 
 def get_spark(
@@ -33,6 +55,13 @@ def get_spark(
         # local: ~cores; a real cluster deployment would size this to
         # 2-3x total executor cores (or rely on AQE coalescing).
         shuffle_partitions = max(cpus, 8)
+    java_opts = java_options()
+    if SparkContext._active_spark_context is not None:
+        warnings.warn(
+            "a SparkContext is already running: its JVM options and other static "
+            "settings stay; get_spark's take effect only in a new process",
+            stacklevel=2,
+        )
 
     builder = (
         SparkSession.builder.appName(app_name)
@@ -59,25 +88,8 @@ def get_spark(
             "spark.cleaner.periodicGC.interval",
             os.environ.get("SPARK_GRAFT_PERIODIC_GC", "10min"),
         )
-        # JIT code cache (r13): the default -XX:ReservedCodeCacheSize
-        # (240 MB, segmented ~116 MB per nmethod heap on JDK 17) is too
-        # small for a JVM that JITs thousands of whole-stage-codegen
-        # classes — measured: HALF the registry fills the non-profiled
-        # segment to 89/116 MB, and a full-registry bench session
-        # overflows it mid-run, at which point the sweeper flushes hot
-        # nmethods and the code-heavy entries step +16-19% slower
-        # (pass totals 244.0 -> 268.5/272.8 concentrated in the
-        # registry's second half, flat on a half-registry probe that
-        # stays under the limit). Same math on any long-running
-        # many-query driver or executor JVM; 512 MB holds the whole
-        # registry's JIT output. Env-tunable for cluster profiles.
-        .config(
-            "spark.driver.extraJavaOptions",
-            os.environ.get(
-                "SPARK_GRAFT_DRIVER_JAVA_OPTS",
-                "-XX:ReservedCodeCacheSize=512m",
-            ),
-        )
+        .config("spark.driver.extraJavaOptions", java_opts)
+        .config("spark.executor.extraJavaOptions", java_opts)
         # whole-stage-codegen class cache (static conf, default 100):
         # a 240-entry registry generates several codegen units per query,
         # so one full pass evicts the default cache completely and EVERY

@@ -611,25 +611,41 @@ def _wait_for_job_events(spark) -> None:
 
 
 # the stages that finish on the driver after one Spark action each
-DRIVER_FINISHED_STAGES = ("filled_count", "cardinality_unseen", "linear_screen")
+DRIVER_FINISHED_STAGES = (
+    "filled_count", "cardinality_unseen", "linear_screen", "indicator_auc", "whale",
+)
+
+
+def _fully_cached(spark, df) -> bool:
+    """Every partition of df's cache is stored (getRDDStorageInfo)."""
+    sc = spark.sparkContext
+    cached = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
+    rdd_id = cached.get().cachedRepresentation().cacheBuilder().cachedColumnBuffers().id()
+    info = [i for i in sc._jsc.sc().getRDDStorageInfo() if i.id() == rdd_id]
+    return len(info) == 1 and info[0].numCachedPartitions() == info[0].numPartitions()
 
 
 @pytest.fixture(scope="module")
 def stage_job_counts(spark, pipeline_run, tmp_path_factory):
     """A run over pipeline_run's fixture with each stage's jobs under a job
-    group of its own; returns {stage name: jobs it submitted}."""
+    group of its own; returns {stage name: jobs it submitted}, plus
+    "<read stage>:fully_cached" for each read, checked when it returns."""
     from dataclasses import replace
 
     from datafusion_cyberpolka_eda_spark.pipeline import eda
 
     sc = spark.sparkContext
     run_stages = eda._run_stages
+    fully_cached = {}
 
     def in_own_group(stage):
         def fn(*args):
             # the stage thread's own copy of the local properties
             sc.setJobGroup(f"eda-stage-{stage.name}", stage.name)
-            return stage.fn(*args)
+            out = stage.fn(*args)
+            if stage.name.startswith("read_"):
+                fully_cached[f"{stage.name}:fully_cached"] = _fully_cached(spark, out.df)
+            return out
 
         return replace(stage, fn=fn)
 
@@ -645,8 +661,11 @@ def stage_job_counts(spark, pipeline_run, tmp_path_factory):
     _wait_for_job_events(spark)
     tracker = sc.statusTracker()
     return {
-        name: len(tracker.getJobIdsForGroup(f"eda-stage-{name}"))
-        for name in summary["stage_spans"]
+        **{
+            name: len(tracker.getJobIdsForGroup(f"eda-stage-{name}"))
+            for name in summary["stage_spans"]
+        },
+        **fully_cached,
     }
 
 
@@ -693,7 +712,21 @@ class TestStageGraph:
             "filled_count": 2,
             "cardinality_unseen": 2,
             "linear_screen": 3,
+            "indicator_auc": 2,
+            "whale": 2,
         }
+
+    def test_reads_profile_and_fully_cache_their_tables(self, stage_job_counts):
+        # the null rates and row counts come from the reads' profiles:
+        # missingness makes no job, inventory only its moments pass (an
+        # aggregate: its shuffle stage and its result)
+        assert stage_job_counts["missingness"] == 0
+        assert stage_job_counts["inventory_targets"] == 2
+        # each read leaves its whole table cached, so no later stage
+        # rebuilds a cache
+        reads = [n for n in stage_job_counts if n.startswith("read_") and ":" not in n]
+        assert len(reads) == 4
+        assert all(stage_job_counts[f"{n}:fully_cached"] for n in reads)
 
     def test_stage_times_and_spans(self, grouped_rerun):
         summary = grouped_rerun[1]
@@ -776,3 +809,48 @@ class TestStageGraph:
         while sc.statusTracker().getActiveJobsIds() and time.monotonic() < deadline:
             time.sleep(0.2)
         assert list(sc.statusTracker().getActiveJobsIds()) == []
+
+    def test_failed_artifact_stage_leaves_no_report(
+        self, spark, pipeline_run, tmp_path, monkeypatch
+    ):
+        """The report waits for the stages that only write artifacts: when
+        indicator_auc fails after every other stage has ended, the run
+        writes neither summary.json nor EDA_REPORT.md."""
+        import threading
+        import time
+        from dataclasses import replace
+
+        from datafusion_cyberpolka_eda_spark.pipeline import eda
+
+        class StageFailure(RuntimeError):
+            pass
+
+        run_stages = eda._run_stages
+        lock, done, all_done = threading.Lock(), set(), threading.Event()
+
+        def failing_indicator_run(spark_, stages):
+            others = {s.name for s in stages} - {"indicator_auc", "summary_report"}
+
+            def wrap(stage):
+                def fn(*args):
+                    if stage.name == "indicator_auc":
+                        assert all_done.wait(timeout=120)
+                        time.sleep(1.0)  # room for a report that did not wait
+                        raise StageFailure("indicator stage failed")
+                    out = stage.fn(*args)
+                    with lock:
+                        done.add(stage.name)
+                        if done >= others:
+                            all_done.set()
+                    return out
+
+                return replace(stage, fn=fn)
+
+            return run_stages(spark_, [wrap(s) for s in stages])
+
+        monkeypatch.setattr(eda, "_run_stages", failing_indicator_run)
+        with pytest.raises(StageFailure):
+            run_pipeline(spark, pipeline_run[0], str(tmp_path), _test_config())
+        assert all_done.is_set()
+        assert not os.path.exists(os.path.join(str(tmp_path), "EDA_REPORT.md"))
+        assert not os.path.exists(os.path.join(str(tmp_path), "public_tables", "summary.json"))

@@ -250,8 +250,10 @@ def test_contingency_aggs_sql_matches_old_form(wide):
     _assert_same(wide.agg(*old), wide.selectExpr(*S.contingency_aggs_sql(pairs, cut)))
 
 
-def test_indicator_aggs_sql_matches_old_form(wide):
-    from datafusion_cyberpolka_eda_spark.pipeline.eda import indicator_aggs_sql
+def test_indicator_sums_match_column_aggregate(wide):
+    """The missing-indicator screen's driver sums equal, bit for bit, the
+    Spark aggregate it replaced (NaN is not null; a null target adds 0)."""
+    from datafusion_cyberpolka_eda_spark.pipeline.eda import indicator_sums
 
     feats, targets = ["a", "c"], ["y1", "y2"]
     old = [F.count(F.lit(1)).alias("__n")]
@@ -262,7 +264,16 @@ def test_indicator_aggs_sql_matches_old_form(wide):
             old.append(F.sum(ind * F.col(t).cast("double")).alias(f"iy_{f}_{t}"))
     for t in targets:
         old.append(F.sum(F.col(t).cast("double")).alias(f"y_{t}"))
-    _assert_same(wide.agg(*old), wide.selectExpr(*indicator_aggs_sql(feats, targets)))
+    want = wide.agg(*old).first()
+    got = indicator_sums(wide, feats, targets)
+    assert got.n == want["__n"]
+    for i, f in enumerate(feats):
+        assert _bits(float(got.ind[i])) == _bits(want[f"ind_{f}"])
+        for j, t in enumerate(targets):
+            assert _bits(float(got.iy[i, j])) == _bits(want[f"iy_{f}_{t}"])
+    for j, t in enumerate(targets):
+        assert _bits(float(got.y[j])) == _bits(want[f"y_{t}"])
+    assert got.ind.tolist() == [1, 2] and got.iy.tolist() == [[0, 0], [1, 2]]
 
 
 def test_sql_ident_quotes_backquotes(spark):

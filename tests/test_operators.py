@@ -220,6 +220,82 @@ class TestDriverTwins:
         assert np.isnan(S.point_biserial_ints(y, np.full(n, 3))[0])
 
 
+@pytest.fixture(scope="module")
+def whale_frame(spark):
+    """Features with nulls, NaN values, ties at the cutoffs, an all-null
+    and a constant column; 0/1 targets with nulls, one enriched in the
+    top tail of x_tail."""
+    rng = np.random.default_rng(11)
+    n = 3000
+
+    def with_gaps(x, null_frac, nan_frac):
+        u = rng.random(n)
+        return [
+            None if ui < null_frac else float("nan") if ui < null_frac + nan_frac else float(v)
+            for ui, v in zip(u, x)
+        ]
+
+    tail = rng.lognormal(0, 1, n)
+    cols = {
+        "x_tail": with_gaps(tail, 0.1, 0.004),
+        # 30 values: interpolating between two equal ones can round off
+        # them (at q = 0.28 here)
+        "x_ties": with_gaps(rng.choice(rng.normal(0, 1, 30), n), 0.05, 0.0),
+        "x_nan_cut": with_gaps(rng.normal(0, 1, n), 0.0, 0.03),
+        "x_null": [None] * n,
+        "x_const": [5.0] * n,
+    }
+    y1 = (rng.random(n) < np.where(tail > np.quantile(tail, 0.95), 0.4, 0.02)).astype(int)
+    y2 = (rng.random(n) < 0.1).astype(int)
+    targets = {
+        "y1": [None if u < 0.05 else int(v) for u, v in zip(rng.random(n), y1)],
+        "y2": [int(v) for v in y2],
+    }
+    rows = list(zip(range(n), *cols.values(), *targets.values()))
+    schema = ", ".join(
+        ["id bigint", *[f"{c} double" for c in cols], *[f"{t} tinyint" for t in targets]]
+    )
+    return spark.createDataFrame(rows, schema), list(cols), list(targets)
+
+
+class TestWhaleTwin:
+    """The whale stage's driver screen against the Spark operator it
+    replaces in the pipeline."""
+
+    @pytest.mark.parametrize("q", [0.99, 0.9, 0.5, 0.28, 0.0, 1.0])
+    def test_spark_percentile_bit_for_bit(self, whale_frame, q):
+        import struct
+
+        def bits(v):  # every NaN alike: NaN payloads carry no value
+            return "NaN" if v is None or np.isnan(v) else struct.pack("<d", v)
+
+        df, feats, _ = whale_frame
+        want = df.selectExpr(*[f"percentile({f}, {q}) AS {f}" for f in feats]).first()
+        table = df.toArrow()
+        for f in feats:
+            got = S.spark_percentile(table.column(f).drop_null().to_numpy(), q)
+            assert bits(got) == bits(want[f]), (f, q, got, want[f])
+
+    @pytest.mark.parametrize("q", [0.99, 0.9, 0.5, 0.28])
+    def test_whale_screen_equals_whale_scan(self, whale_frame, q):
+        df, feats, targets = whale_frame
+        kw = dict(quantile=q, min_top=5, min_rest=100)
+        want = S.whale_scan(df, feats, targets, **kw)
+        got = S.whale_screen(df.toArrow(), feats, targets, **kw)
+        pd.testing.assert_frame_equal(got, want, check_exact=True)
+        # every guard passes somewhere and drops the degenerate columns
+        assert set(got["feature"]) == {"x_tail", "x_ties", "x_nan_cut"}
+
+    def test_nan_cutoff_puts_only_nan_rows_on_top(self, whale_frame):
+        df, _, targets = whale_frame
+        table = df.toArrow()
+        nan_rows = int(np.isnan(table.column("x_nan_cut").to_numpy()).sum())
+        got = S.whale_screen(table, ["x_nan_cut"], targets, min_top=1, min_rest=1)
+        assert np.isnan(S.spark_percentile(table.column("x_nan_cut").to_numpy(), 0.99))
+        assert got["top_n"].tolist() == [nan_rows] * len(targets)
+        assert got["rest_n"].tolist() == [len(table) - nan_rows] * len(targets)
+
+
 class TestAdversarialShift:
     def test_auc_separates_shift_from_no_shift(self, shift_tables):
         assert 0.40 <= _adversarial_auc(shift_tables[False]) <= 0.62
@@ -334,6 +410,24 @@ class TestProfile:
         }
         assert nr["x1"] == 0.0
         assert nr["x3"] == pytest.approx(synth["x3"].isna().mean(), rel=1e-12)
+
+    @pytest.mark.parametrize("chunk_size", [1, 400])
+    def test_null_rates_from_counts_bit_for_bit(self, spark, chunk_size):
+        n = 3001
+        rows = [
+            (i, None if i % 3 == 0 else 1.0, None, float("nan") if i % 7 else None, i)
+            for i in range(n)
+        ]
+        df = spark.createDataFrame(
+            rows, "id bigint, third double, empty double, nan double, v int"
+        )
+        cols = ["third", "empty", "nan", "v"]
+        want = profile.null_rates(df, cols).toPandas()
+        rows_, nonnull = profile.nonnull_counts(df, chunk_size=chunk_size)
+        assert rows_ == n and set(nonnull) == set(df.columns)
+        got = profile.null_rates_from_counts(rows_, nonnull, cols)
+        pd.testing.assert_frame_equal(got, want, check_exact=True)
+        assert got["null_rate"].tolist() == [1001 / n, 1.0, (n // 7 + 1) / n, 0.0]
 
     def test_null_rates_chunked(self, sdf):
         a = {r["column"]: r["null_rate"] for r in profile.null_rates(sdf, ["x1", "x2", "x3"], chunk_size=1).collect()}
