@@ -52,9 +52,9 @@ def nonnull_counts(
     df: DataFrame, cols: list[str] | None = None, chunk_size: int = 400
 ) -> tuple[int, dict[str, int]]:
     """Row count and per-column non-null count, count(1) and count(c),
-    in one agg pass per chunk of columns (null_rates' chunking). On a
-    cached frame the first pass builds the whole cache: InMemoryRelation
-    materializes every column whatever the scan reads."""
+    in one agg pass per chunk of columns (null_rates' chunking); on a
+    parquet scan each pass reads only its chunk's columns. cols=[] counts
+    the rows alone."""
     cols = list(cols if cols is not None else df.columns)
     rows, counts = 0, {}
     for batch in _chunks(cols, chunk_size) or [[]]:

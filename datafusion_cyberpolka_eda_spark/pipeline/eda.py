@@ -5,12 +5,14 @@ summary.json + markdown report (schemas locked by tests against
 FIXTURES.md §A5 / the reference's public_tables/).
 
 Execution split (SURVEY.md §3):
-- distributed (Spark): the table reads, each of which builds its cache in
-  a pass that also counts the rows and every column's non-null values
-  (the null rates and row counts come from there), target moments,
-  horizontal fill counts, customer_id joins, per-(feature, value)
-  category counts, target moment matrices, the hash samples and the
-  adversarial holdout split
+- distributed (Spark): the table profiles (row counts and every
+  column's non-null values, where the null rates come from), target
+  moments, horizontal fill counts, customer_id joins, per-(feature,
+  value) category counts, the hash samples and the adversarial holdout
+  split. Nothing is cached: as the reference re-scans its parquet
+  (pl.scan_parquet) at every query, each stage scans the columns it
+  reads, and Parquet's vectorized reader with column pruning does that
+  for less than building and reading back an in-memory columnar cache
 - driver (pandas/numpy): pair loops, clustering, Fisher p-values, artifact
   shaping, report text; and, as the reference does, the stages whose
   input is driver-sized after one Spark action: the filled-count AUC,
@@ -32,19 +34,21 @@ results it reads (the `stages` list at its end is the graph) and starts
 every stage as soon as those results exist, each on a thread of a pool
 sized to the graph. Spark's scheduler takes jobs from many threads at
 once; the model is Shark's partial DAG execution — schedule from the
-dependency graph, not in program order. Each of the four table reads
-caches its table and builds the whole cache in its profile pass before
-any other stage reads it, so no two stages race to build one cache and
-the job count repeats exactly. The adversarial GBT needs only the two
-main-feature tables, so it starts right after their reads. The report
-also waits for the stages that write only artifacts, so a run in which
-one of them fails leaves no report behind.
+dependency graph, not in program order. A read stage opens its table's
+scan (Spark's schema job only), so every stage that reads scans alone —
+the adversarial GBT, cardinality, filled count and target moments —
+starts right after the reads. The profiles are stages of their own:
+missingness waits for the two train ones, and the linear screen and
+indicator AUC follow it; inventory combines the target moments with
+the main and test row counts and makes no job. The report also waits
+for the stages that write only artifacts, so a run in which one of them
+fails leaves no report behind.
 
 Stage threads inherit the caller's job group, description and scheduler
 pool (pyspark.util.inheritable_thread_target), and every job of a run
 carries one job tag. On the first stage error the run cancels the jobs
-with that tag, waits for every started stage, unpersists what it cached
-and re-raises that error.
+with that tag, waits for every started stage and re-raises that
+error.
 
 Determinism: two runs on one fixture write byte-identical artifacts,
 summary.json and EDA_REPORT.md included. The adversarial GBT sorts its
@@ -60,9 +64,10 @@ categories) rows), the linear-screen sample (~90k rows x ~560 doubles,
 ~400 MB), the indicator sample (~225k rows x ~40 int32 columns, ~36 MB),
 the whale sample (~90k rows x the main numeric features in doubles, plus
 the rare targets) and the adversarial sample; every other stage brings
-back only moment matrices, per-column counts and result tables. The
-read profile aggregates 400 columns per pass, so the reference's
-2,241-column extra table takes six passes; the first builds its cache.
+back only moment matrices, per-column counts and result tables. A
+profile aggregates 400 columns per pass, so the reference's
+2,241-column extra table takes six passes, each scanning only its own
+columns; the executors hold no copy of any table.
 """
 
 from __future__ import annotations
@@ -147,13 +152,12 @@ def indicator_sums(sample: DataFrame, feats: list[str], targets: list[str]) -> S
     return SimpleNamespace(n=table.num_rows, ind=ind.sum(axis=0), iy=ind.T @ y, y=y.sum(axis=0))
 
 
-class _Table(NamedTuple):
-    """A read stage's result: the cached table and the profile taken in
-    the pass that built its cache."""
+class _Profile(NamedTuple):
+    """A profile stage's result: the table's row count and its non-null
+    values per column, in column order (empty when only rows are counted)."""
 
-    df: DataFrame
     rows: int
-    nonnull: dict[str, int]  # non-null values per column
+    nonnull: dict[str, int]
 
 
 @dataclass(frozen=True)
@@ -172,9 +176,15 @@ def _run_stages(
     the run's jobs (one job tag per run), wait for every started stage,
     and raise that error; stages not yet started never start."""
     names = [s.name for s in stages]
-    assert all(i in names[:k] for k, s in enumerate(stages) for i in s.inputs), (
-        "each stage may read only stages listed before it"
-    )
+    for k, stage in enumerate(stages):
+        # checked before any stage starts: a stage whose input never
+        # becomes a result would never start, and the run would wait forever
+        unknown = [i for i in stage.inputs if i not in names[:k]]
+        if unknown:
+            raise ValueError(
+                f"stage {stage.name!r} reads {unknown}: each stage may read only"
+                " stages listed before it"
+            )
     sc = spark.sparkContext
     tag = f"eda-pipeline-{uuid.uuid4().hex}"
     t0 = time.perf_counter()
@@ -223,7 +233,6 @@ def run_pipeline(
     tables_dir = os.path.join(out_dir, "public_tables")
     os.makedirs(tables_dir, exist_ok=True)
     id_col = "customer_id"
-    cached: list[DataFrame] = []
 
     def save(df: pd.DataFrame, name: str, index: bool = False) -> None:
         df.to_csv(os.path.join(tables_dir, name), index=index)
@@ -231,27 +240,27 @@ def run_pipeline(
     def features(df: DataFrame) -> list[str]:
         return [c for c in df.columns if c != id_col]
 
-    def cache(df: DataFrame) -> DataFrame:
-        cached.append(df)
-        return df.cache()
+    def read(table: str) -> DataFrame:
+        # a scan, not a cache: each stage re-reads the columns it needs
+        return spark.read.parquet(os.path.join(data_dir, f"{table}.parquet"))
 
-    def read(table: str) -> _Table:
-        df = cache(spark.read.parquet(os.path.join(data_dir, f"{table}.parquet")))
-        # the pass that builds the whole cache also counts the rows and each
-        # column's non-null values (one pass per 400 columns)
-        return _Table(df, *P.nonnull_counts(df))
+    def null_rates(profile: _Profile) -> pd.DataFrame:
+        cols = [c for c in profile.nonnull if c != id_col]
+        return P.null_rates_from_counts(profile.rows, profile.nonnull, cols)
 
-    def null_rates(table: _Table) -> pd.DataFrame:
-        return P.null_rates_from_counts(table.rows, table.nonnull, features(table.df))
+    # ---- target moments: ONE moments pass over the targets gives the
+    # positive counts (sums of 0/1 columns, exact in doubles below 2^53),
+    # the corr matrix and the co-occurrence counts ----
+    def target_moments(train_target: DataFrame) -> dict:
+        target_cols = features(train_target)
+        return S.cross_moments(train_target, target_cols, target_cols)
 
-    # ---- inventory + target prevalence (ref 76-116) ----
-    def inventory(train_main: _Table, test_main: _Table, train_target: _Table):
-        target_cols = features(train_target.df)
+    # ---- inventory + target prevalence (ref 76-116): no Spark job ----
+    def inventory(
+        train_target: DataFrame, m: dict, train_main: _Profile, test_main: _Profile
+    ):
+        target_cols = features(train_target)
         n_train, n_test = train_main.rows, test_main.rows
-        # ONE moments pass over the targets: positive counts here (sums of
-        # 0/1 columns, exact in doubles below 2^53), the corr matrix and
-        # co-occurrence counts in target_dependencies
-        m = S.cross_moments(train_target.df, target_cols, target_cols)
         positives = [int(v) for v in m["sum_x"]]
         target_df = pd.DataFrame(
             [
@@ -284,11 +293,11 @@ def run_pipeline(
 
     # ---- adversarial shift (ref 410-459): one Spark job collects the
     # hash sample; the GBT fits on the driver, beside the other stages ----
-    def adversarial_gbt(train_main: _Table, test_main: _Table) -> float:
+    def adversarial_gbt(train_main: DataFrame, test_main: DataFrame) -> float:
         return ML.adversarial_shift_auc(
-            train_main.df,
-            test_main.df,
-            feature_cols=features(train_main.df),
+            train_main,
+            test_main,
+            feature_cols=features(train_main),
             key_col=id_col,
             sample_pct=cfg.adv_sample_pct,
             seed=cfg.seed,
@@ -299,8 +308,8 @@ def run_pipeline(
 
     # ---- opened-targets histogram (ref 126-135): horizontal sum, no
     # driver row data ----
-    def opened_histogram(train_target: _Table, inv) -> None:
-        opened = train_target.df.select(
+    def opened_histogram(train_target: DataFrame, inv) -> None:
+        opened = train_target.select(
             horizontal_sum([F.col(t).cast("int") for t in inv.target_cols]).alias(
                 "opened_targets"
             )
@@ -429,7 +438,7 @@ def run_pipeline(
 
     # ---- missingness (ref 235-280): null rates from the reads' profiles,
     # no Spark job ----
-    def missingness(train_main: _Table, train_extra: _Table):
+    def missingness(train_main: _Profile, train_extra: _Profile):
         extra_miss = null_rates(train_extra)
         extra_miss_df = (
             extra_miss.rename(columns={"column": "feature"})
@@ -470,15 +479,15 @@ def run_pipeline(
     # brings (id, filled count, any-open label) to the driver, as the
     # reference does; AUC, point-biserial and deciles are exact integer
     # arithmetic there, equal to the Spark operators' (tests pin it) ----
-    def filled_count(train_extra: _Table, train_target: _Table):
-        open_cols = [c for c in features(train_target.df) if c != cfg.antagonist]
+    def filled_count(train_extra: DataFrame, train_target: DataFrame):
+        open_cols = [c for c in features(train_target) if c != cfg.antagonist]
         fill_df = (
-            train_extra.df.select(
+            train_extra.select(
                 F.col(id_col),
-                horizontal_not_null_count(features(train_extra.df)).alias("filled_extra_count"),
+                horizontal_not_null_count(features(train_extra)).alias("filled_extra_count"),
             )
             .join(
-                train_target.df.select(
+                train_target.select(
                     F.col(id_col),
                     (
                         horizontal_sum([F.col(c).cast("int") for c in open_cols]) > 0
@@ -518,7 +527,7 @@ def run_pipeline(
     # a binary score — AUC = 0.5 + (P(ind|pos) - P(ind|neg))/2 — so the
     # whole screen needs only integer sums over the sample: one Arrow
     # action brings its indicator and target columns to the driver ----
-    def indicator_auc(train_extra: _Table, train_target: _Table, inv, miss) -> None:
+    def indicator_auc(train_extra: DataFrame, train_target: DataFrame, inv, miss) -> None:
         target_df, extra_miss_df = inv.target_df, miss.extra
         pop_targets = (
             target_df[target_df["target"] != cfg.antagonist]
@@ -535,11 +544,11 @@ def run_pipeline(
         miss_auc_rows = []
         if moderate_feats:
             sample = hash_sample(
-                train_extra.df.select(id_col, *moderate_feats), id_col,
+                train_extra.select(id_col, *moderate_feats), id_col,
                 cfg.indicator_sample_pct, cfg.seed,
             ).join(
                 hash_sample(
-                    train_target.df.select(id_col, *pop_targets), id_col,
+                    train_target.select(id_col, *pop_targets), id_col,
                     cfg.indicator_sample_pct, cfg.seed,
                 ),
                 on=id_col,
@@ -581,9 +590,9 @@ def run_pipeline(
     # ---- cardinality + unseen categories (ref 369-405): ALL features in
     # one Spark action (a per-feature loop costs 4 full-table jobs per
     # column) ----
-    def cardinality_unseen(train_main: _Table, test_main: _Table):
-        cat_main = [c for c in features(train_main.df) if c.startswith("cat_feature_")]
-        prof = P.cardinality_unseen_profile(train_main.df, test_main.df, cat_main)
+    def cardinality_unseen(train_main: DataFrame, test_main: DataFrame):
+        cat_main = [c for c in features(train_main) if c.startswith("cat_feature_")]
+        prof = P.cardinality_unseen_profile(train_main, test_main, cat_main)
         card_df = prof[["feature", "train_nunique", "test_nunique"]].sort_values(
             "train_nunique", ascending=False
         )
@@ -597,10 +606,10 @@ def run_pipeline(
     # ---- wide linear screen (ref 463-594): one Spark action brings the
     # sampled 3-way join to the driver, the explicitly driver-scale screen
     # the reference also holds; mean impute and Pearson run in NumPy ----
-    def linear_screen(train_main: _Table, train_extra: _Table, train_target: _Table, miss):
-        main_features = features(train_main.df)
+    def linear_screen(train_main: DataFrame, train_extra: DataFrame, train_target: DataFrame, miss):
+        main_features = features(train_main)
         cat_main = [c for c in main_features if c.startswith("cat_feature_")]
-        target_cols = features(train_target.df)
+        target_cols = features(train_target)
         extra_dense = (
             miss.extra.sort_values("null_rate", ascending=True)
             .head(cfg.n_extra_dense)["feature"]
@@ -617,17 +626,17 @@ def run_pipeline(
             for c in main_features
         ]
         screen = (
-            hash_sample(train_main.df, id_col, cfg.screen_sample_pct, cfg.seed)
+            hash_sample(train_main, id_col, cfg.screen_sample_pct, cfg.seed)
             .select(F.col(id_col), *main_exprs)
             .join(
-                hash_sample(train_extra.df, id_col, cfg.screen_sample_pct, cfg.seed).select(
+                hash_sample(train_extra, id_col, cfg.screen_sample_pct, cfg.seed).select(
                     F.col(id_col), *[F.col(c).cast("double").alias(c) for c in extra_dense]
                 ),
                 on=id_col,
                 how="inner",
             )
             .join(
-                hash_sample(train_target.df, id_col, cfg.screen_sample_pct, cfg.seed).select(
+                hash_sample(train_target, id_col, cfg.screen_sample_pct, cfg.seed).select(
                     F.col(id_col), *[F.col(t).cast("double").alias(t) for t in target_cols]
                 ),
                 on=id_col,
@@ -736,21 +745,21 @@ def run_pipeline(
     # ---- whale screen (ref 598-669): one Arrow action brings the hash
     # sample to the driver, as the reference holds it; cutoffs,
     # contingencies and the exact Fisher tail run there ----
-    def whale(train_main: _Table, train_target: _Table, inv):
+    def whale(train_main: DataFrame, train_target: DataFrame, inv):
         target_df = inv.target_df
-        num_main = [c for c in features(train_main.df) if c.startswith("num_feature_")]
+        num_main = [c for c in features(train_main) if c.startswith("num_feature_")]
         rare_targets = target_df[target_df["positive_rate"] < cfg.rare_rate_threshold][
             "target"
         ].tolist()
         if rare_targets and num_main:
             whale_in = (
                 hash_sample(
-                    train_main.df.select(id_col, *num_main), id_col, cfg.whale_sample_pct,
+                    train_main.select(id_col, *num_main), id_col, cfg.whale_sample_pct,
                     cfg.seed,
                 )
                 .join(
                     hash_sample(
-                        train_target.df.select(id_col, *rare_targets), id_col,
+                        train_target.select(id_col, *rare_targets), id_col,
                         cfg.whale_sample_pct, cfg.seed,
                     ),
                     on=id_col,
@@ -805,14 +814,14 @@ def run_pipeline(
 
     # ---- summary + report (ref 674-905) ----
     def summary_report(
-        train_main: _Table, train_extra: _Table, inv, deps, cluster_eval_df,
+        train_main: DataFrame, train_extra: DataFrame, inv, deps, cluster_eval_df,
         fill, adv_auc: float, cat, linear, miss, whales, *_written_before,
     ) -> dict:
         # _written_before: the stages that write only artifacts; the report
         # waits for them, so a run that fails writes no report
         target_cols, target_df = inv.target_cols, inv.target_df
         n_train, n_test = inv.n_train, inv.n_test
-        n_main, n_extra = len(features(train_main.df)), len(features(train_extra.df))
+        n_main, n_extra = len(features(train_main)), len(features(train_extra))
         corr_anti, unseen_df, whale_sig = deps.corr_anti, cat.unseen, whales.sig
         n_lt_1 = int((target_df["positive_rate"] < 0.01).sum())
         n_lt_01 = int((target_df["positive_rate"] < 0.001).sum())
@@ -937,17 +946,29 @@ All tables in `public_tables/`; summary scalars in `public_tables/summary.json`.
     main, test, extra, target = (
         "read_train_main", "read_test_main", "read_train_extra", "read_train_target"
     )
+    main_profile, test_profile, extra_profile = (
+        "profile_train_main", "profile_test_main", "profile_train_extra"
+    )
     stages = [
         _Stage(main, lambda: read("train_main_features")),
         _Stage(test, lambda: read("test_main_features")),
         _Stage(extra, lambda: read("train_extra_features")),
         _Stage(target, lambda: read("train_target")),
-        _Stage("inventory_targets", inventory, (main, test, target)),
+        # count(1) plus count(c) per column, 400 columns per pass; the test
+        # table's non-null counts feed nothing, so it counts its rows only
+        _Stage(main_profile, lambda df: _Profile(*P.nonnull_counts(df)), (main,)),
+        _Stage(test_profile, lambda df: _Profile(*P.nonnull_counts(df, [])), (test,)),
+        _Stage(extra_profile, lambda df: _Profile(*P.nonnull_counts(df)), (extra,)),
+        _Stage("target_moments", target_moments, (target,)),
+        _Stage(
+            "inventory_targets", inventory,
+            (target, "target_moments", main_profile, test_profile),
+        ),
         _Stage("adversarial_gbt", adversarial_gbt, (main, test)),
         _Stage("opened_histogram", opened_histogram, (target, "inventory_targets")),
         _Stage("target_dependencies", target_dependencies, ("inventory_targets",)),
         _Stage("clustering", clustering, ("inventory_targets", "target_dependencies")),
-        _Stage("missingness", missingness, (main, extra)),
+        _Stage("missingness", missingness, (main_profile, extra_profile)),
         _Stage("filled_count", filled_count, (extra, target)),
         _Stage(
             "indicator_auc", indicator_auc,
@@ -965,11 +986,7 @@ All tables in `public_tables/`; summary scalars in `public_tables/summary.json`.
             ),
         ),
     ]
-    try:
-        results, spans = _run_stages(spark, stages)
-    finally:
-        for df in cached:
-            df.unpersist()
+    results, spans = _run_stages(spark, stages)
 
     # each stage's own wall time (not written into summary.json — its key
     # set is a locked artifact contract), for perf tracking; the report

@@ -18,6 +18,7 @@ from concurrent.futures import ThreadPoolExecutor
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from datafusion_cyberpolka_eda_spark.operators import dedup as D
 
@@ -1194,10 +1195,18 @@ def stream_crossmodal_dedup(
         # disjoint stores, so they run as two concurrent jobs from a
         # small pool (guide §2.6 — the second job back-fills cores the
         # first one's tail leaves idle); either failure raises out of
-        # the handler so the epoch still replays as one transaction
+        # the handler so the epoch still replays as one transaction.
+        # Each commit is wrapped per submission, so it runs with its own
+        # copy of the handler's local properties: its jobs keep the
+        # query's job group and cancel with q.stop() (a plain pool thread
+        # carries no job group)
         with ThreadPoolExecutor(max_workers=2) as pool:
-            fut_sigs = pool.submit(_commit_epoch, sigs, tsig_dir, eid)
-            fut_fps = pool.submit(_commit_epoch, fps, fp_dir, eid)
+            fut_sigs = pool.submit(
+                inheritable_thread_target(spark)(_commit_epoch), sigs, tsig_dir, eid
+            )
+            fut_fps = pool.submit(
+                inheritable_thread_target(spark)(_commit_epoch), fps, fp_dir, eid
+            )
             fut_sigs.result()
             fut_fps.result()
         _commit_epoch(_xm_union_edges(tpairs, ipairs), edges_dir, eid)

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 
 import numpy as np
 import pandas as pd
@@ -616,35 +617,41 @@ DRIVER_FINISHED_STAGES = (
 )
 
 
-def _fully_cached(spark, df) -> bool:
-    """Every partition of df's cache is stored (getRDDStorageInfo)."""
-    sc = spark.sparkContext
-    cached = spark._jsparkSession.sharedState().cacheManager().lookupCachedData(df._jdf)
-    rdd_id = cached.get().cachedRepresentation().cacheBuilder().cachedColumnBuffers().id()
-    info = [i for i in sc._jsc.sc().getRDDStorageInfo() if i.id() == rdd_id]
-    return len(info) == 1 and info[0].numCachedPartitions() == info[0].numPartitions()
+INPUT_TABLES = ("train_main_features", "test_main_features", "train_extra_features", "train_target")
+
+
+def _cached_entries(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().numCachedEntries()
 
 
 @pytest.fixture(scope="module")
 def stage_job_counts(spark, pipeline_run, tmp_path_factory):
     """A run over pipeline_run's fixture with each stage's jobs under a job
-    group of its own; returns {stage name: jobs it submitted}, plus
-    "<read stage>:fully_cached" for each read, checked when it returns."""
+    group of its own; returns {stage name: jobs it submitted}. After each
+    stage returns, the hook asserts that the session's cache manager holds
+    what it held before the run (nothing, run alone) and no input table:
+    no stage caches."""
     from dataclasses import replace
+
+    from pyspark import StorageLevel
 
     from datafusion_cyberpolka_eda_spark.pipeline import eda
 
     sc = spark.sparkContext
     run_stages = eda._run_stages
-    fully_cached = {}
+    cached_before = _cached_entries(spark)
+    # opened here: a read in a stage thread would count as that stage's job
+    inputs = [
+        spark.read.parquet(os.path.join(pipeline_run[0], f"{t}.parquet")) for t in INPUT_TABLES
+    ]
 
     def in_own_group(stage):
         def fn(*args):
             # the stage thread's own copy of the local properties
             sc.setJobGroup(f"eda-stage-{stage.name}", stage.name)
             out = stage.fn(*args)
-            if stage.name.startswith("read_"):
-                fully_cached[f"{stage.name}:fully_cached"] = _fully_cached(spark, out.df)
+            assert _cached_entries(spark) == cached_before, f"{stage.name} cached"
+            assert all(df.storageLevel == StorageLevel.NONE for df in inputs), stage.name
             return out
 
         return replace(stage, fn=fn)
@@ -661,12 +668,29 @@ def stage_job_counts(spark, pipeline_run, tmp_path_factory):
     _wait_for_job_events(spark)
     tracker = sc.statusTracker()
     return {
-        **{
-            name: len(tracker.getJobIdsForGroup(f"eda-stage-{name}"))
-            for name in summary["stage_spans"]
-        },
-        **fully_cached,
+        name: len(tracker.getJobIdsForGroup(f"eda-stage-{name}"))
+        for name in summary["stage_spans"]
     }
+
+
+class _GraphCaptured(Exception):
+    pass
+
+
+def _pipeline_graph(spark, data_dir: str, out_dir: str, monkeypatch) -> dict:
+    """{stage name: its inputs} as run_pipeline declares them; no stage runs."""
+    from datafusion_cyberpolka_eda_spark.pipeline import eda
+
+    graph = {}
+
+    def capture(spark_, stages):
+        graph.update({s.name: s.inputs for s in stages})
+        raise _GraphCaptured
+
+    monkeypatch.setattr(eda, "_run_stages", capture)
+    with pytest.raises(_GraphCaptured):
+        run_pipeline(spark, data_dir, out_dir, _test_config())
+    return graph
 
 
 def _read(directory: str, name: str) -> bytes:
@@ -677,8 +701,7 @@ def _read(directory: str, name: str) -> bytes:
 def _assert_inputs_uncached(spark, data_dir: str) -> None:
     from pyspark import StorageLevel
 
-    for table in ("train_main_features", "test_main_features", "train_extra_features",
-                  "train_target"):
+    for table in INPUT_TABLES:
         df = spark.read.parquet(os.path.join(data_dir, f"{table}.parquet"))
         assert df.storageLevel == StorageLevel.NONE, table
 
@@ -716,17 +739,77 @@ class TestStageGraph:
             "whale": 2,
         }
 
-    def test_reads_profile_and_fully_cache_their_tables(self, stage_job_counts):
-        # the null rates and row counts come from the reads' profiles:
-        # missingness makes no job, inventory only its moments pass (an
-        # aggregate: its shuffle stage and its result)
-        assert stage_job_counts["missingness"] == 0
-        assert stage_job_counts["inventory_targets"] == 2
-        # each read leaves its whole table cached, so no later stage
-        # rebuilds a cache
-        reads = [n for n in stage_job_counts if n.startswith("read_") and ":" not in n]
+    def test_scans_profile_in_their_own_stages_and_nothing_caches(self, stage_job_counts):
+        # the stage_job_counts hook found the cache manager unchanged after
+        # every stage; a read opens its scan with Spark's schema job only
+        reads = [n for n in stage_job_counts if n.startswith("read_")]
         assert len(reads) == 4
-        assert all(stage_job_counts[f"{n}:fully_cached"] for n in reads)
+        assert {n: stage_job_counts[n] for n in reads} == {n: 1 for n in reads}
+        # the null rates and row counts come from the profile stages, the
+        # positive counts from target_moments (each an aggregate: its
+        # shuffle stage and its result), so missingness and inventory make
+        # no job
+        assert {
+            n: stage_job_counts[n]
+            for n in (
+                "profile_train_main", "profile_test_main", "profile_train_extra",
+                "target_moments", "missingness", "inventory_targets",
+            )
+        } == {
+            "profile_train_main": 2,
+            "profile_test_main": 2,
+            "profile_train_extra": 2,
+            "target_moments": 2,
+            "missingness": 0,
+            "inventory_targets": 0,
+        }
+
+    def test_scan_only_stages_wait_for_no_profile(self, spark, pipeline_run, tmp_path, monkeypatch):
+        graph = _pipeline_graph(spark, pipeline_run[0], str(tmp_path), monkeypatch)
+        reads = {n for n, inputs in graph.items() if n.startswith("read_") and not inputs}
+        assert len(reads) == 4
+        for name in ("adversarial_gbt", "cardinality_unseen", "filled_count", "target_moments"):
+            assert graph[name] and set(graph[name]) <= reads, name
+        assert graph["missingness"] == ("profile_train_main", "profile_train_extra")
+        for name in ("linear_screen", "indicator_auc"):
+            assert "missingness" in graph[name], name
+        # the report still waits for every stage that writes an artifact
+        feeders = reads | {n for n in graph if n.startswith("profile_")} | {"target_moments"}
+        assert set(graph) - feeders - {"summary_report"} <= set(graph["summary_report"])
+
+    def test_graph_check_rejects_unknown_and_forward_inputs(self, spark):
+        from datafusion_cyberpolka_eda_spark.pipeline.eda import _run_stages, _Stage
+
+        ran = []
+        a = _Stage("a", lambda: ran.append("a"))
+        with pytest.raises(ValueError, match=re.escape("'b' reads ['missing']")):
+            _run_stages(spark, [a, _Stage("b", lambda _: ran.append("b"), ("missing",))])
+        with pytest.raises(ValueError, match=re.escape("'b' reads ['c']")):
+            _run_stages(
+                spark,
+                [a, _Stage("b", lambda _: ran.append("b"), ("c",)), _Stage("c", lambda: 1)],
+            )
+        assert ran == []  # checked before any stage starts
+
+    def test_graph_check_survives_python_O(self):
+        # an assert would be stripped under -O, and a stage whose input
+        # never exists would leave the run waiting forever
+        import subprocess
+        import sys
+
+        code = (
+            "from datafusion_cyberpolka_eda_spark.pipeline.eda import _run_stages, _Stage\n"
+            "try:\n"
+            "    _run_stages(None, [_Stage('b', print, ('missing',))])\n"
+            "except ValueError:\n"
+            "    print('rejected')\n"
+        )
+        root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+        out = subprocess.run(
+            [sys.executable, "-O", "-c", code], cwd=root, capture_output=True, text=True,
+            timeout=120,
+        )
+        assert out.stdout.strip() == "rejected", out.stderr
 
     def test_stage_times_and_spans(self, grouped_rerun):
         summary = grouped_rerun[1]

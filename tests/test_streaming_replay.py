@@ -400,6 +400,51 @@ class TestAssetIngestReplay:
             "id_a", "id_b"
         ).distinct().count()
 
+    def test_crossmodal_commits_keep_the_query_job_group(
+        self, spark, sf_dir, tmp_path, monkeypatch
+    ):
+        """j24 runs two of its three commits on pool threads: each must
+        run under the handler thread's job group (the query's run id),
+        or q.stop() cannot cancel its jobs."""
+        from datafusion_cyberpolka_eda_spark.registry.llm_multimodal import (
+            _mm_fp_store,
+            _xm_text_store,
+        )
+
+        sc = spark.sparkContext
+        handler_groups, commit_groups = [], []
+        real_deliver, real_commit = SD._deliver, SD._commit_epoch
+
+        def recording_deliver(handle):
+            def recorded(batch_df, epoch_id):
+                handler_groups.append(sc.getLocalProperty("spark.jobGroup.id"))
+                handle(batch_df, epoch_id)
+
+            return real_deliver(recorded)
+
+        def recording_commit(df, root, epoch_id):
+            commit_groups.append(sc.getLocalProperty("spark.jobGroup.id"))
+            real_commit(df, root, epoch_id)
+
+        monkeypatch.setattr(SD, "_deliver", recording_deliver)
+        monkeypatch.setattr(SD, "_commit_epoch", recording_commit)
+        cutoff, sig_path = _xm_text_store(spark, sf_dir)
+        _, fp_path = _mm_fp_store(spark, sf_dir, "image")
+        docs = load_table(spark, sf_dir, "documents")
+        SD.stream_crossmodal_dedup(
+            spark,
+            docs.filter(F.col("doc_id") >= cutoff),
+            sig_path,
+            fp_path,
+            str(tmp_path / "scratch"),
+            cutoff,
+        )
+        assert handler_groups
+        assert None not in handler_groups
+        assert len(set(handler_groups)) == 1  # one query, one run id
+        # three commits per epoch, two of them on pool threads
+        assert commit_groups == handler_groups[:1] * (3 * len(handler_groups))
+
     def test_domain_mixture_replay(
         self, spark, sf_dir, tmp_path, replay_every_epoch
     ):
