@@ -148,11 +148,13 @@ def main() -> None:
     # Also loads the DataSketches KLL/theta JVM classes (lazy on first
     # use, like the LSH classes above).
     try:
-        from datafusion_cyberpolka_eda_spark.registry.llm import (
+        from datafusion_cyberpolka_eda_spark.registry.llm import _dedup_gate_base
+        from datafusion_cyberpolka_eda_spark.registry.llm_similarity import (
             _ann_exact_top5,
-            _dedup_gate_base,
-            _incremental_store,
             _ivf_pq_store,
+        )
+        from datafusion_cyberpolka_eda_spark.registry.llm_incremental import (
+            _incremental_store,
         )
 
         _dedup_gate_base(spark, sf_dir)

@@ -120,12 +120,3 @@ def sqdists_literal_q(vec_col: str, mat_q: Sequence[Iterable[int]]) -> Column:
         f"aggregate(zip_with(`{vec_col}`, _cq, (_x, _c) -> (_x - _c) * (_x - _c)), "
         f"0L, (_acc, _v) -> _acc + _v))"
     )
-
-
-def wdot_literal_q(vec_col: str, w: Iterable[int]) -> Column:
-    """Exact integer dot(row[vec_col], w) — the logreg superstep margin
-    arithmetic (x*w summed as int64)."""
-    return F.expr(
-        f"aggregate(zip_with(`{vec_col}`, {sql_long_array(w)}, "
-        f"(_x, _w) -> _x * _w), 0L, (_acc, _v) -> _acc + _v)"
-    )

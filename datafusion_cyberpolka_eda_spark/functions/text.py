@@ -48,19 +48,6 @@ def shingles(col: str | Column, n: int = 3) -> Column:
     return acc
 
 
-def avg_word_length(col: str | Column) -> Column:
-    t = tokens(col)
-    total = F.aggregate(t, F.lit(0), lambda acc, w: acc + F.length(w))
-    return total.cast("double") / F.size(t)
-
-
-def punct_ratio(col: str | Column) -> Column:
-    """Share of punctuation characters — a quality-score component."""
-    c = F.col(col) if isinstance(col, str) else col
-    kept = F.length(F.regexp_replace(c, r"[^\.,;:!\?'\"()\[\]{}-]", ""))
-    return kept.cast("double") / F.greatest(F.length(c), F.lit(1))
-
-
 # Minimal marker-word sets for the language-ID heuristic. On real corpora
 # these would be the top character n-grams / stopwords per language.
 LANG_MARKERS: dict[str, list[str]] = {

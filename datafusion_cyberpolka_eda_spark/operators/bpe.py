@@ -123,17 +123,6 @@ def bpe_train(
     return merges, toks
 
 
-def bpe_encode_with_merges(
-    toks: DataFrame, merges: list[tuple[int, str, str, int]],
-) -> DataFrame:
-    """Apply an already-learned merge table to a token-array DataFrame in
-    learned order — encode new text with a trained tokenizer (no counting
-    passes; k map-side folds, zero shuffles)."""
-    for _step, a, b, _c in merges:
-        toks = toks.withColumn("toks", greedy_merge_expr("toks", a, b))
-    return toks
-
-
 def bpe_train_merges(
     docs: DataFrame, text_col: str, k: int = 5
 ) -> list[tuple[int, str, str, int]]:

@@ -672,18 +672,6 @@ def incremental_minhash_pairs(
     )
 
 
-def updated_minhash_store(
-    store_sigs: DataFrame, new_sigs: DataFrame
-) -> DataFrame:
-    """The day-N+1 store: old store plus the increment's signature rows
-    (schemas are identical minhash_signatures_portable outputs; union by
-    name so column order in a reloaded store can't silently mispair).
-    Persist the result and tomorrow's increment joins against it — the
-    store only ever grows by |increment| rows, and no old text is ever
-    re-shingled."""
-    return store_sigs.unionByName(new_sigs)
-
-
 def fingerprint_near_pairs(
     fp: DataFrame,
     max_hamming: int = 3,

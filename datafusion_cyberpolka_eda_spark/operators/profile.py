@@ -78,31 +78,6 @@ def null_rates_from_counts(rows: int, nonnull: dict[str, int], cols: list[str]) 
     )
 
 
-def missingness_bands(
-    null_rate_df: DataFrame,
-    bands: list[tuple[str, float, float]] | None = None,
-    rate_col: str = "null_rate",
-) -> DataFrame:
-    """Band counts over a null-rate profile (operator D6; ref:
-    public_eda_pipeline.py:269-280). One conditional-agg pass."""
-    if bands is None:
-        bands = [
-            ("gt_99", 0.99, 1.01),
-            ("p95_99", 0.95, 0.99),
-            ("p50_95", 0.50, 0.95),
-            ("p10_50", 0.10, 0.50),
-            ("p0_10", 1e-12, 0.10),
-            ("zero", -1.0, 1e-12),
-        ]
-    aggs = [
-        F.sum(
-            ((F.col(rate_col) > F.lit(lo)) & (F.col(rate_col) <= F.lit(hi))).cast("long")
-        ).alias(name)
-        for name, lo, hi in bands
-    ]
-    return null_rate_df.agg(*aggs)
-
-
 def distinct_counts(df: DataFrame, cols: list[str], exact: bool = True) -> DataFrame:
     """Per-column distinct count, long-form (column, n_distinct).
 

@@ -1151,22 +1151,66 @@ def knn_join(
     )
 
 
-# ---- distributed Lloyd k-means (r8 verdict task 4) ----
+# ---- integer-embedding format: the l46 Gram discipline, shared by the
+# Lloyd trainer, SemDeDup, the exact k-NN truth and the mixture stores ----
 
-LLOYD_QSCALE = 100000  # the l46 Gram discipline: floor(x * 1e5) int64
+QSCALE = 100000  # components are floor(x * QSCALE) cast to int64
 
 
-def _lloyd_q_vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """(id, q array<long>): components floor-quantized to LLOYD_QSCALE
+def quantize_q(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(id, q array<long>): components floor-quantized to QSCALE
     integers, the same quantization l46's Gram state uses — every
-    distributed sum and distance below is exact integer arithmetic,
-    order-independent under any partitioning."""
+    distributed sum, distance and dot over ``q`` is exact integer
+    arithmetic, order-independent under any partitioning, and the
+    oracles replay it as CAST(FLOOR(x * 100000.0) AS BIGINT)."""
     return df.select(
         F.col(id_col).alias("id"),
         F.transform(
-            vec_col, lambda x: F.floor(x * F.lit(100000.0)).cast("long")
+            vec_col, lambda x: F.floor(x * F.lit(float(QSCALE))).cast("long")
         ).alias("q"),
     )
+
+
+def with_n2(df: DataFrame) -> DataFrame:
+    """``df`` plus ``n2`` = Σ q_i² over its ``q`` column, exact int64."""
+    return df.withColumn(
+        "n2",
+        F.aggregate(
+            F.transform("q", lambda x: x * x),
+            F.lit(0).cast("long"),
+            lambda acc, v: acc + v,
+        ),
+    )
+
+
+def int_dot(a: str, b: str) -> Column:
+    """Σ a_i * b_i over two array<long> columns, exact int64."""
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x * y),
+        F.lit(0).cast("long"),
+        lambda acc, v: acc + v,
+    )
+
+
+def qnorm_product() -> Column:
+    """sqrt(n2_a) * sqrt(n2_b) in double over a pair row's ``n2_a`` and
+    ``n2_b`` columns: the norm product of the exact-integer cosine.
+    Callers keep their own operation order around it — the ball test
+    compares dot >= tau * product, the l68 score rounds dot / product —
+    because a multiply and a divide round differently and the oracles
+    replay each as written."""
+    return F.sqrt(F.col("n2_a").cast("double")) * F.sqrt(F.col("n2_b").cast("double"))
+
+
+def in_qball(tau: float) -> Column:
+    """The exact-integer cosine ball test on a pair row carrying
+    ``dot``, ``n2_a`` and ``n2_b``: dot > 0 and dot >= tau * product."""
+    return (F.col("dot") > 0) & (
+        F.col("dot").cast("double") >= F.lit(tau) * qnorm_product()
+    )
+
+
+# ---- distributed Lloyd k-means (r8 verdict task 4) ----
 
 
 def _lloyd_dists(cent_q) -> Column:
@@ -1200,14 +1244,14 @@ def lloyd_kmeans_distributed(
                 (md5_hash64(id), id) key — deterministic, engine-
                 replayable, and hash-spread across the data;
       assign  : argmin over exact INTEGER squared distances (components
-                floor-quantized at LLOYD_QSCALE), ties to the smallest
+                floor-quantized at QSCALE), ties to the smallest
                 centroid index — no float enters the loop, so the
                 assignment is bit-stable under any partitioning AND
                 replayable relationally by the DuckDB oracle;
       update  : per-(cluster, dim) exact int64 sums via one
                 posexplode+groupBy per superstep (map-side combined;
                 the driver only ever holds k*dim integers), new
-                component = floor(sum / n) back at LLOYD_QSCALE —
+                component = floor(sum / n) back at QSCALE —
                 floor(exact_int / exact_int) through one correctly-
                 rounded IEEE division, identical in both engines;
                 empty clusters keep their previous centroid.
@@ -1227,7 +1271,7 @@ def lloyd_kmeans_distributed(
     sample trainer this complements), SURVEY §2 L ANN family."""
     # lazy: the seed TakeOrdered in lloyd_kmeans_q is the first consumer
     # and computes every partition — no dedicated checkpoint job
-    q = _lloyd_q_vectors(df, id_col, vec_col).localCheckpoint(eager=False)
+    q = quantize_q(df, id_col, vec_col).localCheckpoint(eager=False)
     cent = lloyd_kmeans_q(q, k=k, iters=iters)
     stats = (
         q.withColumn("dists", _lloyd_dists(cent))
@@ -1308,16 +1352,3 @@ def lloyd_assign_q(q: DataFrame, cent_q) -> DataFrame:
         .cast("long")
         .alias("cluster"),
     )
-
-
-def lloyd_centroids_unit(cent_q) -> list[list[float]]:
-    """Quantized Lloyd centroids -> L2-normalized float centroids in the
-    shape ivf_pq_index / assign_cells_literal take — the wiring that
-    makes the distributed trainer a drop-in alternative to
-    train_centroids_on_sample."""
-    import numpy as np
-
-    c = np.asarray(cent_q, dtype=np.float64) / float(LLOYD_QSCALE)
-    n = np.linalg.norm(c, axis=1, keepdims=True)
-    n[n == 0] = 1.0
-    return (c / n).tolist()

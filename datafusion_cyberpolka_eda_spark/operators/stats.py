@@ -363,11 +363,6 @@ def rank_auc(labels: np.ndarray, scores: np.ndarray) -> float:
     return float((pos * (cum_neg_below + 0.5 * neg)).sum() / (n_pos * n_neg))
 
 
-def effective_auc_col(auc: F.Column) -> F.Column:
-    """max(auc, 1-auc) (operator E8; ref line 354)."""
-    return F.greatest(auc, 1 - auc)
-
-
 # ---------------------------------------------------------------------------
 # Quantiles and deciles (E10/E11)
 # ---------------------------------------------------------------------------

@@ -126,11 +126,15 @@ def _round_cols(df: DataFrame, cols: list[str], scale: int = 6) -> DataFrame:
 
 _REPO_ROOT = Path(__file__).resolve().parents[2]
 
-# Query groups self-register on import (order defines display order).
+# Query groups self-register on import (order defines display order and
+# plan_sweep_order's tie-breaks, so the LLM families stay ahead of events).
 from datafusion_cyberpolka_eda_spark.registry import core  # noqa: E402,F401
 from datafusion_cyberpolka_eda_spark.registry import stats  # noqa: E402,F401
-from datafusion_cyberpolka_eda_spark.registry import events  # noqa: E402,F401
 from datafusion_cyberpolka_eda_spark.registry import llm  # noqa: E402,F401
+from datafusion_cyberpolka_eda_spark.registry import llm_multimodal  # noqa: E402,F401
+from datafusion_cyberpolka_eda_spark.registry import llm_similarity  # noqa: E402,F401
+from datafusion_cyberpolka_eda_spark.registry import llm_incremental  # noqa: E402,F401
+from datafusion_cyberpolka_eda_spark.registry import events  # noqa: E402,F401
 from datafusion_cyberpolka_eda_spark.registry import extra  # noqa: E402,F401
 from datafusion_cyberpolka_eda_spark.registry import formats  # noqa: E402,F401
 from datafusion_cyberpolka_eda_spark.registry import scale  # noqa: E402,F401

@@ -10,7 +10,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from datafusion_cyberpolka_eda_spark.registry import _dec_sum, register
-from datafusion_cyberpolka_eda_spark.registry import llm as _llm
+from datafusion_cyberpolka_eda_spark.registry.llm_incremental import _L39_ORACLE
 from datafusion_cyberpolka_eda_spark.sources.catalog import load_table
 from datafusion_cyberpolka_eda_spark.streaming.events import (
     session_stats,
@@ -376,7 +376,7 @@ def _j15_oracle() -> str:
     # the streaming path must reproduce the batch incremental answer,
     # which equals the full-corpus banded pair set restricted to >= 1
     # new id — l31's oracle, verbatim
-    from datafusion_cyberpolka_eda_spark.registry.llm import _l31_oracle
+    from datafusion_cyberpolka_eda_spark.registry.llm_incremental import _l31_oracle
 
     return _l31_oracle()
 
@@ -394,7 +394,7 @@ def j15_stream_incremental_dedup(
     answer — l31's full-corpus-replay oracle, so the epoch-at-a-time
     path is value-hash-checked against from-scratch semantics."""
 
-    from datafusion_cyberpolka_eda_spark.registry.llm import (
+    from datafusion_cyberpolka_eda_spark.registry.llm_incremental import (
         _incremental_store,
     )
     from datafusion_cyberpolka_eda_spark.sources.catalog import load_table
@@ -458,7 +458,7 @@ def j16_stream_quality_routing(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _j17_oracle() -> str:
     # sequential epoch takedowns must reproduce the one-shot batch
     # answer — l38's from-scratch replay oracle, verbatim
-    from datafusion_cyberpolka_eda_spark.registry.llm import _l38_oracle
+    from datafusion_cyberpolka_eda_spark.registry.llm_incremental import _l38_oracle
 
     return _l38_oracle()
 
@@ -475,7 +475,7 @@ def j17_stream_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
     store equals the one-shot batch takedown — so the rollup is
     value-hash-checked against l38's from-scratch DuckDB replay."""
 
-    from datafusion_cyberpolka_eda_spark.registry.llm import (
+    from datafusion_cyberpolka_eda_spark.registry.llm_incremental import (
         _incremental_cc_store,
         _incremental_store,
     )
@@ -522,7 +522,7 @@ def j18_stream_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream_chunking(spark, docs, scratch)
 
 
-@register("j19_stream_psi_drift", _llm._L39_ORACLE)
+@register("j19_stream_psi_drift", _L39_ORACLE)
 def j19_stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming PSI drift monitor — l39's distribution check fed by the
     ingest queue: day-1 reference counts computed once, the day-2
@@ -548,7 +548,7 @@ def _j20_oracle() -> str:
     # the streaming asset path must reproduce the batch incremental
     # answer, which equals the full-corpus banded pair set restricted
     # to >= 1 new asset — l66's oracle, verbatim
-    from datafusion_cyberpolka_eda_spark.registry.llm import (
+    from datafusion_cyberpolka_eda_spark.registry.llm_multimodal import (
         _L58_CTES,
         _mm_incremental_oracle,
     )
@@ -571,7 +571,7 @@ def j20_stream_asset_ingest_dedup(
     full-corpus-replay oracle — so the epoch-at-a-time decode+dedup
     path is value-hash-checked against from-scratch semantics."""
 
-    from datafusion_cyberpolka_eda_spark.registry.llm import _mm_fp_store
+    from datafusion_cyberpolka_eda_spark.registry.llm_multimodal import _mm_fp_store
     from datafusion_cyberpolka_eda_spark.sources.catalog import load_table
     from datafusion_cyberpolka_eda_spark.streaming.documents import (
         stream_incremental_fingerprint_dedup,
@@ -704,6 +704,7 @@ def j23_stream_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from-scratch DuckDB replay is the oracle."""
     from datafusion_cyberpolka_eda_spark.registry.llm_similarity import (
         SEMDEDUP_TWIN_OFFSET,
+        _semdedup_increment,
         _semdedup_store,
     )
     from datafusion_cyberpolka_eda_spark.sources.catalog import load_table
@@ -713,23 +714,7 @@ def j23_stream_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     cutoff, cent, day1_path = _semdedup_store(spark, sf_dir)
-    day1 = spark.read.parquet(day1_path)
-    day2q = emb.filter(F.col("vec_id") >= cutoff).select(
-        F.col("vec_id").alias("id"),
-        F.transform(
-            "embedding", lambda x: F.floor(x * F.lit(100000.0)).cast("long")
-        ).alias("q"),
-    )
-    bases = day1.select("id", "q").unionByName(day2q)
-    twins = bases.filter(F.col("id") % 9 == 4).select(
-        (F.col("id") + F.lit(SEMDEDUP_TWIN_OFFSET)).alias("id"),
-        F.transform(
-            "q",
-            lambda x, i: x
-            + ((F.col("id") * 31 + i.cast("long") * 17) % 7 - 3).cast("long"),
-        ).alias("q"),
-    )
-    newq = day2q.unionByName(twins)
+    newq = _semdedup_increment(emb, spark.read.parquet(day1_path), cutoff)
     scratch = _scratch_dir(spark, "j23", sf_dir)
     return stream_semdedup(
         spark, newq, cent, day1_path, scratch, SEMDEDUP_TWIN_OFFSET

@@ -4541,113 +4541,3 @@ def l81_dsir_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy(F.desc("dsir_weight"), F.asc("doc_id"))
         .limit(10)
     )
-
-
-# ---- re-export facade (r10 split): every name that moved to a
-# family module stays importable from registry.llm so external
-# importers (registry/events.py, streaming, tests, tools) are
-# untouched. Aliases share the SAME objects (store caches are
-# mutated in place), so cache clearing stays consistent. ----
-from datafusion_cyberpolka_eda_spark.registry.llm_base import (  # noqa: F401,E402
-    _table_fingerprint,
-)
-from datafusion_cyberpolka_eda_spark.registry.llm_multimodal import (  # noqa: F401,E402
-    _L58_CTES,
-    _L58_ORACLE,
-    _L61_ORACLE,
-    _L62_CTES,
-    _L62_ORACLE,
-    _L63_ORACLE,
-    _MM_FP_STORE_CACHE,
-    _MULTIMODAL_ORACLE,
-    _mm_fp_store,
-    _mm_incremental_oracle,
-    l58_image_phash_neardup,
-    l61_image_dedup_pipeline,
-    l62_audio_fingerprint_neardup,
-    l63_audio_dedup_pipeline,
-    l66_incremental_image_neardup,
-    l67_incremental_audio_neardup,
-    l9_multimodal_features,
-    l9b_multimodal_ppm_decode,
-    l9c_multimodal_frame_sample,
-    l9d_multimodal_wav_decode,
-    l9e_multimodal_resize,
-)
-from datafusion_cyberpolka_eda_spark.registry.llm_similarity import (  # noqa: F401,E402
-    GRAM_QSCALE,
-    SEMDEDUP_TWIN_OFFSET,
-    _ANN_TRUTH_CACHE,
-    _COSINE_TOPK_ORACLE,
-    _GRAM_STORE_CACHE,
-    _IVF_STORE_CACHE,
-    _L41_ORACLE,
-    _L60_ORACLE,
-    _L68B_ORACLE,
-    _L68_CTES,
-    _L68_ORACLE,
-    _SEM_STORE_CACHE,
-    _ann_exact_top5,
-    _gram_store,
-    _ivf_pq_store,
-    _l59_oracle,
-    _l65_oracle,
-    _semantic_store,
-    embedding_gram_partials,
-    l10_embedding_neardup,
-    l16_embedding_quantize_int8,
-    l41_incremental_embedding_dedup,
-    l46_embedding_covariance,
-    l48_sparse_cosine_pairs,
-    l51_incremental_covariance,
-    l57_semantic_drift,
-    l59_distributed_kmeans,
-    l60_semantic_decontamination,
-    l65_semdedup,
-    l68_knn_join,
-    l68b_knn_join_recall,
-    l7_cosine_topk,
-    l8_ann_lsh_neighbors,
-    l8b_ann_ivf_neighbors,
-    l8c_ann_recall_bound,
-    l8d_ann_lsh_portable,
-    l8e_ann_ivf_pq,
-    l8f_ann_ivf_pq_incremental,
-    l8g_ann_ivf_pq_takedown,
-    l8h_ann_ivf_pq_rotated,
-)
-from datafusion_cyberpolka_eda_spark.registry.llm_incremental import (  # noqa: F401,E402
-    _DECON_STORE_CACHE,
-    _INCR_CC_CACHE,
-    _INCR_STORE_CACHE,
-    _INCR_SURV_CACHE,
-    _L32_CUTOFF_FRAC,
-    _L32_ORACLE,
-    _L39_ORACLE,
-    _MIXTURE_STORE_CACHE,
-    _decon_store,
-    _incremental_cc_store,
-    _incremental_store,
-    _incremental_surv_store,
-    _l31_oracle,
-    _l33_oracle,
-    _l34_oracle,
-    _l37_oracle,
-    _l38_oracle,
-    _l40_oracle,
-    _mixture_store,
-    _pick_survivors,
-    _takedown_ledger_rows,
-    l31_incremental_dedup,
-    l32_incremental_decontamination,
-    l33_incremental_components,
-    l34_incremental_survivors,
-    l35_cluster_safe_split,
-    l36_incremental_mixture_refresh,
-    l37_incremental_pipeline,
-    l38_takedown_propagation,
-    l39_psi_drift,
-    l40_takedown_pipeline,
-    psi_feature_buckets,
-    psi_from_counts,
-)

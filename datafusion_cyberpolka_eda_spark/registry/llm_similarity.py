@@ -776,15 +776,12 @@ def l41_incremental_embedding_dedup(spark: SparkSession, sf_dir: str) -> DataFra
 # ---- distributed embedding covariance / Gram matrix (l46) ----
 
 
-GRAM_QSCALE = 100_000  # component quantization scale shared with the oracles
-
-
 def embedding_gram_partials(emb: DataFrame, dim: int = 64) -> DataFrame:
     """Per-Arrow-batch Gram partials over an `embedding array<float>`
     column: each batch yields ONE row holding the flattened
     [count, column-sums (dim), X^T X (dim*dim)] statistics vector
     (length 1 + dim + dim^2), computed as an int64 numpy matmul over
-    FLOOR-quantized components q = floor(x * GRAM_QSCALE).
+    FLOOR-quantized components q = floor(x * SIM.QSCALE).
 
     This is THE distributed-linear-algebra shape for PCA / whitening /
     linear probes at 100 TB: raw vectors never shuffle — every executor
@@ -802,13 +799,14 @@ def embedding_gram_partials(emb: DataFrame, dim: int = 64) -> DataFrame:
     import pandas as pd
 
     width = 1 + dim + dim * dim
+    scale = float(SIM.QSCALE)  # bound here: the closure ships to workers
 
     def gen(it):
         for pdf in it:
             if len(pdf) == 0:
                 continue
             M = np.stack(pdf["embedding"].to_numpy()).astype(np.float64)
-            Q = np.floor(M * float(GRAM_QSCALE)).astype(np.int64)
+            Q = np.floor(M * scale).astype(np.int64)
             st = np.empty(width, dtype=np.int64)
             st[0] = len(Q)
             st[1 : 1 + dim] = Q.sum(axis=0)
@@ -902,7 +900,7 @@ def l46_embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.col("gij") / F.col("n")
                     - (F.col("si") / F.col("n")) * (F.col("sj") / F.col("n"))
                 )
-                / F.lit(float(GRAM_QSCALE) * float(GRAM_QSCALE))
+                / F.lit(float(SIM.QSCALE) * float(SIM.QSCALE))
             ).alias("cov"),
         )
     )
@@ -1216,7 +1214,7 @@ def l8h_ann_ivf_pq_rotated(spark: SparkSession, sf_dir: str) -> DataFrame:
         [[vals[1 + dim + i * dim + j] for j in range(dim)] for i in range(dim)],
         dtype=np.float64,
     )
-    cov = (G / n - np.outer(s / n, s / n)) / float(GRAM_QSCALE) ** 2
+    cov = (G / n - np.outer(s / n, s / n)) / float(SIM.QSCALE) ** 2
     R = SIM.pca_rotation(cov)
     orth = bool(np.max(np.abs(R @ R.T - np.eye(dim))) < 1e-9)
 
@@ -1337,7 +1335,6 @@ def l57_semantic_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     union+sum. Ref parity: north-star drift/monitoring extension
     (SURVEY §2 L)."""
     dim = 64
-    cutq = GRAM_QSCALE
     emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("vec_id"), "source"
@@ -1356,7 +1353,7 @@ def l57_semantic_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             "day1",
             "i",
-            F.floor(F.col("x").cast("double") * F.lit(float(cutq)))
+            F.floor(F.col("x").cast("double") * F.lit(float(SIM.QSCALE)))
             .cast("bigint")
             .alias("q"),
         )
@@ -1614,7 +1611,7 @@ def l79_domain_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     from datafusion_cyberpolka_eda_spark.functions.hashing import md5_hash64
 
     emb = spread(load_table(spark, sf_dir, "embeddings"))
-    q = SIM._lloyd_q_vectors(emb, "vec_id", "embedding").localCheckpoint(
+    q = SIM.quantize_q(emb, "vec_id", "embedding").localCheckpoint(
         eager=False  # Lloyd's seed TakeOrdered materializes it
     )
     cent = SIM.lloyd_kmeans_q(q, k=8, iters=3)
@@ -1936,17 +1933,9 @@ def _mixture_store(spark: SparkSession, sf_dir: str) -> tuple:
     emb = load_table(spark, sf_dir, "embeddings")
     max_id = emb.agg(F.max("vec_id")).collect()[0][0]
     cutoff = int(0.8 * (max_id + 1))
-    q1 = (
-        emb.filter(F.col("vec_id") < cutoff)
-        .select(
-            F.col("vec_id").alias("id"),
-            F.transform(
-                "embedding",
-                lambda x: F.floor(x * F.lit(100000.0)).cast("long"),
-            ).alias("q"),
-        )
-        .localCheckpoint(eager=False)  # Lloyd's seed TakeOrdered materializes it
-    )
+    q1 = SIM.quantize_q(
+        emb.filter(F.col("vec_id") < cutoff), "vec_id", "embedding"
+    ).localCheckpoint(eager=False)  # Lloyd's seed TakeOrdered materializes it
     cent = SIM.lloyd_kmeans_q(q1, k=8, iters=3)
     docs = load_table(spark, sf_dir, "documents")
     keyed = (
@@ -2300,11 +2289,8 @@ def l79c_domain_mixture_incremental(
     cutoff, cent, rows_path, aggs_path = _mixture_store(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents")
-    q2 = emb.filter(F.col("vec_id") >= cutoff).select(
-        F.col("vec_id").alias("id"),
-        F.transform(
-            "embedding", lambda x: F.floor(x * F.lit(100000.0)).cast("long")
-        ).alias("q"),
+    q2 = SIM.quantize_q(
+        emb.filter(F.col("vec_id") >= cutoff), "vec_id", "embedding"
     )
     inc_keyed = (
         SIM.lloyd_assign_q(q2, cent)
@@ -2456,13 +2442,10 @@ def l79d_domain_mixture_takedown(
     cutoff, cent, rows_path, aggs_path = _mixture_store(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     docs = load_table(spark, sf_dir, "documents")
-    qr = emb.filter(
-        (F.col("vec_id") < cutoff) & (F.col("vec_id") % 7 == 3)
-    ).select(
-        F.col("vec_id").alias("id"),
-        F.transform(
-            "embedding", lambda x: F.floor(x * F.lit(100000.0)).cast("long")
-        ).alias("q"),
+    qr = SIM.quantize_q(
+        emb.filter((F.col("vec_id") < cutoff) & (F.col("vec_id") % 7 == 3)),
+        "vec_id",
+        "embedding",
     )
     rm_keyed = (
         SIM.lloyd_assign_q(qr, cent)
@@ -2655,12 +2638,7 @@ def l60_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"l60 oracle assumes embedding dim 64, table has {dim}"
         )
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang")
-    q = emb.select(
-        F.col("vec_id").alias("id"),
-        F.transform(
-            "embedding", lambda x: F.floor(x * F.lit(100000.0)).cast("long")
-        ).alias("q"),
-    ).localCheckpoint(eager=False)
+    q = SIM.quantize_q(emb, "vec_id", "embedding").localCheckpoint(eager=False)
 
     planted = q.filter(F.col("id") % 23 == 5).select(
         "id",
@@ -2691,17 +2669,13 @@ def l60_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         "id",
         "ev",
         "ekind",
-        F.aggregate(
-            F.zip_with("ev", "ev", lambda a, b: a * b),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).alias("nb"),
+        SIM.int_dot("ev", "ev").alias("n2_b"),
     ).localCheckpoint(eager=False)
     ev_unit = nb.select(
         "id",
         F.transform(
             "ev",
-            lambda x: x.cast("double") / F.sqrt(F.col("nb").cast("double")),
+            lambda x: x.cast("double") / F.sqrt(F.col("n2_b").cast("double")),
         ).alias("unit_arr"),
     )
     ev_cells = SIM.assign_cells_literal(ev_unit, centers, n_probe=2)
@@ -2712,39 +2686,18 @@ def l60_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("eid", "cid2")
         .distinct()
     )
-    na = q.select(
-        F.col("id").alias("cid2"),
-        F.aggregate(
-            F.zip_with("q", "q", lambda a, b: a * b),
-            F.lit(0).cast("long"),
-            lambda acc, x: acc + x,
-        ).alias("na"),
-    )
+    na = q.select(F.col("id").alias("cid2"), SIM.int_dot("q", "q").alias("n2_a"))
     dots = (
-        cand.join(nb.select(F.col("id").alias("eid"), "ev", "nb"), "eid")
+        cand.join(nb.select(F.col("id").alias("eid"), "ev", "n2_b"), "eid")
         .join(q.select(F.col("id").alias("cid2"), F.col("q").alias("qc")), "cid2")
         .select(
             "eid",
             "cid2",
-            "nb",
-            F.aggregate(
-                F.zip_with("ev", "qc", lambda a, b: a * b),
-                F.lit(0).cast("long"),
-                lambda acc, x: acc + x,
-            ).alias("dot"),
+            "n2_b",
+            SIM.int_dot("ev", "qc").alias("dot"),
         )
     )
-    hit = (
-        (F.col("dot") > 0)
-        & (
-            F.col("dot").cast("double")
-            >= F.lit(0.98)
-            * (
-                F.sqrt(F.col("na").cast("double"))
-                * F.sqrt(F.col("nb").cast("double"))
-            )
-        )
-    ).cast("int")
+    hit = SIM.in_qball(0.98).cast("int")
     hits = (
         dots.join(na, "cid2")
         .select("eid", hit.alias("hit"))
@@ -2784,6 +2737,34 @@ def l60_semantic_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
 SEMDEDUP_TWIN_OFFSET = 1 << 23  # planted near-dup twin ids; vec_id domain-checked
 
 
+def plant_twins_q(q: DataFrame) -> DataFrame:
+    """Planted integer epsilon-twins of the id % 9 == 4 rows of an
+    (id, q) frame: twin id = id + SEMDEDUP_TWIN_OFFSET, component i
+    moved by ((id * 31 + i * 17) % 7) - 3 quanta. The SemDeDup oracles
+    replay exactly this construction."""
+    return q.filter(F.col("id") % 9 == 4).select(
+        (F.col("id") + F.lit(SEMDEDUP_TWIN_OFFSET)).alias("id"),
+        F.transform(
+            "q",
+            lambda x, i: x
+            + ((F.col("id") * 31 + i.cast("long") * 17) % 7 - 3).cast("long"),
+        ).alias("q"),
+    )
+
+
+def _semdedup_increment(
+    emb: DataFrame, day1: DataFrame, cutoff: int
+) -> DataFrame:
+    """The l69/j23 day-2 increment as (id, q): natural arrivals
+    (vec_id >= cutoff, the only embeddings it quantizes) plus planted
+    twins of bases from BOTH days, day-1 bases read from the store."""
+    day2q = SIM.quantize_q(
+        emb.filter(F.col("vec_id") >= cutoff), "vec_id", "embedding"
+    )
+    bases = day1.select("id", "q").unionByName(day2q)
+    return day2q.unionByName(plant_twins_q(bases))
+
+
 # (session, sf_dir, data fingerprint) -> (members, near) checkpointed
 # DataFrames; every value is integer-exact and partition-independent, so
 # memoized-vs-fresh results are identical (the _qc_weights contract).
@@ -2794,8 +2775,10 @@ def _semdedup_members_near(
     spark: SparkSession, sf_dir: str
 ) -> tuple[DataFrame, DataFrame]:
     """The shared SemDeDup substrate of l65 (report) and l76 (takedown):
-    trains Lloyd over corpus+twins, assigns, scans in-cluster pairs with
-    the exact-integer cosine, and applies the min-id keep policy.
+    quantizes the corpus (SIM.quantize_q), adds plant_twins_q's twins,
+    trains Lloyd over both, assigns, scans in-cluster pairs with the
+    exact-integer cosine (SIM.int_dot under SIM.in_qball), and applies
+    the min-id keep policy.
     Returns (members, near): per-vector (vec_id, cluster, is_kept) and
     the in-ball same-cluster pair set (id_a < id_b). Built ONCE per
     (session, data) — training and the pair scan are deterministic
@@ -2815,32 +2798,12 @@ def _semdedup_members_near(
             f"max vec_id {mx} >= twin offset {SEMDEDUP_TWIN_OFFSET}: planted "
             "twin ids would collide with corpus ids"
         )
-    base = emb.select(
-        F.col("vec_id").alias("id"),
-        F.transform(
-            "embedding", lambda x: F.floor(x * F.lit(100000.0)).cast("long")
-        ).alias("q"),
-    )
-    twins = base.filter(F.col("id") % 9 == 4).select(
-        (F.col("id") + F.lit(SEMDEDUP_TWIN_OFFSET)).alias("id"),
-        F.transform(
-            "q",
-            lambda x, i: x
-            + ((F.col("id") * 31 + i.cast("long") * 17) % 7 - 3).cast("long"),
-        ).alias("q"),
-    )
-    allq = base.unionByName(twins).localCheckpoint(eager=False)
+    base = SIM.quantize_q(emb, "vec_id", "embedding")
+    allq = base.unionByName(plant_twins_q(base)).localCheckpoint(eager=False)
     cent = SIM.lloyd_kmeans_q(allq, k=8, iters=3)
     assigned = SIM.lloyd_assign_q(allq, cent).localCheckpoint(eager=False)
 
-    n2 = allq.select(
-        "id",
-        F.aggregate(
-            F.transform("q", lambda x: x * x),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ).alias("n2"),
-    )
+    n2 = SIM.with_n2(allq).select("id", "n2")
     side = assigned.join(allq, "id").join(n2, "id")
     a = side.select(
         F.col("id").alias("id_a"), "cluster",
@@ -2850,26 +2813,11 @@ def _semdedup_members_near(
         F.col("id").alias("id_b"), "cluster",
         F.col("q").alias("q_b"), F.col("n2").alias("n2_b"),
     )
-    dot = F.aggregate(
-        F.zip_with("q_a", "q_b", lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
     near = (
         a.join(b, "cluster")
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("dot", dot)
-        .filter(
-            (F.col("dot") > 0)
-            & (
-                F.col("dot").cast("double")
-                >= F.lit(0.999)
-                * (
-                    F.sqrt(F.col("n2_a").cast("double"))
-                    * F.sqrt(F.col("n2_b").cast("double"))
-                )
-            )
-        )
+        .withColumn("dot", SIM.int_dot("q_a", "q_b"))
+        .filter(SIM.in_qball(0.999))
         .select("id_a", "id_b")
     )
     pruned = near.select(F.col("id_b").alias("id")).distinct()
@@ -3254,7 +3202,7 @@ def l68_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                   co-occupying a cell. Candidate volume tracks cell
                   co-occupancy (sum over cells of size^2), never
                   corpus^2;
-      scoring   : exact int64 dot / norms over LLOYD_QSCALE-quantized
+      scoring   : exact int64 dot / norms over QSCALE-quantized
                   components, one correctly-rounded cosine per pair
                   (identical IEEE op sequence in both engines);
       top-k     : per-query window over rounded cosine (DESC, neighbor
@@ -3291,25 +3239,8 @@ def l68_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("qid", "nid")
         .distinct()
     )
-    q = emb.select(
-        F.col("vec_id").alias("id"),
-        F.transform(
-            "embedding", lambda x: F.floor(x * F.lit(100000.0)).cast("long")
-        ).alias("q"),
-    )
-    n2 = q.select(
-        "id",
-        "q",
-        F.aggregate(
-            F.transform("q", lambda x: x * x),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ).alias("n2"),
-    ).localCheckpoint(eager=False)
-    dot = F.aggregate(
-        F.zip_with("q_a", "q_b", lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
+    n2 = SIM.with_n2(SIM.quantize_q(emb, "vec_id", "embedding")).localCheckpoint(
+        eager=False
     )
     scored = (
         cand.join(
@@ -3332,11 +3263,7 @@ def l68_knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qid",
             "nid",
             F.round(
-                dot.cast("double")
-                / (
-                    F.sqrt(F.col("n2_a").cast("double"))
-                    * F.sqrt(F.col("n2_b").cast("double"))
-                ),
+                SIM.int_dot("q_a", "q_b").cast("double") / SIM.qnorm_product(),
                 6,
             ).alias("cosine"),
         )
@@ -3392,7 +3319,7 @@ _L68B_ORACLE = (
 
 def _knn_exact_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(qid, nid, rk), rk <= 5, for the BOUNDED query sample (the 8
-    smallest vec_ids): exact brute-force cosine top-5 over LLOYD_QSCALE-
+    smallest vec_ids): exact brute-force cosine top-5 over QSCALE-
     quantized integer components with the one-IEEE-op rounded cosine —
     byte-identical to the relational replay both the l68b and l68c
     oracles run (labeled broadcast cross join; the query side is 8 rows
@@ -3400,21 +3327,9 @@ def _knn_exact_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     the adaptive-quantizer gate (l68c) compare against the SAME truth
     construction."""
     emb = spread(load_table(spark, sf_dir, "embeddings"))
-    q = emb.select(
-        F.col("vec_id").alias("id"),
-        F.transform(
-            "embedding", lambda x: F.floor(x * F.lit(100000.0)).cast("long")
-        ).alias("q"),
+    n2 = SIM.with_n2(SIM.quantize_q(emb, "vec_id", "embedding")).localCheckpoint(
+        eager=False
     )
-    n2 = q.select(
-        "id",
-        "q",
-        F.aggregate(
-            F.transform("q", lambda x: x * x),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ).alias("n2"),
-    ).localCheckpoint(eager=False)
     queries = n2.filter(F.col("id") < 8).select(
         F.col("id").alias("qid"), F.col("q").alias("q_a"),
         F.col("n2").alias("n2_a"),
@@ -3423,11 +3338,6 @@ def _knn_exact_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id").alias("nid"), F.col("q").alias("q_b"),
         F.col("n2").alias("n2_b"),
     )
-    dot = F.aggregate(
-        F.zip_with("q_a", "q_b", lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
     escored = (
         corpus.crossJoin(F.broadcast(queries))
         .filter(F.col("nid") != F.col("qid"))
@@ -3435,11 +3345,7 @@ def _knn_exact_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
             "qid",
             "nid",
             F.round(
-                dot.cast("double")
-                / (
-                    F.sqrt(F.col("n2_a").cast("double"))
-                    * F.sqrt(F.col("n2_b").cast("double"))
-                ),
+                SIM.int_dot("q_a", "q_b").cast("double") / SIM.qnorm_product(),
                 6,
             ).alias("cosine"),
         )
@@ -3653,17 +3559,9 @@ def _semdedup_store(spark: SparkSession, sf_dir: str) -> tuple:
     emb = load_table(spark, sf_dir, "embeddings")
     max_id = emb.agg(F.max("vec_id")).collect()[0][0]
     cutoff = int(0.8 * (max_id + 1))
-    q1 = (
-        emb.filter(F.col("vec_id") < cutoff)
-        .select(
-            F.col("vec_id").alias("id"),
-            F.transform(
-                "embedding",
-                lambda x: F.floor(x * F.lit(100000.0)).cast("long"),
-            ).alias("q"),
-        )
-        .localCheckpoint(eager=False)  # Lloyd's seed TakeOrdered materializes it
-    )
+    q1 = SIM.quantize_q(
+        emb.filter(F.col("vec_id") < cutoff), "vec_id", "embedding"
+    ).localCheckpoint(eager=False)  # Lloyd's seed TakeOrdered materializes it
     cent = SIM.lloyd_kmeans_q(q1, k=8, iters=3)
     day1 = SIM.lloyd_assign_q(q1, cent).join(q1, "id")
     out = tempfile.mkdtemp(prefix="semdedup_store_")
@@ -3819,39 +3717,16 @@ def l69_incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cutoff, cent, day1_path = _semdedup_store(spark, sf_dir)
     day1 = spark.read.parquet(day1_path)
 
-    day2q = emb.filter(F.col("vec_id") >= cutoff).select(
-        F.col("vec_id").alias("id"),
-        F.transform(
-            "embedding", lambda x: F.floor(x * F.lit(100000.0)).cast("long")
-        ).alias("q"),
-    )
-    bases = day1.select("id", "q").unionByName(day2q)
-    twins = bases.filter(F.col("id") % 9 == 4).select(
-        (F.col("id") + F.lit(SEMDEDUP_TWIN_OFFSET)).alias("id"),
-        F.transform(
-            "q",
-            lambda x, i: x
-            + ((F.col("id") * 31 + i.cast("long") * 17) % 7 - 3).cast("long"),
-        ).alias("q"),
-    )
-    newq = day2q.unionByName(twins).localCheckpoint(eager=False)
+    newq = _semdedup_increment(emb, day1, cutoff).localCheckpoint(eager=False)
     assigned2 = SIM.lloyd_assign_q(newq, cent)
-
-    def with_n2(df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "n2",
-            F.aggregate(
-                F.transform("q", lambda x: x * x),
-                F.lit(0).cast("long"),
-                lambda acc, v: acc + v,
-            ),
-        )
 
     # EAGER: side_new feeds BOTH sides of the pair self-join below in one
     # action — left lazy, the assign pass could compute twice in
     # concurrent stages on a cluster (same call as the adaptive twin)
-    side_new = with_n2(assigned2.join(newq, "id")).localCheckpoint(eager=True)
-    side_all = with_n2(day1.select("id", "cluster", "q")).unionByName(side_new)
+    side_new = SIM.with_n2(assigned2.join(newq, "id")).localCheckpoint(eager=True)
+    side_all = SIM.with_n2(day1.select("id", "cluster", "q")).unionByName(
+        side_new
+    )
     a = side_all.select(
         F.col("id").alias("id_a"), "cluster",
         F.col("q").alias("q_a"), F.col("n2").alias("n2_a"),
@@ -3860,26 +3735,11 @@ def l69_incremental_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("id").alias("id_b"), "cluster",
         F.col("q").alias("q_b"), F.col("n2").alias("n2_b"),
     )
-    dot = F.aggregate(
-        F.zip_with("q_a", "q_b", lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
     pruned = (
         a.join(b, "cluster")
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("dot", dot)
-        .filter(
-            (F.col("dot") > 0)
-            & (
-                F.col("dot").cast("double")
-                >= F.lit(0.999)
-                * (
-                    F.sqrt(F.col("n2_a").cast("double"))
-                    * F.sqrt(F.col("n2_b").cast("double"))
-                )
-            )
-        )
+        .withColumn("dot", SIM.int_dot("q_a", "q_b"))
+        .filter(SIM.in_qball(0.999))
         .select(F.col("id_b").alias("id"))
         .distinct()
     )

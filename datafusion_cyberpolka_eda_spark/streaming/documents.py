@@ -506,29 +506,13 @@ def stream_semdedup(
     newq.repartitionByRange(n_files, "id").write.parquet(src_dir)
     asg_schema = "id bigint, cluster bigint, q array<bigint>, n2 bigint"
 
-    def with_n2(df: DataFrame) -> DataFrame:
-        return df.withColumn(
-            "n2",
-            F.aggregate(
-                F.transform("q", lambda x: x * x),
-                F.lit(0).cast("long"),
-                lambda acc, v: acc + v,
-            ),
-        )
-
-    day1 = with_n2(
+    day1 = SIM.with_n2(
         spark.read.parquet(day1_path).select("id", "cluster", "q")
     ).localCheckpoint(eager=False)  # epoch 0's pair join materializes it
 
-    dot = F.aggregate(
-        F.zip_with("q_a", "q_b", lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         eid = int(epoch_id)
-        batch = with_n2(
+        batch = SIM.with_n2(
             SIM.lloyd_assign_q(batch_df, cent_q).join(batch_df, "id")
         ).localCheckpoint(eager=False)  # materialized once by the append commit
         earlier = _read_epochs(spark, asg_dir, asg_schema, below=eid)
@@ -544,18 +528,8 @@ def stream_semdedup(
         pruned = (
             a.join(b, "cluster")
             .filter(F.col("id_a") != F.col("id_b"))
-            .withColumn("dot", dot)
-            .filter(
-                (F.col("dot") > 0)
-                & (
-                    F.col("dot").cast("double")
-                    >= F.lit(tau)
-                    * (
-                        F.sqrt(F.col("n2_a").cast("double"))
-                        * F.sqrt(F.col("n2_b").cast("double"))
-                    )
-                )
-            )
+            .withColumn("dot", SIM.int_dot("q_a", "q_b"))
+            .filter(SIM.in_qball(tau))
             .select(F.greatest("id_a", "id_b").alias("id"))
             .distinct()
         )
@@ -932,7 +906,7 @@ def stream_psi_drift(
     epoch contributes a bounded count delta (buckets, not rows), the
     reference profile stays put, and PSI is recomputed from merged
     state — no epoch ever re-reads the day-1 corpus."""
-    from datafusion_cyberpolka_eda_spark.registry.llm import (
+    from datafusion_cyberpolka_eda_spark.registry.llm_incremental import (
         psi_feature_buckets,
         psi_from_counts,
     )
@@ -1307,15 +1281,8 @@ def stream_domain_mixture(
 
     def handle(batch_df: DataFrame, epoch_id: int) -> None:
         eid = int(epoch_id)
-        q = batch_df.select(
-            F.col("doc_id").alias("id"),
-            F.transform(
-                "embedding",
-                lambda x: F.floor(x * F.lit(100000.0)).cast("long"),
-            ).alias("q"),
-        )
         keyed = (
-            SIM.lloyd_assign_q(q, cent)
+            SIM.lloyd_assign_q(SIM.quantize_q(batch_df, "doc_id", "embedding"), cent)
             .select(
                 F.col("id").alias("doc_id"),
                 F.col("cluster").cast("bigint").alias("cluster"),

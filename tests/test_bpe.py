@@ -113,25 +113,6 @@ if __name__ == "__main__":
 
 
 class TestBpeEncode:
-    def test_encode_with_merges_matches_train_encode(self, spark):
-        from datafusion_cyberpolka_eda_spark.operators.bpe import (
-            bpe_encode_with_merges,
-            bpe_train,
-        )
-
-        docs = spark.createDataFrame(
-            [(1, "the cat sat"), (2, "the cat ran"), (3, "a cat sat")],
-            "doc_id bigint, text string",
-        )
-        merges, enc = bpe_train(docs, "text", k=3, carry_cols=("doc_id",))
-        fresh = spark.createDataFrame(
-            [(9, "the cat sat on a cat sat",)], "doc_id bigint, text string"
-        ).select("doc_id", tokens_col("text").alias("toks"))
-        out = {r["doc_id"]: r["toks"] for r in
-               bpe_encode_with_merges(fresh, merges).collect()}
-        # merges learned in order: (cat,sat) -> (a,"cat sat") -> (cat,ran):
-        # pass 1 fuses both cat+sat; pass 2 fuses the a+"cat sat" tail
-        assert out[9] == ["the", "cat sat", "on", "a cat sat"]
 
     def test_train_encode_skips_nothing(self, spark):
         """encode=True's returned corpus reflects ALL k merges, including

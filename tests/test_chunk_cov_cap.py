@@ -56,11 +56,10 @@ class TestChunkDocs:
 
 class TestEmbeddingCovariance:
     def test_matches_numpy_cov(self, spark):
-        from datafusion_cyberpolka_eda_spark.registry.llm import (
+        from datafusion_cyberpolka_eda_spark.operators.similarity import QSCALE
+        from datafusion_cyberpolka_eda_spark.registry.llm_similarity import (
             embedding_gram_partials,
         )
-
-        from datafusion_cyberpolka_eda_spark.registry.llm import GRAM_QSCALE
 
         rng = np.random.default_rng(7)
         dim, n = 5, 40
@@ -72,9 +71,9 @@ class TestEmbeddingCovariance:
         # float32 storage + floor-quantization: the truth is the exact
         # integer Gram of q = floor(float32(x) * QSCALE), scaled back.
         X32 = X.astype(np.float32).astype(np.float64)
-        Q = np.floor(X32 * float(GRAM_QSCALE)).astype(np.int64)
+        Q = np.floor(X32 * float(QSCALE)).astype(np.int64)
         truth = np.cov(
-            Q.astype(np.float64) / float(GRAM_QSCALE), rowvar=False, bias=True
+            Q.astype(np.float64) / float(QSCALE), rowvar=False, bias=True
         )
 
         part = embedding_gram_partials(emb, dim=dim)
@@ -99,7 +98,7 @@ class TestEmbeddingCovariance:
         cov = (
             G.astype(np.float64) / n
             - np.outer(s / n, s / n)
-        ) / float(GRAM_QSCALE) ** 2
+        ) / float(QSCALE) ** 2
         assert np.allclose(cov, truth, atol=1e-9)
         # Gram state symmetric by construction
         assert (G == G.T).all()
@@ -109,7 +108,7 @@ class TestEmbeddingCovariance:
         BIT-IDENTICAL whether the input arrives as 1 partition or 32 —
         integer-quantized partials make every sum exact, so summation
         order can't move any value across a rounding boundary."""
-        from datafusion_cyberpolka_eda_spark.registry.llm import (
+        from datafusion_cyberpolka_eda_spark.registry.llm_similarity import (
             l46_embedding_covariance,
         )
         from datafusion_cyberpolka_eda_spark.sources import catalog
@@ -125,15 +124,15 @@ class TestEmbeddingCovariance:
 
             catalog.load_table = patched
             # the registry module binds load_table at import; patch there too
-            import datafusion_cyberpolka_eda_spark.registry.llm as llm
+            from datafusion_cyberpolka_eda_spark.registry import llm_similarity as LS
 
-            saved = llm.load_table
-            llm.load_table = patched
+            saved = LS.load_table
+            LS.load_table = patched
             try:
                 rows = l46_embedding_covariance(spark, sf_dir).collect()
             finally:
                 catalog.load_table = orig
-                llm.load_table = saved
+                LS.load_table = saved
             return sorted((r.i, r.j, r.cov) for r in rows)
 
         a, b = run(1), run(32)
@@ -142,7 +141,7 @@ class TestEmbeddingCovariance:
     def test_partials_are_fixed_size(self, spark):
         """Each Arrow batch reduces to exactly one row of width
         1 + dim + dim^2 — the property that makes the pattern scale."""
-        from datafusion_cyberpolka_eda_spark.registry.llm import (
+        from datafusion_cyberpolka_eda_spark.registry.llm_similarity import (
             embedding_gram_partials,
         )
 
@@ -197,7 +196,7 @@ class TestSparseCosinePairs:
             docs, "doc_id long, lang string, text string, source string"
         )
         df.write.mode("overwrite").parquet(str(tmp_path / "documents.parquet"))
-        from datafusion_cyberpolka_eda_spark.registry.llm import (
+        from datafusion_cyberpolka_eda_spark.registry.llm_similarity import (
             l48_sparse_cosine_pairs,
         )
 
@@ -310,7 +309,7 @@ class TestIncrementalCovariance:
     def test_merged_equals_from_scratch(self, spark, sf_dir):
         """The merged store+increment state must equal l46's from-scratch
         covariance diagonal (same vectors, same statistic)."""
-        from datafusion_cyberpolka_eda_spark.registry.llm import (
+        from datafusion_cyberpolka_eda_spark.registry.llm_similarity import (
             l46_embedding_covariance,
             l51_incremental_covariance,
         )
@@ -329,7 +328,7 @@ class TestIncrementalCovariance:
             assert inc[i][1] == pytest.approx(full_diag[i], abs=2e-6)
 
     def test_store_is_fixed_size_and_increment_scan_pushed(self, spark, sf_dir):
-        from datafusion_cyberpolka_eda_spark.registry.llm import (
+        from datafusion_cyberpolka_eda_spark.registry.llm_similarity import (
             _gram_store,
             l51_incremental_covariance,
         )

@@ -11,7 +11,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from datafusion_cyberpolka_eda_spark.registry.llm import l39_psi_drift
+from datafusion_cyberpolka_eda_spark.registry.llm_incremental import l39_psi_drift
 from datafusion_cyberpolka_eda_spark.sources.catalog import load_table
 
 

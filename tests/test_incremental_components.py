@@ -160,7 +160,7 @@ class TestNoDay1Rescan:
     def test_registry_entry_reuses_label_store_across_calls(self, spark, sf_dir):
         """The l33 label store is memoized per (session, data): a second
         call must reuse the SAME parquet files (no rebuild)."""
-        from datafusion_cyberpolka_eda_spark.registry import llm as L
+        from datafusion_cyberpolka_eda_spark.registry import llm_incremental as L
 
         L.l33_incremental_components(spark, sf_dir).collect()
         paths = [v for k, v in L._INCR_CC_CACHE.items() if sf_dir in k]

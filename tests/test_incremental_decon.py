@@ -14,10 +14,10 @@ from contextlib import redirect_stdout
 import pytest
 from pyspark.sql import functions as F
 
-from datafusion_cyberpolka_eda_spark.registry.llm import (
+from datafusion_cyberpolka_eda_spark.registry.llm import l20_contamination_screen
+from datafusion_cyberpolka_eda_spark.registry.llm_base import _doc_gram_hashes
+from datafusion_cyberpolka_eda_spark.registry.llm_incremental import (
     _L32_CUTOFF_FRAC,
-    _doc_gram_hashes,
-    l20_contamination_screen,
     l32_incremental_decontamination,
 )
 from datafusion_cyberpolka_eda_spark.sources.catalog import load_table
@@ -107,7 +107,7 @@ class TestNoRescan:
         the pushed increment predicate; the benchmark may enter ONLY via
         the gram-store parquet. A documents scan without the cutoff
         filter would mean old-corpus (or benchmark) text is re-read."""
-        from datafusion_cyberpolka_eda_spark.registry import llm as L
+        from datafusion_cyberpolka_eda_spark.registry import llm_incremental as L
 
         out = l32_incremental_decontamination(spark, sf_dir)
         stores = [v for k, v in L._DECON_STORE_CACHE.items() if sf_dir in k]
@@ -126,7 +126,7 @@ class TestNoRescan:
     def test_store_reused_across_calls(self, spark, sf_dir):
         """A second l32 call must reuse the SAME store files (mtimes
         frozen — no benchmark re-shingle)."""
-        from datafusion_cyberpolka_eda_spark.registry import llm as L
+        from datafusion_cyberpolka_eda_spark.registry import llm_incremental as L
 
         l32_incremental_decontamination(spark, sf_dir).collect()
         stores = [v for k, v in L._DECON_STORE_CACHE.items() if sf_dir in k]

@@ -82,7 +82,7 @@ class TestIncrementalEquivalence:
         )
         v1 = spark.read.parquet(p1)
         p2 = str(tmp_path / "store_v2.parquet")
-        D.updated_minhash_store(v1, sigs2).write.parquet(p2)
+        v1.unionByName(sigs2).write.parquet(p2)
         v2 = spark.read.parquet(p2)
         assert v2.count() == day1.count() + day2.count() or v2.count() == (
             # docs with < 3 tokens emit no signature row on either path
@@ -150,12 +150,12 @@ class TestNoOldCorpusRescan:
     def test_registry_entry_reuses_store_across_calls(self, spark, sf_dir):
         """The l31 store build is memoized per (session, data): a second
         call must reuse the SAME store files (no rebuild, mtimes frozen)."""
-        from datafusion_cyberpolka_eda_spark.registry.llm import (
+        from datafusion_cyberpolka_eda_spark.registry.llm_incremental import (
             l31_incremental_dedup,
         )
 
         l31_incremental_dedup(spark, sf_dir).collect()
-        from datafusion_cyberpolka_eda_spark.registry import llm as L
+        from datafusion_cyberpolka_eda_spark.registry import llm_incremental as L
 
         stores = [v for k, v in L._INCR_STORE_CACHE.items() if sf_dir in k]
         assert stores, "store cache empty after l31 run"
@@ -174,16 +174,6 @@ class TestNoOldCorpusRescan:
 
 
 class TestStoreUpdate:
-    def test_union_by_name_against_reordered_store(self, spark):
-        sigs = spark.createDataFrame(
-            [(1, [1, 2], ["a", "b"])],
-            "id bigint, sig array<bigint>, band_keys array<string>",
-        )
-        reordered = sigs.select("band_keys", "sig", "id")
-        out = D.updated_minhash_store(reordered, sigs)
-        assert out.count() == 2
-        row = out.filter(F.col("id") == 1).collect()[0]
-        assert row["sig"] == [1, 2]
 
     def test_incremental_empty_increment(self, spark):
         empty = spark.createDataFrame(

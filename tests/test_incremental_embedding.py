@@ -72,13 +72,13 @@ class TestIncrementalEmbeddingDedup:
         """The store-driven incremental pair set must equal the full
         from-scratch bucketed build (same frozen centroids/probes/
         threshold) restricted to pairs with >= 1 new id."""
-        from datafusion_cyberpolka_eda_spark.registry import llm as L
+        from datafusion_cyberpolka_eda_spark.registry import llm_similarity as LS
 
         got = {
             (r["id_a"], r["id_b"], r["cosine"], r["kind"])
-            for r in L.l41_incremental_embedding_dedup(spark, sf_dir).collect()
+            for r in LS.l41_incremental_embedding_dedup(spark, sf_dir).collect()
         }
-        cutoff, *_ = L._semantic_store(spark, sf_dir)
+        cutoff, *_ = LS._semantic_store(spark, sf_dir)
         emb = load_table(spark, sf_dir, "embeddings").filter(
             F.col("vec_id") % 5 == 0
         )
@@ -101,9 +101,9 @@ class TestIncrementalEmbeddingDedup:
         """The quantizer freeze contract: every persisted centroid id
         must be a day-1 vector (otherwise day-2 arrival would change the
         quantizer and invalidate the store's cells)."""
-        from datafusion_cyberpolka_eda_spark.registry import llm as L
+        from datafusion_cyberpolka_eda_spark.registry import llm_similarity as LS
 
-        cutoff, units_path, _, centers_path = L._semantic_store(spark, sf_dir)
+        cutoff, units_path, _, centers_path = LS._semantic_store(spark, sf_dir)
         n_centers = spark.read.parquet(centers_path).count()
         day1_ids = [
             r["id"]
@@ -119,9 +119,9 @@ class TestIncrementalEmbeddingDedup:
         """The only embeddings access in the incremental path is the
         day-2 slice: the scan must carry a pushed vec_id >= cutoff
         predicate so day-1 vectors are never re-read."""
-        from datafusion_cyberpolka_eda_spark.registry import llm as L
+        from datafusion_cyberpolka_eda_spark.registry import llm_similarity as LS
 
-        cutoff, *_ = L._semantic_store(spark, sf_dir)
+        cutoff, *_ = LS._semantic_store(spark, sf_dir)
         new = load_table(spark, sf_dir, "embeddings").filter(
             (F.col("vec_id") % 5 == 0) & (F.col("vec_id") >= cutoff)
         )

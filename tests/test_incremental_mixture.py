@@ -17,8 +17,8 @@ class TestLedgerMerge:
     def test_weights_match_full_recompute(self, spark, sf_dir):
         """l36 (ledger + increment merge) must equal l27's from-scratch
         weights computed over the whole corpus."""
-        from datafusion_cyberpolka_eda_spark.registry.llm import (
-            l27_mixture_weights,
+        from datafusion_cyberpolka_eda_spark.registry.llm import l27_mixture_weights
+        from datafusion_cyberpolka_eda_spark.registry.llm_incremental import (
             l36_incremental_mixture_refresh,
         )
 
@@ -66,7 +66,7 @@ class TestLedgerMerge:
         """In the l36 plan, every scan of the documents table must carry
         the pushed >= cutoff predicate — old text enters only via the
         ledger parquet."""
-        from datafusion_cyberpolka_eda_spark.registry.llm import (
+        from datafusion_cyberpolka_eda_spark.registry.llm_incremental import (
             _mixture_store,
             l36_incremental_mixture_refresh,
         )
@@ -90,7 +90,7 @@ class TestLedgerMerge:
             )
 
     def test_ledger_store_memoized(self, spark, sf_dir):
-        from datafusion_cyberpolka_eda_spark.registry import llm as L
+        from datafusion_cyberpolka_eda_spark.registry import llm_incremental as L
 
         L.l36_incremental_mixture_refresh(spark, sf_dir).collect()
         stores = [v for k, v in L._MIXTURE_STORE_CACHE.items() if sf_dir in k]
@@ -114,7 +114,7 @@ class TestIncrementalPipelineComposition:
         """l37 must emit every stage, its route counts must sum to the
         increment size, and its component/survivor scalars must agree
         with the standalone l33/l34 entries run on the same stores."""
-        from datafusion_cyberpolka_eda_spark.registry.llm import (
+        from datafusion_cyberpolka_eda_spark.registry.llm_incremental import (
             _incremental_store,
             l33_incremental_components,
             l34_incremental_survivors,

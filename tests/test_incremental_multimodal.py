@@ -116,7 +116,7 @@ class TestNoDay1Decode:
         import glob
         import os
 
-        from datafusion_cyberpolka_eda_spark.registry import llm as L
+        from datafusion_cyberpolka_eda_spark.registry import llm_multimodal as L
 
         L.l66_incremental_image_neardup(spark, sf_dir).collect()
         stores = [

@@ -11,7 +11,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from datafusion_cyberpolka_eda_spark.operators import dedup as D
-from datafusion_cyberpolka_eda_spark.registry.llm import _pick_survivors
+from datafusion_cyberpolka_eda_spark.registry.llm_incremental import _pick_survivors
 from datafusion_cyberpolka_eda_spark.sources.catalog import load_table
 
 
@@ -79,7 +79,7 @@ class TestIncrementalSurvivorTransitions:
     def test_registry_entry_reuses_stores_across_calls(self, spark, sf_dir):
         """The l34 stats/survivor stores are memoized per (session, data):
         a second call must reuse the SAME parquet files."""
-        from datafusion_cyberpolka_eda_spark.registry import llm as L
+        from datafusion_cyberpolka_eda_spark.registry import llm_incremental as L
 
         L.l34_incremental_survivors(spark, sf_dir).collect()
         stores = [v for k, v in L._INCR_SURV_CACHE.items() if sf_dir in k]
@@ -145,7 +145,7 @@ class TestClusterSafeSplit:
         assert straddle == 0
 
     def test_split_covers_every_doc_exactly_once(self, spark, sf_dir):
-        from datafusion_cyberpolka_eda_spark.registry.llm import (
+        from datafusion_cyberpolka_eda_spark.registry.llm_incremental import (
             l35_cluster_safe_split,
         )
 

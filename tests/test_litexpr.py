@@ -75,7 +75,7 @@ def test_dots_literal_matches_old_form(spark):
 def test_sqdists_literal_matches_old_form(spark):
     rng = random.Random(29)
     dim, k, n = 12, 4, 30
-    # LLOYD_QSCALE-magnitude components (|x| ~ 2^20): (x-c)^2 summed over
+    # QSCALE-magnitude components (|x| ~ 2^20): (x-c)^2 summed over
     # dim stays far inside int64, matching the real quantized range
     mat = [[rng.randint(-(2**20), 2**20) for _ in range(dim)] for _ in range(k)]
     df = spark.createDataFrame(
@@ -130,32 +130,6 @@ def test_dot_literal_matches_old_form(spark):
     assert [struct.pack("<d", r["d"]) for r in old] == [
         struct.pack("<d", r["d"]) for r in new
     ]
-
-
-def test_wdot_literal_matches_old_form(spark):
-    rng = random.Random(37)
-    dim, n = 10, 20
-    w = [rng.randint(-(2**30), 2**30) for _ in range(dim)]
-    df = spark.createDataFrame(
-        [(i, [rng.randint(-(2**20), 2**20) for _ in range(dim)]) for i in range(n)],
-        "id bigint, x array<bigint>",
-    )
-    old = df.select(
-        "id",
-        F.aggregate(
-            F.zip_with(
-                "x",
-                F.array(*[F.lit(int(c)).cast("long") for c in w]),
-                lambda xv, wv: xv * wv,
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        ).alias("z"),
-    ).orderBy("id").collect()
-    new = df.select("id", LX.wdot_literal_q("x", w).alias("z")).orderBy(
-        "id"
-    ).collect()
-    assert [r["z"] for r in old] == [r["z"] for r in new]
 
 
 # ---- SQL-text aggregate lists: each builder vs the Column form it

@@ -699,7 +699,7 @@ class TestGateTruthMemoFingerprint:
         assert base2 is not base1  # fingerprint changed -> truth rebuilt
 
     def test_fingerprint_changes_on_size_and_missing(self, spark, tmp_path):
-        from datafusion_cyberpolka_eda_spark.registry.llm import _docs_fingerprint
+        from datafusion_cyberpolka_eda_spark.registry.llm_base import _docs_fingerprint
 
         assert _docs_fingerprint(str(tmp_path)) == "missing"
         self._write_docs(spark, tmp_path)
@@ -770,7 +770,9 @@ class TestIvfPq:
         assert checked > 0
 
     def test_l8e_gate_row(self, spark, sf_dir):
-        from datafusion_cyberpolka_eda_spark.registry.llm import l8e_ann_ivf_pq
+        from datafusion_cyberpolka_eda_spark.registry.llm_similarity import (
+            l8e_ann_ivf_pq,
+        )
 
         row = l8e_ann_ivf_pq(spark, sf_dir).collect()[0]
         assert row["mean_recall_at_5_ge_60pct"] is True
@@ -811,7 +813,7 @@ class TestIvfPqIncremental:
         assert max(abs(c) for c in row["qcodes"]) == 127  # clamped, in-range
 
     def test_l8f_gate_row(self, spark, sf_dir):
-        from datafusion_cyberpolka_eda_spark.registry.llm import (
+        from datafusion_cyberpolka_eda_spark.registry.llm_similarity import (
             l8f_ann_ivf_pq_incremental,
         )
 
@@ -852,7 +854,7 @@ class TestIvfPqTakedown:
         assert b.exceptAll(a).count() == 0
 
     def test_l8g_gate_row(self, spark, sf_dir):
-        from datafusion_cyberpolka_eda_spark.registry.llm import (
+        from datafusion_cyberpolka_eda_spark.registry.llm_similarity import (
             l8g_ann_ivf_pq_takedown,
         )
 
@@ -1006,7 +1008,7 @@ class TestImagePhashNearDup:
     def test_planted_gray_recall_is_total(self, spark, docs):
         """Every doc_id % 5 == 0 must surface as a planted_gray pair at
         hamming 0 — recall 1.0 against the planted ground truth."""
-        from datafusion_cyberpolka_eda_spark.registry.llm import (
+        from datafusion_cyberpolka_eda_spark.registry.llm_multimodal import (
             l58_image_phash_neardup,
         )
 
@@ -1111,26 +1113,12 @@ class TestDistributedLloyd:
         i0 = sum(r["inertia_q"] for r in stats0.collect())
         assert i3 < i0
 
-    def test_wires_into_ivf_pq_index(self, spark, emb):
-        """lloyd_centroids_unit output is a drop-in `centers` for
-        ivf_pq_index: every vector lands in a cell and codes stay int8."""
-        cent, _ = SIM.lloyd_kmeans_distributed(
-            emb, "vec_id", "embedding", k=8, iters=3
-        )
-        centers = SIM.lloyd_centroids_unit(cent)
-        unit = SIM.unit_vec_df(emb, "vec_id", "embedding")
-        index, scales = SIM.ivf_pq_index(unit, centers)
-        n = emb.count()
-        assert index.count() == n
-        cells = {r["cell"] for r in index.select("cell").distinct().collect()}
-        assert cells <= set(range(8)) and len(cells) > 1
-
 
 class TestSemanticDecontamination:
     """r9: embedding-space contamination screen (l60)."""
 
     def test_planted_recall_total_and_clean_unflagged(self, spark):
-        from datafusion_cyberpolka_eda_spark.registry.llm import (
+        from datafusion_cyberpolka_eda_spark.registry.llm_similarity import (
             l60_semantic_decontamination,
         )
 
@@ -1155,7 +1143,7 @@ class TestImageDedupPipeline:
             GRAY_TWIN_OFFSET,
             PERTURB_TWIN_OFFSET,
         )
-        from datafusion_cyberpolka_eda_spark.registry.llm import (
+        from datafusion_cyberpolka_eda_spark.registry.llm_multimodal import (
             l61_image_dedup_pipeline,
         )
 
@@ -1180,7 +1168,7 @@ class TestAudioFingerprintNearDup:
         """Every doc_id % 3 == 0 must surface as a planted_swap pair at
         hamming 0 — the energy-preserving permutation guarantees equal
         fingerprints structurally."""
-        from datafusion_cyberpolka_eda_spark.registry.llm import (
+        from datafusion_cyberpolka_eda_spark.registry.llm_multimodal import (
             l62_audio_fingerprint_neardup,
         )
 

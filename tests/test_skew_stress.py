@@ -237,7 +237,7 @@ class TestSparseCosineHotTerm:
         200 docs all containing 'the end' but otherwise unique: without
         the prune the join would emit 19,900 candidate pairs; with it,
         none."""
-        from datafusion_cyberpolka_eda_spark.registry.llm import (
+        from datafusion_cyberpolka_eda_spark.registry.llm_similarity import (
             l48_sparse_cosine_pairs,
         )
 

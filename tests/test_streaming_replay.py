@@ -159,7 +159,9 @@ class TestReplayIdempotency:
         """Streamed PSI from twice-delivered epochs must equal the batch
         l39 answer bit-for-bit (integer count merges are replay-proof
         under epoch-keyed overwrite)."""
-        from datafusion_cyberpolka_eda_spark.registry.llm import l39_psi_drift
+        from datafusion_cyberpolka_eda_spark.registry.llm_incremental import (
+            l39_psi_drift,
+        )
 
         docs = load_table(spark, sf_dir, "documents")
         streamed = SD.stream_psi_drift(spark, docs, str(tmp_path / "scratch"))

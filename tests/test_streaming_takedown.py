@@ -107,7 +107,7 @@ class TestStreamTakedownRealData:
     def test_equals_batch_l38(self, spark, sf_dir):
         """On the documents-table stores: the streamed rollup must equal
         the batch l38 entry row-for-row."""
-        from datafusion_cyberpolka_eda_spark.registry import llm as L
+        from datafusion_cyberpolka_eda_spark.registry import llm_incremental as L
         from datafusion_cyberpolka_eda_spark.registry.events import (
             j17_stream_takedown,
         )

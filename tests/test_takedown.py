@@ -154,7 +154,7 @@ class TestTakedownNoRescan:
         label store — never the documents table (the CC stage is
         checkpoint-materialized during construction, so the signature
         store scan is asserted separately below)."""
-        from datafusion_cyberpolka_eda_spark.registry import llm as L
+        from datafusion_cyberpolka_eda_spark.registry import llm_incremental as L
 
         df = L.l38_takedown_propagation(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
@@ -199,7 +199,7 @@ class TestTakedownPipeline:
         (doc_id, source): the text column must not appear in the
         documents scan's ReadSchema — token counts come from the stats
         ledger, so a text scan would break the no-rescan contract."""
-        from datafusion_cyberpolka_eda_spark.registry import llm as L
+        from datafusion_cyberpolka_eda_spark.registry import llm_incremental as L
 
         docs = load_table(spark, sf_dir, "documents")
         removed = spark.createDataFrame([(3,), (10,)], "id bigint")
@@ -230,7 +230,7 @@ class TestTakedownPipeline:
         """End-to-end at test scale: stage arithmetic must be internally
         consistent, and the ledger decrement must equal an independent
         recomputation from the stats store for the same removed set."""
-        from datafusion_cyberpolka_eda_spark.registry import llm as L
+        from datafusion_cyberpolka_eda_spark.registry import llm_incremental as L
 
         got = {
             (r["stage"], r["metric"]): r["value"]
