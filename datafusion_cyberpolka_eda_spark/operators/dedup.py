@@ -867,11 +867,14 @@ def connected_components(
             return df.checkpoint(eager=True)
     else:
         # LAZY local checkpoint: lineage is truncated immediately
-        # (LogicalRDD plan), but materialization rides on the round's
-        # convergence aggregate instead of a dedicated eager job — one
-        # scheduled job per round instead of two (guide §1.2/§2.4: the
-        # fixed per-job floor is pure superstep overhead; the aggregate
-        # computes every partition, so the cached cut is complete).
+        # (LogicalRDD plan). With AQE on, as get_spark sets it, the call
+        # itself runs every shuffle and broadcast stage of the cut's plan
+        # (a one-shuffle groupBy: 1 job at the call); only the final
+        # stage rides on the round's convergence aggregate instead of a
+        # dedicated eager job — one fewer scheduled job per round than
+        # an eager cut (guide §1.2/§2.4: the fixed per-job floor is pure
+        # superstep overhead; the aggregate computes every partition,
+        # so the cached cut is complete).
         def _cut(df: DataFrame) -> DataFrame:
             return df.localCheckpoint(eager=False)
 
@@ -1193,12 +1196,19 @@ def takedown_components(
     id so the member pull and signature slice are pruned reads."""
     removed = removed_ids.select(F.col(removed_ids.columns[0]).alias("id")).distinct()
     affected = old_labels.join(F.broadcast(removed), "id").select("comp").distinct()
-    members = old_labels.join(F.broadcast(affected), "comp")
-    # lazy cut: materialized by the first CC job over the rebuilt edges,
-    # then reused by the survivors join — saves the dedicated eager job
-    remaining = members.join(F.broadcast(removed), "id", "left_anti").localCheckpoint(
-        eager=False
+    # every affected member tagged removed-or-not in ONE broadcast left
+    # join and cut once, so remaining and tombstones are both filters of
+    # the same cached rows: no consumer of the delta recomputes removed,
+    # affected or members. With AQE on, the lazy cut runs the distinct
+    # shuffles and broadcasts of its plan here, at the call; only its
+    # final stage waits for the first CC job over the rebuilt edges
+    gone = removed.select("id", F.lit(True).alias("_gone"))
+    tagged = (
+        old_labels.join(F.broadcast(affected), "comp")
+        .join(F.broadcast(gone), "id", "left")
+        .localCheckpoint(eager=False)
     )
+    remaining = tagged.filter(F.col("_gone").isNull()).drop("_gone")
     edges = edges_fn(remaining)
     relabeled = connected_components(
         edges, "id_a", "id_b", max_iter=max_iter, checkpoint_dir=checkpoint_dir
@@ -1209,7 +1219,7 @@ def takedown_components(
         .select("id", "old_comp", F.coalesce("new_comp", "id").alias("comp"))
     )
     tombstones = (
-        members.join(F.broadcast(removed), "id")
+        tagged.filter(F.col("_gone").isNotNull())
         .select("id", F.col("comp").alias("old_comp"))
         .withColumn("comp", F.lit(None).cast("long"))
     )

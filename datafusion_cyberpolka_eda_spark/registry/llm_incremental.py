@@ -462,10 +462,10 @@ def l34_incremental_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---- incremental mixture refresh (l36) ----
 # (session, sf_dir, data fingerprint) -> (cutoff, persisted ledger path).
-_MIXTURE_STORE_CACHE: dict[str, tuple[int, str]] = {}
+_LEDGER_STORE_CACHE: dict[str, tuple[int, str]] = {}
 
 
-def _mixture_store(spark: SparkSession, sf_dir: str) -> tuple[int, str]:
+def _source_ledger_store(spark: SparkSession, sf_dir: str) -> tuple[int, str]:
     """Build ONCE per (session, data) the persisted day-1 corpus LEDGER:
     per-source doc and token totals — the mergeable-exact-aggregate
     analog of d20/d21's sketches (commutative integer sums, so daily
@@ -475,8 +475,8 @@ def _mixture_store(spark: SparkSession, sf_dir: str) -> tuple[int, str]:
         f"{spark.sparkContext.applicationId}:{sf_dir}:"
         f"{_docs_fingerprint(sf_dir)}"
     )
-    if key in _MIXTURE_STORE_CACHE:
-        return _MIXTURE_STORE_CACHE[key]
+    if key in _LEDGER_STORE_CACHE:
+        return _LEDGER_STORE_CACHE[key]
     import atexit
     import os
     import shutil
@@ -497,8 +497,8 @@ def _mixture_store(spark: SparkSession, sf_dir: str) -> tuple[int, str]:
     atexit.register(shutil.rmtree, out, ignore_errors=True)
     path = os.path.join(out, "ledger.parquet")
     ledger.write.mode("overwrite").parquet(path)
-    _MIXTURE_STORE_CACHE[key] = (cutoff, path)
-    return _MIXTURE_STORE_CACHE[key]
+    _LEDGER_STORE_CACHE[key] = (cutoff, path)
+    return _LEDGER_STORE_CACHE[key]
 
 
 @register(
@@ -540,7 +540,7 @@ def l36_incremental_mixture_refresh(spark: SparkSession, sf_dir: str) -> DataFra
     full corpus with the same cutoff split, so the merged ledger math is
     value-hash-checked against from-scratch semantics."""
     docs = load_table(spark, sf_dir, "documents")
-    cutoff, ledger_path = _mixture_store(spark, sf_dir)
+    cutoff, ledger_path = _source_ledger_store(spark, sf_dir)
     ledger = spark.read.parquet(ledger_path).select(
         "source",
         F.col("n_docs").alias("d1_docs"),

@@ -82,11 +82,6 @@ def _manifest_entries(root: str, below: int | None = None) -> list[dict]:
     return out
 
 
-def _epoch_count(root: str) -> int:
-    """Number of committed epochs in the store under ``root``."""
-    return len(_manifest_entries(root))
-
-
 _TEST_REPLAY = False  # tests flip this to deliver every epoch twice
 
 
@@ -104,6 +99,47 @@ def _deliver(handle):
         handle(batch_df, epoch_id)
 
     return replayed
+
+
+def _stream_epochs(
+    fanned: DataFrame,
+    key: str,
+    n_files: int,
+    src_dir: str,
+    out_dirs: tuple[str, ...],
+    handle,
+) -> int:
+    """The forced-epoch harness every foreachBatch driver runs: clear
+    ``src_dir`` and ``out_dirs``, write ``fanned`` as ``n_files`` files of
+    contiguous ``key`` ranges (deterministic epoch membership, so tests
+    can place near-dup partners in different epochs on purpose), stream
+    them back with maxFilesPerTrigger=1 so each file is one epoch, and
+    call ``handle(batch_df, eid)`` per epoch through the ``_deliver``
+    replay shim. The stream opens on ``fanned``'s own schema (the file
+    source forces it nullable), so no schema-inference job reads the
+    fan-out back. The file source stands in for a queue; the handler is
+    source-agnostic. Returns the number of distinct epochs handled."""
+    for d in (src_dir, *out_dirs):
+        shutil.rmtree(d, ignore_errors=True)
+    fanned.repartitionByRange(n_files, key).write.parquet(src_dir)
+    seen: set[int] = set()
+
+    def counted(batch_df: DataFrame, epoch_id: int) -> None:
+        handle(batch_df, int(epoch_id))
+        seen.add(int(epoch_id))
+
+    q = (
+        fanned.sparkSession.readStream.schema(fanned.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src_dir)
+        .writeStream.foreachBatch(_deliver(counted))
+        .start()
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return len(seen)
 
 
 def _read_epochs(
@@ -183,25 +219,11 @@ def stream_incremental_dedup(
     band_key so each epoch's join prunes to colliding buckets, and no
     old text ever re-shingled. File-source micro-batches stand in for
     the queue; the foreachBatch body is source-agnostic."""
-    src_dir = os.path.join(scratch_dir, "inc_src")
     appended_dir = os.path.join(scratch_dir, "appended_sigs")
     pairs_dir = os.path.join(scratch_dir, "pairs")
-    for d in (src_dir, appended_dir, pairs_dir):
-        shutil.rmtree(d, ignore_errors=True)
-
-    # contiguous id ranges per file: deterministic epoch membership, so
-    # tests can place near-dup partners in different epochs on purpose
-    increment.repartitionByRange(n_files, "doc_id").write.parquet(src_dir)
     base_store = spark.read.parquet(store_path)
 
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src_dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        eid = int(epoch_id)
+    def handle(batch_df: DataFrame, eid: int) -> None:
         sigs = D.minhash_signatures_portable(
             batch_df, "doc_id", "text", n=n, num_hashes=num_hashes,
             bands=bands,
@@ -226,12 +248,10 @@ def stream_incremental_dedup(
         _commit_epoch(sigs, appended_dir, eid)
         _commit_epoch(pairs, pairs_dir, eid)
 
-    q = stream.writeStream.foreachBatch(_deliver(handle)).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
+    _stream_epochs(
+        increment, "doc_id", n_files, os.path.join(scratch_dir, "inc_src"),
+        (appended_dir, pairs_dir), handle,
+    )
     both_new = (F.col("id_a") >= cutoff) & (F.col("id_b") >= cutoff)
     return _read_epochs(
         spark, pairs_dir, "id_a bigint, id_b bigint, est_jaccard double"
@@ -286,23 +306,10 @@ def stream_quality_routing(
     downstream dedup/mixture jobs read, the routing expression stays
     JVM-side (no Python in the per-row path), and each epoch commits
     bounded per-sink appends."""
-    src_dir = os.path.join(scratch_dir, "docs_src")
     sink_dirs = {s: os.path.join(scratch_dir, f"sink_{s}") for s in QUALITY_SINKS}
-    for d in (src_dir, *sink_dirs.values()):
-        shutil.rmtree(d, ignore_errors=True)
-
-    slim = docs.select("doc_id", "lang", "text")
-    slim.repartitionByRange(n_files, "doc_id").write.parquet(src_dir)
     routed_schema = "doc_id bigint, lang string, n_tokens bigint"
 
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src_dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        eid = int(epoch_id)
+    def handle(batch_df: DataFrame, eid: int) -> None:
         scored = batch_df.select(
             "doc_id",
             "lang",
@@ -314,12 +321,10 @@ def stream_quality_routing(
         for s, d in sink_dirs.items():
             _commit_epoch(scored.filter(F.col("sink") == s).drop("sink"), d, eid)
 
-    q = stream.writeStream.foreachBatch(_deliver(handle)).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
+    _stream_epochs(
+        docs.select("doc_id", "lang", "text"), "doc_id", n_files,
+        os.path.join(scratch_dir, "docs_src"), tuple(sink_dirs.values()), handle,
+    )
     routed = None
     for s, d in sink_dirs.items():
         part = _read_epochs(spark, d, routed_schema).withColumn(
@@ -356,23 +361,10 @@ def stream_model_filter(
     epoch's cost is one map pass over its own batch; the model never
     re-trains in the hot path and the rollup is a bounded per-source
     aggregate."""
-    src_dir = os.path.join(scratch_dir, "docs_src")
     out_dir = os.path.join(scratch_dir, "scored")
-    for d in (src_dir, out_dir):
-        shutil.rmtree(d, ignore_errors=True)
-
-    slim = docs.select("doc_id", "source", "text")
-    slim.repartitionByRange(n_files, "doc_id").write.parquet(src_dir)
     scored_schema = "doc_id bigint, source string, nt bigint, keep boolean"
 
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src_dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        eid = int(epoch_id)
+    def handle(batch_df: DataFrame, eid: int) -> None:
         scored = batch_df.select(
             "doc_id",
             "source",
@@ -381,12 +373,10 @@ def stream_model_filter(
         )
         _commit_epoch(scored, out_dir, eid)
 
-    q = stream.writeStream.foreachBatch(_deliver(handle)).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
+    _stream_epochs(
+        docs.select("doc_id", "source", "text"), "doc_id", n_files,
+        os.path.join(scratch_dir, "docs_src"), (out_dir,), handle,
+    )
     rows = _read_epochs(spark, out_dir, scored_schema)
     return rows.groupBy("source").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -426,34 +416,19 @@ def stream_dsir_scoring(
     incremental store (l73), streaming ingest (this). At 100 TB each
     epoch pays one bigram explode over its batch; the head is
     TakeOrdered over bounded per-epoch score rows."""
-    src_dir = os.path.join(scratch_dir, "docs_src")
     out_dir = os.path.join(scratch_dir, "scores")
-    for d in (src_dir, out_dir):
-        shutil.rmtree(d, ignore_errors=True)
-
-    slim = docs.select("doc_id", "source", "lang", "text")
-    slim.repartitionByRange(n_files, "doc_id").write.parquet(src_dir)
     score_schema = (
         "doc_id bigint, source string, lang string, "
         "n_bigrams bigint, dsir_weight bigint"
     )
 
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src_dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        eid = int(epoch_id)
+    def handle(batch_df: DataFrame, eid: int) -> None:
         _commit_epoch(score_doc(batch_df), out_dir, eid)
 
-    q = stream.writeStream.foreachBatch(_deliver(handle)).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
+    _stream_epochs(
+        docs.select("doc_id", "source", "lang", "text"), "doc_id", n_files,
+        os.path.join(scratch_dir, "docs_src"), (out_dir,), handle,
+    )
     rows = _read_epochs(spark, out_dir, score_schema)
     return rows.orderBy(
         F.desc("dsir_weight"), F.asc("doc_id")
@@ -497,21 +472,15 @@ def stream_semdedup(
     cluster-key equi-join of the batch against the store view."""
     from datafusion_cyberpolka_eda_spark.operators import similarity as SIM
 
-    src_dir = os.path.join(scratch_dir, "vec_src")
     asg_dir = os.path.join(scratch_dir, "assignments")
     prn_dir = os.path.join(scratch_dir, "pruned")
-    for d in (src_dir, asg_dir, prn_dir):
-        shutil.rmtree(d, ignore_errors=True)
-
-    newq.repartitionByRange(n_files, "id").write.parquet(src_dir)
     asg_schema = "id bigint, cluster bigint, q array<bigint>, n2 bigint"
 
     day1 = SIM.with_n2(
         spark.read.parquet(day1_path).select("id", "cluster", "q")
     ).localCheckpoint(eager=False)  # epoch 0's pair join materializes it
 
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        eid = int(epoch_id)
+    def handle(batch_df: DataFrame, eid: int) -> None:
         batch = SIM.with_n2(
             SIM.lloyd_assign_q(batch_df, cent_q).join(batch_df, "id")
         ).localCheckpoint(eager=False)  # materialized once by the append commit
@@ -541,17 +510,10 @@ def stream_semdedup(
         _commit_epoch(batch, asg_dir, eid)
         _commit_epoch(pruned, prn_dir, eid)
 
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src_dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+    _stream_epochs(
+        newq, "id", n_files, os.path.join(scratch_dir, "vec_src"),
+        (asg_dir, prn_dir), handle,
     )
-    q = stream.writeStream.foreachBatch(_deliver(handle)).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
     asg = _read_epochs(spark, asg_dir, asg_schema)
     pruned_all = _read_epochs(spark, prn_dir, "id bigint").distinct()
     members2 = asg.join(
@@ -616,17 +578,10 @@ def stream_semdedup_adaptive(
     ratio from exactly these. Per-epoch cost: |batch| assign map passes
     + one cell-key equi-join against the store view (read the store
     pre-bucketed by cell at 100 TB)."""
-    import glob
-
     from datafusion_cyberpolka_eda_spark.operators import similarity as SIM
 
-    src_dir = os.path.join(scratch_dir, "vec_src")
     asg_dir = os.path.join(scratch_dir, "assignments")
     prn_dir = os.path.join(scratch_dir, "pruned")
-    for d in (src_dir, asg_dir, prn_dir):
-        shutil.rmtree(d, ignore_errors=True)
-
-    new_unit.repartitionByRange(n_files, "id").write.parquet(src_dir)
     asg_schema = "id bigint, cell int, unit_arr array<double>"
 
     day1 = (
@@ -640,8 +595,7 @@ def stream_semdedup_adaptive(
         else SIM.assign_cells_literal
     )
 
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        eid = int(epoch_id)
+    def handle(batch_df: DataFrame, eid: int) -> None:
         batch = (
             assign(batch_df, centers, 1)
             .join(batch_df, "id")
@@ -668,20 +622,12 @@ def stream_semdedup_adaptive(
         _commit_epoch(batch, asg_dir, eid)
         _commit_epoch(pruned, prn_dir, eid)
 
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src_dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+    n_epochs = _stream_epochs(
+        new_unit, "id", n_files, os.path.join(scratch_dir, "vec_src"),
+        (asg_dir, prn_dir), handle,
     )
-    q = stream.writeStream.foreachBatch(_deliver(handle)).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
     cells = _read_epochs(spark, asg_dir, asg_schema).select("id", "cell")
     pruned_all = _read_epochs(spark, prn_dir, "id bigint").distinct()
-    n_epochs = _epoch_count(asg_dir)
     return cells, pruned_all, n_epochs
 
 
@@ -717,19 +663,20 @@ def stream_takedown(
 
     Returns rows shaped like l38: (doc_id, old_component, new_component,
     status, new_cluster_size)."""
-    src_dir = os.path.join(scratch_dir, "req_src")
     tomb_dir = os.path.join(scratch_dir, "tombstones")
     stores_dir = os.path.join(scratch_dir, "label_stores")
-    for d in (src_dir, tomb_dir, stores_dir):
-        shutil.rmtree(d, ignore_errors=True)
-
-    requests.select("id").repartitionByRange(n_files, "id").write.parquet(src_dir)
-    # version 0 of the mutable store = the persisted day-1 labels
     day1 = spark.read.parquet(labels_path)
-    v0 = os.path.join(stores_dir, "v0")
-    day1.write.parquet(v0)
-    cur_path = [v0]
     sig_store = spark.read.parquet(sig_store_path)
+
+    def store(version: int) -> DataFrame:
+        # version 0 of the mutable store is the persisted day-1 labels;
+        # every later version is written with day-1's schema, so its read
+        # plans no schema-inference job
+        if version == 0:
+            return day1
+        return spark.read.schema(day1.schema).parquet(
+            os.path.join(stores_dir, f"v{version}")
+        )
 
     def edges_fn(remaining: DataFrame) -> DataFrame:
         sub = sig_store.join(
@@ -739,22 +686,19 @@ def stream_takedown(
             sub, num_hashes=num_hashes, est_threshold=est_threshold
         ).select("id_a", "id_b")
 
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
+    def handle(batch_df: DataFrame, eid: int) -> None:
         # replay-safe version chain: the CURRENT store is derived from
         # the stable epoch_id (v{eid}, immutable once written), the next
         # version and this epoch's tombstones are written with
         # overwrite — a re-delivered epoch recomputes v{eid+1} from the
         # same v{eid} + batch and replaces it byte-for-byte instead of
         # throwing path-exists or double-appending tombstones
-        eid = int(epoch_id)
-        cur = spark.read.parquet(os.path.join(stores_dir, f"v{eid}"))
-        removed = batch_df.select("id")
-        delta = D.takedown_components(cur, removed, edges_fn).localCheckpoint(
+        cur = store(eid)
+        delta = D.takedown_components(cur, batch_df, edges_fn).localCheckpoint(
             eager=False
         )
         survivors = delta.filter(F.col("comp").isNotNull()).select("id", "comp")
         untouched = cur.join(delta.select("id"), "id", "left_anti")
-        nxt = os.path.join(stores_dir, f"v{eid + 1}")
         # tombstones first: their commit is the delta cut's only
         # single-consumer action, so the cut caches once and the store
         # write below reads it on BOTH its branches (survivors leg +
@@ -764,22 +708,16 @@ def stream_takedown(
         _commit_epoch(
             delta.filter(F.col("comp").isNull()).select("id"), tomb_dir, eid
         )
-        untouched.unionByName(survivors).write.mode("overwrite").parquet(nxt)
-        cur_path[0] = nxt
+        untouched.unionByName(survivors).write.mode("overwrite").parquet(
+            os.path.join(stores_dir, f"v{eid + 1}")
+        )
 
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src_dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
+    n_epochs = _stream_epochs(
+        requests.select("id"), "id", n_files,
+        os.path.join(scratch_dir, "req_src"), (tomb_dir, stores_dir), handle,
     )
-    q = stream.writeStream.foreachBatch(_deliver(handle)).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
     removed_all = _read_epochs(spark, tomb_dir, "id bigint")
-    final = spark.read.parquet(cur_path[0])
+    final = store(n_epochs)
     aff = day1.join(F.broadcast(removed_all), "id").select("comp").distinct()
     members = day1.join(F.broadcast(aff), "comp")
     surv = (
@@ -833,40 +771,23 @@ def stream_chunking(
     commits one bounded append of ceil(n/stride) rows per doc, the
     chunker stays JVM-side expression-only, and the sink is the
     partitioned chunk table downstream packing jobs read."""
-    import os
-    import shutil
-
     from datafusion_cyberpolka_eda_spark.registry.llm import chunk_docs
 
-    src_dir = os.path.join(scratch_dir, "docs_src")
     chunks_dir = os.path.join(scratch_dir, "chunks")
-    for d in (src_dir, chunks_dir):
-        shutil.rmtree(d, ignore_errors=True)
-
-    slim = docs.select("doc_id", "lang", "text")
-    slim.repartitionByRange(n_files, "doc_id").write.parquet(src_dir)
     chunk_schema = (
         "doc_id bigint, lang string, n_tokens bigint, "
         "chunk_id int, start_tok bigint, chunk_tokens bigint"
     )
 
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src_dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
+    def handle(batch_df: DataFrame, eid: int) -> None:
         # chunking is per-row deterministic, so epoch-keyed overwrite
         # makes a replayed epoch a byte-identical rewrite
-        _commit_epoch(chunk_docs(batch_df), chunks_dir, int(epoch_id))
+        _commit_epoch(chunk_docs(batch_df), chunks_dir, eid)
 
-    q = stream.writeStream.foreachBatch(_deliver(handle)).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
+    _stream_epochs(
+        docs.select("doc_id", "lang", "text"), "doc_id", n_files,
+        os.path.join(scratch_dir, "docs_src"), (chunks_dir,), handle,
+    )
     ch = _read_epochs(spark, chunks_dir, chunk_schema)
     cs = (F.col("start_tok") * 8191 + F.col("chunk_tokens")) * (
         F.col("doc_id") % 97 + 1
@@ -911,11 +832,7 @@ def stream_psi_drift(
         psi_from_counts,
     )
 
-    src_dir = os.path.join(scratch_dir, "psi_src")
     counts_dir = os.path.join(scratch_dir, "psi_counts")
-    for d in (src_dir, counts_dir):
-        shutil.rmtree(d, ignore_errors=True)
-
     max_id = docs.agg(F.max("doc_id")).collect()[0][0]
     cutoff = int(0.8 * (max_id + 1))
     day1_counts = (
@@ -927,29 +844,20 @@ def stream_psi_drift(
     inc = docs.filter(F.col("doc_id") >= cutoff).select(
         "doc_id", "lang", "source", "n_chars", "text"
     )
-    inc.repartitionByRange(n_files, "doc_id").write.parquet(src_dir)
 
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src_dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
+    def handle(batch_df: DataFrame, eid: int) -> None:
         _commit_epoch(
             psi_feature_buckets(batch_df)
             .groupBy("feature", "bucket")
             .agg(F.count(F.lit(1)).alias("n")),
             counts_dir,
-            int(epoch_id),
+            eid,
         )
 
-    q = stream.writeStream.foreachBatch(_deliver(handle)).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
+    _stream_epochs(
+        inc, "doc_id", n_files, os.path.join(scratch_dir, "psi_src"),
+        (counts_dir,), handle,
+    )
     day2_counts = (
         _read_epochs(spark, counts_dir, "feature string, bucket string, n bigint")
         .groupBy("feature", "bucket")
@@ -1007,25 +915,11 @@ def stream_incremental_fingerprint_dedup(
         make_ppm_neardup_assets,
     )
 
-    src_dir = os.path.join(scratch_dir, "asset_src")
     appended_dir = os.path.join(scratch_dir, "appended_fps")
     pairs_dir = os.path.join(scratch_dir, "pairs")
-    for d in (src_dir, appended_dir, pairs_dir):
-        shutil.rmtree(d, ignore_errors=True)
-
-    increment.select("doc_id").repartitionByRange(
-        n_files, "doc_id"
-    ).write.parquet(src_dir)
     base_store = spark.read.parquet(store_path)
 
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src_dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        eid = int(epoch_id)
+    def handle(batch_df: DataFrame, eid: int) -> None:
         fps = ahash63_fingerprints(
             make_ppm_neardup_assets(batch_df)
         ).localCheckpoint(eager=False)
@@ -1044,12 +938,10 @@ def stream_incremental_fingerprint_dedup(
         _commit_epoch(fps, appended_dir, eid)
         _commit_epoch(pairs.select("id_a", "id_b", "hamming"), pairs_dir, eid)
 
-    q = stream.writeStream.foreachBatch(_deliver(handle)).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
+    _stream_epochs(
+        increment.select("doc_id"), "doc_id", n_files,
+        os.path.join(scratch_dir, "asset_src"), (appended_dir, pairs_dir), handle,
+    )
     src = F.lit(1 << 23)
     both_new = (F.col("id_a") % src >= cutoff) & (F.col("id_b") % src >= cutoff)
     return _read_epochs(
@@ -1117,27 +1009,13 @@ def stream_crossmodal_dedup(
         _xm_union_edges,
     )
 
-    src_dir = os.path.join(scratch_dir, "pair_src")
     tsig_dir = os.path.join(scratch_dir, "appended_sigs")
     fp_dir = os.path.join(scratch_dir, "appended_fps")
     edges_dir = os.path.join(scratch_dir, "edges")
-    for d in (src_dir, tsig_dir, fp_dir, edges_dir):
-        shutil.rmtree(d, ignore_errors=True)
-
-    increment.select("doc_id", "text", "source").repartitionByRange(
-        n_files, "doc_id"
-    ).write.parquet(src_dir)
     sig_store = spark.read.parquet(sig_store_path)
     fp_store = spark.read.parquet(fp_store_path)
 
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src_dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        eid = int(epoch_id)
+    def handle(batch_df: DataFrame, eid: int) -> None:
         corpus = _paired_corpus(batch_df).localCheckpoint(eager=False)
         sigs = D.minhash_signatures_portable(
             corpus, "doc_id", "text", n=3, num_hashes=32, bands=8
@@ -1185,12 +1063,11 @@ def stream_crossmodal_dedup(
             fut_fps.result()
         _commit_epoch(_xm_union_edges(tpairs, ipairs), edges_dir, eid)
 
-    q = stream.writeStream.foreachBatch(_deliver(handle)).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
+    _stream_epochs(
+        increment.select("doc_id", "text", "source"), "doc_id", n_files,
+        os.path.join(scratch_dir, "pair_src"), (tsig_dir, fp_dir, edges_dir),
+        handle,
+    )
     base_mod = F.lit(8388608)  # 2^23: both twin offsets are 0 mod this
     both_new = (F.col("id_a") % base_mod >= cutoff) & (
         F.col("id_b") % base_mod >= cutoff
@@ -1257,15 +1134,8 @@ def stream_domain_mixture(
         _mixture_report_cols,
     )
 
-    src_dir = os.path.join(scratch_dir, "mix_src")
     keyed_dir = os.path.join(scratch_dir, "keyed")
     delta_dir = os.path.join(scratch_dir, "agg_deltas")
-    for d in (src_dir, keyed_dir, delta_dir):
-        shutil.rmtree(d, ignore_errors=True)
-
-    increment.select("doc_id", "nt", "embedding").repartitionByRange(
-        n_files, "doc_id"
-    ).write.parquet(src_dir)
     keyed_schema = (
         "doc_id bigint, cluster bigint, nt bigint, rkey bigint, bucket int"
     )
@@ -1273,14 +1143,7 @@ def stream_domain_mixture(
         "cluster bigint, bucket int, n bigint, tokens bigint, id_sum bigint"
     )
 
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src_dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        eid = int(epoch_id)
+    def handle(batch_df: DataFrame, eid: int) -> None:
         keyed = (
             SIM.lloyd_assign_q(SIM.quantize_q(batch_df, "doc_id", "embedding"), cent)
             .select(
@@ -1307,12 +1170,10 @@ def stream_domain_mixture(
             eid,
         )
 
-    q = stream.writeStream.foreachBatch(_deliver(handle)).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
+    _stream_epochs(
+        increment.select("doc_id", "nt", "embedding"), "doc_id", n_files,
+        os.path.join(scratch_dir, "mix_src"), (keyed_dir, delta_dir), handle,
+    )
     inc_keyed = _read_epochs(spark, keyed_dir, keyed_schema).localCheckpoint(
         eager=False
     )

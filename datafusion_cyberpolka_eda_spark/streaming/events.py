@@ -20,6 +20,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from datafusion_cyberpolka_eda_spark.sources.catalog import normalize_event_ts
+from datafusion_cyberpolka_eda_spark.streaming.documents import (
+    _commit_epoch,
+    _read_epochs,
+    _stream_epochs,
+)
 
 
 @contextmanager
@@ -219,60 +224,51 @@ def stream_foreachbatch_incremental(
 ) -> DataFrame:
     """foreachBatch custom sink — the production pattern for sinks Spark
     has no native writer for (JDBC upserts, external indexes, multi-table
-    writes): each micro-batch is aggregated and APPENDED as a partial
-    result tagged with its epoch; consumers roll partials up to totals.
+    writes): each micro-batch is aggregated and committed as a partial
+    result keyed by its epoch; consumers roll partials up to totals.
 
-    The source is fanned into 4 files and streamed with
-    maxFilesPerTrigger=1, so the query genuinely runs MULTIPLE epochs and
-    the final rollup exercises cross-epoch accumulation, not a single
-    batch in disguise. Partial sums go through DECIMAL so the
-    append-then-rollup total is bit-identical to a direct batch
-    aggregation no matter how rows split across epochs — that equality
-    is the j11 oracle. At scale the same shape gives bounded sink
-    transactions per epoch and idempotent replay (epoch id in the path
-    would make re-running an epoch overwrite, not double-append)."""
-    import shutil
-
+    The source runs through the documents-stream forced-epoch harness
+    (4 files of contiguous event_id ranges, maxFilesPerTrigger=1), so the
+    query genuinely runs MULTIPLE epochs and the final rollup exercises
+    cross-epoch accumulation, not a single batch in disguise. Partial
+    sums go through DECIMAL so the rollup is bit-identical to a direct
+    batch aggregation no matter how rows split across epochs — that
+    equality is the j11 oracle. Each epoch's partials commit through the
+    epoch-keyed manifest store, so a re-delivered epoch overwrites its
+    own partials instead of counting them twice."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    src_dir = os.path.join(scratch_dir, "fb_src")
     target = os.path.join(scratch_dir, "fb_partials")
-    for d in (src_dir, target):
-        shutil.rmtree(d, ignore_errors=True)
     src = normalize_event_ts(spark.read.parquet(parquet_path))
-    src.repartition(4).write.parquet(src_dir)
 
-    stream = (
-        spark.readStream.schema(spark.read.parquet(src_dir).schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src_dir)
-    )
-
-    def handle(batch_df: DataFrame, epoch_id: int) -> None:
-        (
-            batch_df.groupBy("user_id")
+    def partials(df: DataFrame, eid: int) -> DataFrame:
+        return (
+            df.groupBy("user_id")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
                 F.sum(F.col("value").cast("decimal(18,2)")).alias("cents"),
             )
-            .withColumn("epoch", F.lit(epoch_id))
-            .write.mode("append")
-            .parquet(target)
+            .withColumn("epoch", F.lit(eid))
         )
+
+    def handle(batch_df: DataFrame, eid: int) -> None:
+        _commit_epoch(partials(batch_df, eid), target, eid)
 
     with scoped_state_partitions(spark):
         # foreachBatch plans batch_df per epoch with the session conf:
         # 4 epochs x a 32-partition groupBy is shuffle-setup overhead,
         # not work, for a bounded drain
-        q = stream.writeStream.foreachBatch(handle).start()
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    partials = spark.read.parquet(target)
-    return partials.groupBy("user_id").agg(
-        F.sum("n_events").alias("n_events"),
-        F.sum("cents").cast("double").alias("total_value"),
+        _stream_epochs(
+            src, "event_id", 4, os.path.join(scratch_dir, "fb_src"),
+            (target,), handle,
+        )
+    return (
+        _read_epochs(spark, target, partials(src, 0).schema)
+        .groupBy("user_id")
+        .agg(
+            F.sum("n_events").alias("n_events"),
+            F.sum("cents").cast("double").alias("total_value"),
+        )
     )
 
 

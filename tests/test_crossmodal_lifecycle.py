@@ -18,7 +18,10 @@ from datafusion_cyberpolka_eda_spark.operators.multimodal import (
     make_ppm_neardup_assets,
 )
 from datafusion_cyberpolka_eda_spark.registry.llm_multimodal import (
+    _mm_fp_store,
     _paired_corpus,
+    _xm_cc_store,
+    _xm_text_store,
     _xm_union_edges,
     l78b_crossmodal_incremental,
     l78c_crossmodal_takedown,
@@ -123,12 +126,28 @@ class TestCrossmodalNoDay1Rescan:
                 "day-1 payloads would be re-processed:\n" + b
             )
 
-    def test_takedown_plan_reads_only_stores(self, spark, sf_dir):
-        """The l78c delta plan must scan only the persisted label store
+    def test_takedown_plan_reads_only_stores(self, spark, sf_dir, monkeypatch):
+        """The l78c delta plans must scan only the persisted label store
         — never the documents table (edge rebuilds slice the two
-        persisted stores; the CC stage is checkpoint-materialized)."""
+        persisted stores). The affected members and the CC stage are
+        checkpoint-materialized, so the plan of every cut is checked
+        along with the returned plan."""
+        _xm_text_store(spark, sf_dir)
+        _mm_fp_store(spark, sf_dir, "image")
+        _xm_cc_store(spark, sf_dir)
+        plans = []
+        frame_cls = type(spark.range(1))
+        real_cut = frame_cls.localCheckpoint
+
+        def recording_cut(self, eager=True):
+            plans.append(self._jdf.queryExecution().executedPlan().toString())
+            return real_cut(self, eager)
+
+        monkeypatch.setattr(frame_cls, "localCheckpoint", recording_cut)
         df = l78c_crossmodal_takedown(spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        plan = "\n".join(
+            plans + [df._jdf.queryExecution().executedPlan().toString()]
+        )
         assert "xm_cc_store_" in plan, "expected the label-store scan"
         assert "documents.parquet" not in plan, (
             "cross-modal takedown plan scanned documents text"

@@ -47,7 +47,7 @@ class TestEpochManifest:
             ).collect()
         }
         assert below == {1, 2, 3}
-        assert SD._epoch_count(root) == 3
+        assert len(SD._manifest_entries(root)) == 3
 
     def test_replayed_epoch_publishes_exactly_once(self, spark, tmp_path):
         """A re-delivered epoch (same stable epoch_id) overwrites its
@@ -58,7 +58,7 @@ class TestEpochManifest:
         _commit(spark, root, 0, [1, 2])  # the at-least-once replay
         rows = SD._read_epochs(spark, root, "id bigint").collect()
         assert sorted(r["id"] for r in rows) == [1, 2]
-        assert SD._epoch_count(root) == 1
+        assert len(SD._manifest_entries(root)) == 1
         # the manifest points only at files that exist (the replay's
         # overwrite rewrote part names; a stale entry would dangle)
         for rec in SD._manifest_entries(root):
@@ -71,7 +71,7 @@ class TestEpochManifest:
             SD._read_epochs(spark, root, "id bigint").count() == 0
         ), "no store yet -> empty frame"
         _commit(spark, root, 0, [])
-        assert SD._epoch_count(root) == 1
+        assert len(SD._manifest_entries(root)) == 1
         assert SD._read_epochs(spark, root, "id bigint").count() == 0
 
     def test_reader_does_not_glob_epoch_dirs(self, spark, tmp_path, monkeypatch):

@@ -67,11 +67,11 @@ class TestLedgerMerge:
         the pushed >= cutoff predicate — old text enters only via the
         ledger parquet."""
         from datafusion_cyberpolka_eda_spark.registry.llm_incremental import (
-            _mixture_store,
+            _source_ledger_store,
             l36_incremental_mixture_refresh,
         )
 
-        cutoff, _path = _mixture_store(spark, sf_dir)
+        cutoff, _path = _source_ledger_store(spark, sf_dir)
         df = l36_incremental_mixture_refresh(spark, sf_dir)
         buf = io.StringIO()
         with redirect_stdout(buf):
@@ -93,7 +93,7 @@ class TestLedgerMerge:
         from datafusion_cyberpolka_eda_spark.registry import llm_incremental as L
 
         L.l36_incremental_mixture_refresh(spark, sf_dir).collect()
-        stores = [v for k, v in L._MIXTURE_STORE_CACHE.items() if sf_dir in k]
+        stores = [v for k, v in L._LEDGER_STORE_CACHE.items() if sf_dir in k]
         assert stores
         _cutoff, path = stores[-1]
 

@@ -575,7 +575,10 @@ def test_foreachbatch_runs_multiple_epochs(spark, tmp_path):
     )
     import os as _os
 
-    partials = spark.read.parquet(_os.path.join(scratch, "fb_partials"))
+    # the partials are an epoch-keyed store: one directory per epoch
+    partials = spark.read.option("recursiveFileLookup", "true").parquet(
+        _os.path.join(scratch, "fb_partials")
+    )
     assert partials.select("epoch").distinct().count() >= 2
     batch = (
         spark.read.parquet("/root/testdata/sf0.001/events.parquet")

@@ -1,15 +1,19 @@
 """At-least-once replay idempotency (r7 ADVICE): Structured Streaming
 may re-deliver a foreachBatch epoch with the SAME epoch_id after a
-transient failure. Every handler in streaming/documents.py writes
+transient failure. Every foreachBatch handler in streaming/ writes
 epoch-keyed directories with mode('overwrite'), so a replayed epoch must
 rewrite — never duplicate, never throw path-exists. These tests flip the
-module's _TEST_REPLAY shim so EVERY epoch is delivered twice, then
-assert the accumulated result still equals the batch answer."""
+documents module's _TEST_REPLAY shim (j11's test patches the stream
+writer itself) so EVERY epoch is delivered twice, then assert the
+accumulated result still equals the batch answer."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from datafusion_cyberpolka_eda_spark.operators import dedup as D
 from datafusion_cyberpolka_eda_spark.sources.catalog import load_table
@@ -477,3 +481,42 @@ class TestAssetIngestReplay:
         )
         want = l79c_domain_mixture_incremental(spark, sf_dir)
         assert _rows(streamed) == _rows(want)
+
+
+class TestForeachBatchSinkReplay:
+    def test_j11_rollup_survives_double_delivery(
+        self, spark, sf_dir, tmp_path, monkeypatch
+    ):
+        """Every epoch delivered twice with the same epoch_id (patched at
+        the writer, so no driver can bypass it): the rolled-up partials
+        must still equal the direct batch aggregation."""
+        from datafusion_cyberpolka_eda_spark.sources.catalog import (
+            normalize_event_ts,
+        )
+        from datafusion_cyberpolka_eda_spark.streaming.events import (
+            stream_foreachbatch_incremental,
+        )
+
+        real = DataStreamWriter.foreachBatch
+
+        def twice(self, func):
+            def replayed(batch_df, epoch_id):
+                func(batch_df, epoch_id)
+                func(batch_df, epoch_id)
+
+            return real(self, replayed)
+
+        monkeypatch.setattr(DataStreamWriter, "foreachBatch", twice)
+        path = os.path.join(sf_dir, "events.parquet")
+        got = stream_foreachbatch_incremental(spark, path, str(tmp_path / "fb"))
+        want = (
+            normalize_event_ts(spark.read.parquet(path))
+            .groupBy("user_id")
+            .agg(
+                F.count(F.lit(1)).alias("n_events"),
+                F.sum(F.col("value").cast("decimal(18,2)"))
+                .cast("double")
+                .alias("total_value"),
+            )
+        )
+        assert _rows(got) == _rows(want)

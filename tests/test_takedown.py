@@ -149,15 +149,29 @@ class TestTakedownRealData:
 
 
 class TestTakedownNoRescan:
-    def test_l38_plan_reads_only_stores(self, spark, sf_dir):
-        """The l38 entry's returned plan must scan only the persisted
-        label store — never the documents table (the CC stage is
-        checkpoint-materialized during construction, so the signature
-        store scan is asserted separately below)."""
+    def test_l38_plan_reads_only_stores(self, spark, sf_dir, monkeypatch):
+        """The l38 entry's plans must scan only the persisted label store
+        — never the documents table. The affected members and the CC
+        stage are checkpoint-materialized during construction, so the
+        plan of every cut is checked along with the returned plan (the
+        signature store scan is asserted separately below)."""
         from datafusion_cyberpolka_eda_spark.registry import llm_incremental as L
 
+        L._incremental_store(spark, sf_dir)
+        L._incremental_cc_store(spark, sf_dir)
+        plans = []
+        frame_cls = type(spark.range(1))
+        real_cut = frame_cls.localCheckpoint
+
+        def recording_cut(self, eager=True):
+            plans.append(self._jdf.queryExecution().executedPlan().toString())
+            return real_cut(self, eager)
+
+        monkeypatch.setattr(frame_cls, "localCheckpoint", recording_cut)
         df = L.l38_takedown_propagation(spark, sf_dir)
-        plan = df._jdf.queryExecution().executedPlan().toString()
+        plan = "\n".join(
+            plans + [df._jdf.queryExecution().executedPlan().toString()]
+        )
         assert "cc_store_" in plan, "expected the label-store scan in the plan"
         assert "documents.parquet" not in plan, (
             "takedown plan scanned documents text"
