@@ -1155,12 +1155,29 @@ def dedup_pipeline_oracle(
     """
 
 
+def edges_among(edges: DataFrame, members: DataFrame) -> DataFrame:
+    """The (id_a, id_b) edges of a PERSISTED edge list whose both
+    endpoints are in ``members`` (id) — the edge rebuild of a takedown:
+    two broadcast semi-joins slice the day-1 banded pairs written beside
+    the label store, so neither old text nor the signature store is read
+    and no banded self-join re-runs. Exact: a pair's banded estimate
+    depends only on its two signatures, so the pairs among a member set
+    are the day-1 pairs with both ends in it."""
+    ids = F.broadcast(members.select("id"))
+    return (
+        edges.join(ids.withColumnRenamed("id", "id_a"), "id_a", "semi")
+        .join(ids.withColumnRenamed("id", "id_b"), "id_b", "semi")
+        .select("id_a", "id_b")
+    )
+
+
 def takedown_components(
     old_labels: DataFrame,
     removed_ids: DataFrame,
     edges_fn,
     max_iter: int = 25,
     checkpoint_dir: str | None = None,
+    gone: DataFrame | None = None,
 ) -> DataFrame:
     """Takedown propagation through a persisted component-label store —
     the DELETE half of incremental dedup maintenance
@@ -1176,36 +1193,52 @@ def takedown_components(
     the corpus (it is a request batch, not a corpus scan) — broadcast.
     ``edges_fn``: callable (remaining_members: DataFrame[id, comp]) ->
     DataFrame[id_a, id_b] rebuilding the similarity edges AMONG those
-    members — in production, a banded self-join over the persisted
-    signature store restricted to them (banded_pairs_from_signatures on a
-    semi-joined store slice; old text is never re-read). Restricting to
-    affected-component members is EXACT because deletion can only split
-    components, never merge them: any surviving edge lies inside one old
-    component, so the re-derived clusters are confined to old boundaries.
+    members — in production, ``edges_among`` over the day-1 edge list
+    persisted beside the label store (old text is never re-read).
+    Restricting to affected-component members is EXACT because deletion
+    can only split components, never merge them: any surviving edge lies
+    inside one old component, so the re-derived clusters are confined to
+    old boundaries.
+    ``gone``: (id) — docs already removed by EARLIER takedowns of the
+    same ``old_labels`` (the streaming takedown's logged tombstones).
+    They count as removed inside the components ``removed_ids`` touch,
+    but do not make a component affected on their own, so a later batch
+    re-derives its components over what every earlier batch left.
 
     Returns the store update delta, one row per member of every affected
     component: (id, old_comp, comp) where comp is the re-derived label
-    for survivors and NULL for removed docs (tombstone rows the caller
-    turns into store deletes). Members whose every edge vanished come out
-    as singletons labeled by their own id. Components containing no
-    removed doc are untouched and absent from the delta.
+    for survivors and NULL for removed docs (``removed_ids`` and
+    ``gone`` alike — tombstone rows the caller turns into store
+    deletes). Members whose every edge vanished come out as singletons
+    labeled by their own id. Components containing no doc of
+    ``removed_ids`` are untouched and absent from the delta.
 
     Scale shape: cost tracks |request| + |affected components| + the
-    edge rebuild over affected members only — never |corpus|. Keep the
-    label store partitioned by comp and the signature store bucketed by
-    id so the member pull and signature slice are pruned reads."""
-    removed = removed_ids.select(F.col(removed_ids.columns[0]).alias("id")).distinct()
-    affected = old_labels.join(F.broadcast(removed), "id").select("comp").distinct()
+    edge slice over affected members only — never |corpus|; a streaming
+    epoch that passes its earlier tombstones as ``gone`` costs |batch| +
+    |touched day-1 components|. Each such re-derivation runs over a
+    subset of the members the previous one kept, so a survivor's label
+    (min member id) never decreases from epoch to epoch: the largest
+    label logged for an id is its current one. Keep the label store
+    partitioned by comp and the edge list bucketed by id so the member
+    pull and edge slice are pruned reads."""
+    req = removed_ids.select(F.col(removed_ids.columns[0]).alias("id"))
+    gone_ids = req if gone is None else req.unionByName(
+        gone.select(F.col(gone.columns[0]).alias("id"))
+    )
+    # the touched components enter as a broadcast SEMI join, so their
+    # duplicates (one per removed member) need no distinct shuffle
+    touched = old_labels.join(F.broadcast(req), "id").select("comp")
     # every affected member tagged removed-or-not in ONE broadcast left
     # join and cut once, so remaining and tombstones are both filters of
     # the same cached rows: no consumer of the delta recomputes removed,
     # affected or members. With AQE on, the lazy cut runs the distinct
-    # shuffles and broadcasts of its plan here, at the call; only its
+    # shuffle and broadcasts of its plan here, at the call; only its
     # final stage waits for the first CC job over the rebuilt edges
-    gone = removed.select("id", F.lit(True).alias("_gone"))
+    tag = gone_ids.distinct().select("id", F.lit(True).alias("_gone"))
     tagged = (
-        old_labels.join(F.broadcast(affected), "comp")
-        .join(F.broadcast(gone), "id", "left")
+        old_labels.join(F.broadcast(touched), "comp", "semi")
+        .join(F.broadcast(tag), "id", "left")
         .localCheckpoint(eager=False)
     )
     remaining = tagged.filter(F.col("_gone").isNull()).drop("_gone")
@@ -1213,9 +1246,15 @@ def takedown_components(
     relabeled = connected_components(
         edges, "id_a", "id_b", max_iter=max_iter, checkpoint_dir=checkpoint_dir
     )
+    # the relabeled members are a subset of the remaining ones, both
+    # bounded by the affected components: broadcast, not a shuffle join
     survivors = (
         remaining.select("id", F.col("comp").alias("old_comp"))
-        .join(relabeled.withColumnRenamed("comp", "new_comp"), "id", "left")
+        .join(
+            F.broadcast(relabeled.withColumnRenamed("comp", "new_comp")),
+            "id",
+            "left",
+        )
         .select("id", "old_comp", F.coalesce("new_comp", "id").alias("comp"))
     )
     tombstones = (

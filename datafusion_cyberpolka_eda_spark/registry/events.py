@@ -467,23 +467,23 @@ def _j17_oracle() -> str:
 def j17_stream_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming takedown propagation — the continuous-request shape of
     l38: the removal list arrives as 3 forced micro-batches; each epoch
-    re-derives only the components its requests touch against the
-    CURRENT label store (edge rebuilds slice the fixed day-1 signature
-    store), writes the next store version, and appends tombstones.
-    Because deletion only splits components and labels are min member
-    ids, sequential application is order-independent and the final
-    store equals the one-shot batch takedown — so the rollup is
-    value-hash-checked against l38's from-scratch DuckDB replay."""
+    re-derives only the day-1 components its requests touch (earlier
+    epochs' tombstones counted as gone), slices their edges from the
+    day-1 edge list persisted beside the label store, and commits one
+    epoch-keyed label delta. Because deletion only splits components
+    and labels are min member ids, sequential application is
+    order-independent and the final store equals the one-shot batch
+    takedown — so the rollup is value-hash-checked against l38's
+    from-scratch DuckDB replay."""
 
     from datafusion_cyberpolka_eda_spark.registry.llm_incremental import (
+        _incremental_cc_edges,
         _incremental_cc_store,
-        _incremental_store,
     )
     from datafusion_cyberpolka_eda_spark.streaming.documents import (
         stream_takedown,
     )
 
-    _, sig_path = _incremental_store(spark, sf_dir)
     labels_path = _incremental_cc_store(spark, sf_dir)
     requests = (
         spark.read.parquet(labels_path)
@@ -491,7 +491,10 @@ def j17_stream_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("id")
     )
     scratch = _scratch_dir(spark, "j17", sf_dir)
-    return stream_takedown(spark, requests, labels_path, sig_path, scratch)
+    return stream_takedown(
+        spark, requests, labels_path, _incremental_cc_edges(spark, sf_dir),
+        scratch,
+    )
 
 
 def _j18_oracle() -> str:

@@ -127,11 +127,21 @@ _INCR_CC_CACHE: dict[str, str] = {}
 def _incremental_cc_store(spark: SparkSession, sf_dir: str) -> str:
     """Build ONCE per (session, data) the persisted day-1 COMPONENT-LABEL
     store: day-1 banded pairs rebuilt from the persisted signature store
-    (banded_pairs_from_signatures — day-1 text is never re-shingled),
-    HashMin connected components over them, (id, comp) written to parquet
-    the way a daily dedup job persists its cluster assignment. Returns
-    the parquet path; keyed by the same data fingerprint as the signature
-    store so testdata regeneration invalidates it."""
+    (banded_pairs_from_signatures — day-1 text is never re-shingled) and
+    written as the day-1 EDGE LIST (id_a, id_b) ``edges.parquet``, then
+    HashMin connected components over the read-back edges, (id, comp)
+    written to ``labels.parquet`` beside it — the way a daily dedup job
+    persists its cluster assignment. Returns the labels path
+    (``_incremental_cc_edges`` gives the edge list's); keyed by the same
+    data fingerprint as the signature store so testdata regeneration
+    invalidates it.
+
+    The day-1 pairs are computed once here: takedowns (l38, l40, j17)
+    slice the edge list with ``dedup.edges_among`` instead of re-running
+    the banded self-join over a signature slice, so a takedown's edge
+    rebuild is one scan of the edge list probed against the affected
+    members (bucket the list by id at scale so the scan prunes), and a
+    j17 epoch costs |batch| + |touched day-1 components|."""
     key = (
         f"{spark.sparkContext.applicationId}:{sf_dir}:"
         f"{_docs_fingerprint(sf_dir)}"
@@ -145,14 +155,28 @@ def _incremental_cc_store(spark: SparkSession, sf_dir: str) -> str:
 
     _cutoff, sig_path = _incremental_store(spark, sf_dir)
     sigs = spark.read.parquet(sig_path)
-    pairs = D.banded_pairs_from_signatures(sigs, num_hashes=32, est_threshold=0.45)
-    labels = D.connected_components(pairs, "id_a", "id_b")
+    pairs = D.banded_pairs_from_signatures(
+        sigs, num_hashes=32, est_threshold=0.45
+    ).select("id_a", "id_b")
     out = tempfile.mkdtemp(prefix="cc_store_")
     atexit.register(shutil.rmtree, out, ignore_errors=True)
+    edges_path = os.path.join(out, "edges.parquet")
+    pairs.write.mode("overwrite").parquet(edges_path)
+    edges = spark.read.schema(pairs.schema).parquet(edges_path)
+    labels = D.connected_components(edges, "id_a", "id_b")
     path = os.path.join(out, "labels.parquet")
     labels.write.mode("overwrite").parquet(path)
     _INCR_CC_CACHE[key] = path
     return path
+
+
+def _incremental_cc_edges(spark: SparkSession, sf_dir: str) -> str:
+    """Path of the day-1 edge list (id_a, id_b) that
+    ``_incremental_cc_store`` persists beside its labels."""
+    import os
+
+    labels_path = _incremental_cc_store(spark, sf_dir)
+    return os.path.join(os.path.dirname(labels_path), "edges.parquet")
 
 
 def _l33_oracle() -> str:
@@ -1136,15 +1160,16 @@ def l38_takedown_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic stand-in for a request list) is removed from the
     persisted stores, and every cluster that contained one is re-derived
     over its remaining members via dedup.takedown_components: affected-
-    component pull -> signature-store slice -> banded pair rebuild ->
-    bounded CC. Deletion can SPLIT clusters (the removed doc may have
-    been the only bridge) and retire labels (comp = min member id), so
-    survivors carry relabeled/unchanged statuses and removed docs emit
-    tombstone rows the store write-back turns into deletes.
+    component pull -> day-1 edge-list slice -> bounded CC. Deletion can
+    SPLIT clusters (the removed doc may have been the only bridge) and
+    retire labels (comp = min member id), so survivors carry
+    relabeled/unchanged statuses and removed docs emit tombstone rows
+    the store write-back turns into deletes.
 
     Old text is never re-read: connectivity is rebuilt purely from the
-    persisted signature store (banded_pairs_from_signatures over a
-    semi-joined slice — a plan test pins the no-documents-scan shape).
+    day-1 edge list persisted beside the label store (dedup.edges_among,
+    two broadcast semi-joins — a plan test pins the no-documents-scan
+    shape).
     The DuckDB oracle replays from scratch: full-corpus portable MinHash,
     day-1 CC, drop the removed set, re-run CC over the remaining members
     of affected components — the incremental path must reproduce
@@ -1153,19 +1178,12 @@ def l38_takedown_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: cost tracks |request| + |affected components|, never
     |corpus| — the daily takedown job at 100 TB touches a few thousand
     clusters, not the store."""
-    cutoff, sig_path = _incremental_store(spark, sf_dir)
-    labels_path = _incremental_cc_store(spark, sf_dir)
-    store = spark.read.parquet(sig_path)
-    labels = spark.read.parquet(labels_path)
+    labels = spark.read.parquet(_incremental_cc_store(spark, sf_dir))
+    edges = spark.read.parquet(_incremental_cc_edges(spark, sf_dir))
     removed = labels.filter(F.col("id") % 7 == 3).select("id")
-
-    def edges_fn(remaining: DataFrame) -> DataFrame:
-        sub = store.join(F.broadcast(remaining.select("id")), "id", "semi")
-        return D.banded_pairs_from_signatures(
-            sub, num_hashes=32, est_threshold=0.45
-        ).select("id_a", "id_b")
-
-    delta = D.takedown_components(labels, removed, edges_fn)
+    delta = D.takedown_components(
+        labels, removed, lambda members: D.edges_among(edges, members)
+    )
     sizes = (
         delta.filter(F.col("comp").isNotNull())
         .groupBy("comp")
@@ -1454,9 +1472,10 @@ def l40_takedown_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus-ledger decrement accounting (docs/tokens/sources removed) —
     emitting one (stage, metric, value) row per outcome.
 
-    No-rescan contract: connectivity is rebuilt purely from the signature
-    store and token counts come from the stats ledger; the ONLY documents
-    access is a column-pruned (doc_id, source) read for the ledger stage
+    No-rescan contract: connectivity is sliced purely from the persisted
+    day-1 edge list and token counts come from the stats ledger; the
+    ONLY documents access is a column-pruned (doc_id, source) read for
+    the ledger stage
     — the text column is never scanned (a plan test pins the pruned
     ReadSchema).
 
@@ -1465,22 +1484,13 @@ def l40_takedown_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     window picks, ledger sums), so the composed delete flow — not just
     l38 alone — is value-hash-checked end-to-end."""
     docs = load_table(spark, sf_dir, "documents")
-    cutoff, sig_path = _incremental_store(spark, sf_dir)
-    labels_path = _incremental_cc_store(spark, sf_dir)
     stats_path, surv_path = _incremental_surv_store(spark, sf_dir)
-    store = spark.read.parquet(sig_path)
-    labels = spark.read.parquet(labels_path)
+    labels = spark.read.parquet(_incremental_cc_store(spark, sf_dir))
+    edges = spark.read.parquet(_incremental_cc_edges(spark, sf_dir))
     removed = labels.filter(F.col("id") % 7 == 3).select("id")
-
-    def edges_fn(remaining: DataFrame) -> DataFrame:
-        sub = store.join(F.broadcast(remaining.select("id")), "id", "semi")
-        return D.banded_pairs_from_signatures(
-            sub, num_hashes=32, est_threshold=0.45
-        ).select("id_a", "id_b")
-
-    delta = D.takedown_components(labels, removed, edges_fn).localCheckpoint(
-        eager=False
-    )
+    delta = D.takedown_components(
+        labels, removed, lambda members: D.edges_among(edges, members)
+    ).localCheckpoint(eager=False)
     surv = delta.filter(F.col("comp").isNotNull())
 
     def rows(stage: str, df: DataFrame) -> DataFrame:

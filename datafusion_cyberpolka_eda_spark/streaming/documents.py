@@ -65,6 +65,28 @@ def _commit_epoch(df: DataFrame, root: str, epoch_id: int) -> None:
     os.replace(tmp, os.path.join(man, f"epoch_{eid:08d}.json"))
 
 
+def _commit_concurrently(
+    spark: SparkSession, epoch_id: int, *commits: tuple[DataFrame, str]
+) -> None:
+    """Run ``_commit_epoch(df, root, epoch_id)`` for each (df, root) of
+    ``commits`` — epoch writes to DISJOINT stores — as concurrent jobs
+    from a small pool (guide §2.6: each job back-fills the cores the
+    others' tails leave idle). Either failure raises out of the handler,
+    so the epoch still replays as one transaction. Each commit is
+    wrapped per submission, so it runs with its own copy of the
+    handler's local properties: its jobs keep the query's job group and
+    cancel with q.stop() (a plain pool thread carries no job group)."""
+    with ThreadPoolExecutor(max_workers=len(commits)) as pool:
+        futs = [
+            pool.submit(
+                inheritable_thread_target(spark)(_commit_epoch), df, root, epoch_id
+            )
+            for df, root in commits
+        ]
+        for fut in futs:
+            fut.result()
+
+
 def _manifest_entries(root: str, below: int | None = None) -> list[dict]:
     """Parse the manifest log under ``root`` with a single directory
     listing; entries for epochs >= ``below`` are dropped (the handler's
@@ -147,7 +169,10 @@ def _read_epochs(
 ) -> DataFrame:
     """Read the union of committed epochs of the store under ``root``
     (optionally only epochs strictly below ``below``). Returns an empty
-    frame with ``schema`` when no epoch has committed yet.
+    frame with ``schema`` when no epoch has committed yet: one over a
+    partitionless RDD, so a plan that reads it runs no task for it (an
+    empty local list would parallelize into one Python-worker task per
+    core, ~0.2 s on the epoch-0 job that reads it).
 
     Stores written through ``_commit_epoch`` are read from the manifest
     log: ONE listing of the ``_manifest/`` prefix yields the data-file
@@ -166,7 +191,7 @@ def _read_epochs(
             for f in rec["files"]
         ]
         if not files:
-            return spark.createDataFrame([], schema)
+            return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
         return spark.read.schema(schema).parquet(*files)
 
     import glob
@@ -179,7 +204,7 @@ def _read_epochs(
             if int(os.path.basename(d).rsplit("_", 1)[1]) < below
         ]
     if not dirs:
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame(spark.sparkContext.emptyRDD(), schema)
     return spark.read.schema(schema).parquet(*dirs)
 
 
@@ -635,97 +660,81 @@ def stream_takedown(
     spark: SparkSession,
     requests: DataFrame,
     labels_path: str,
-    sig_store_path: str,
+    edges_path: str,
     scratch_dir: str,
     *,
-    num_hashes: int = 32,
-    est_threshold: float = 0.45,
     n_files: int = 3,
 ) -> DataFrame:
     """Streaming takedown / right-to-be-forgotten — the continuous shape
     of the l38 batch operator: removal requests arrive as micro-batches
     (maxFilesPerTrigger=1 over ``n_files`` request files — the queue
-    stand-in) and each epoch applies dedup.takedown_components against
-    the CURRENT label store, re-deriving only the components that
-    epoch's requests touch (edge rebuilds slice the FIXED day-1
-    signature store; old text is never re-read). The epoch then writes
-    the next store version — survivors relabeled, removed ids deleted —
-    and appends its tombstones, so each epoch is the bounded
-    delete-transaction a 100 TB pipeline commits per request batch.
+    stand-in) and each epoch is ONE bounded delete transaction over
+    immutable inputs: the day-1 labels at ``labels_path``, the day-1
+    edge list (id_a, id_b) at ``edges_path`` (the pairs the labels were
+    built from) and the delta log's tombstones of earlier epochs.
 
-    Sequential epoch application is ORDER-INDEPENDENT: deletion only
-    splits components, final remaining-graph connectivity depends on
-    the final removed set alone, and labels are min member ids — so the
-    final store equals the one-shot batch takedown of all requests. The
+    Epoch ``eid`` runs dedup.takedown_components over the day-1
+    components its batch touches, with the logged tombstones below
+    ``eid`` counted as gone; the edges among the remaining members are a
+    ``dedup.edges_among`` slice of the persisted edge list (no banded
+    self-join, no signature read). It commits (id, comp) for every
+    day-1 member of those components — comp NULL for a tombstone —
+    through one ``_commit_epoch``, so an epoch writes |touched day-1
+    components| rows and computes over |batch| + those components: its
+    cost tracks the request batch, not the corpus (the edge slice is
+    one scan of the edge list, pruned when the list is bucketed by id).
+
+    Read-back: the final store is the day-1 labels overridden by
+    max(comp) per id over the delta log, minus every tombstoned id.
+    That is exact because deletion only splits components: an epoch
+    re-derives a component over a subset of what the previous epoch
+    touching it kept, so a survivor's min-member label never decreases
+    and its largest logged label is the one from the last epoch that
+    touched its day-1 component. A replayed epoch reads the same
+    tombstones below its stable ``eid`` and overwrites its own entry.
+    Final connectivity depends on the final removed set alone, so the
+    store equals the one-shot batch takedown of all requests: the
     returned rollup (per-member statuses vs the ORIGINAL day-1 labels +
-    new cluster sizes) therefore equals l38's answer, and l38's
-    from-scratch DuckDB replay is the oracle.
+    new cluster sizes) equals l38's answer, and l38's from-scratch
+    DuckDB replay is the oracle.
 
     Returns rows shaped like l38: (doc_id, old_component, new_component,
     status, new_cluster_size)."""
-    tomb_dir = os.path.join(scratch_dir, "tombstones")
-    stores_dir = os.path.join(scratch_dir, "label_stores")
+    delta_dir = os.path.join(scratch_dir, "label_delta")
+    delta_schema = "id bigint, comp bigint"
     day1 = spark.read.parquet(labels_path)
-    sig_store = spark.read.parquet(sig_store_path)
-
-    def store(version: int) -> DataFrame:
-        # version 0 of the mutable store is the persisted day-1 labels;
-        # every later version is written with day-1's schema, so its read
-        # plans no schema-inference job
-        if version == 0:
-            return day1
-        return spark.read.schema(day1.schema).parquet(
-            os.path.join(stores_dir, f"v{version}")
-        )
-
-    def edges_fn(remaining: DataFrame) -> DataFrame:
-        sub = sig_store.join(
-            F.broadcast(remaining.select("id")), "id", "semi"
-        )
-        return D.banded_pairs_from_signatures(
-            sub, num_hashes=num_hashes, est_threshold=est_threshold
-        ).select("id_a", "id_b")
+    edges = spark.read.parquet(edges_path)
 
     def handle(batch_df: DataFrame, eid: int) -> None:
-        # replay-safe version chain: the CURRENT store is derived from
-        # the stable epoch_id (v{eid}, immutable once written), the next
-        # version and this epoch's tombstones are written with
-        # overwrite — a re-delivered epoch recomputes v{eid+1} from the
-        # same v{eid} + batch and replaces it byte-for-byte instead of
-        # throwing path-exists or double-appending tombstones
-        cur = store(eid)
-        delta = D.takedown_components(cur, batch_df, edges_fn).localCheckpoint(
-            eager=False
+        gone = (
+            _read_epochs(spark, delta_dir, delta_schema, below=eid)
+            .filter(F.col("comp").isNull())
+            .select("id")
         )
-        survivors = delta.filter(F.col("comp").isNotNull()).select("id", "comp")
-        untouched = cur.join(delta.select("id"), "id", "left_anti")
-        # tombstones first: their commit is the delta cut's only
-        # single-consumer action, so the cut caches once and the store
-        # write below reads it on BOTH its branches (survivors leg +
-        # left_anti leg) instead of computing it twice concurrently
-        # (commit order within an epoch is free — both writes are
-        # idempotent overwrites derived from the immutable v{eid})
-        _commit_epoch(
-            delta.filter(F.col("comp").isNull()).select("id"), tomb_dir, eid
+        delta = D.takedown_components(
+            day1, batch_df, lambda members: D.edges_among(edges, members),
+            gone=gone,
         )
-        untouched.unionByName(survivors).write.mode("overwrite").parquet(
-            os.path.join(stores_dir, f"v{eid + 1}")
-        )
+        _commit_epoch(delta.select("id", "comp"), delta_dir, eid)
 
-    n_epochs = _stream_epochs(
+    _stream_epochs(
         requests.select("id"), "id", n_files,
-        os.path.join(scratch_dir, "req_src"), (tomb_dir, stores_dir), handle,
+        os.path.join(scratch_dir, "req_src"), (delta_dir,), handle,
     )
-    removed_all = _read_epochs(spark, tomb_dir, "id bigint")
-    final = store(n_epochs)
-    aff = day1.join(F.broadcast(removed_all), "id").select("comp").distinct()
-    members = day1.join(F.broadcast(aff), "comp")
-    surv = (
-        members.join(F.broadcast(removed_all), "id", "left_anti")
-        .select("id", F.col("comp").alias("old_comp"))
-        .join(final.withColumnRenamed("comp", "new_comp"), "id", "left")
-        .select("id", "old_comp", F.coalesce("new_comp", "id").alias("new_comp"))
+    # every day-1 member of a touched component, with its last label
+    # (max over the log, see above) and whether any epoch removed it
+    touched = (
+        _read_epochs(spark, delta_dir, delta_schema)
+        .groupBy("id")
+        .agg(
+            F.max("comp").alias("new_comp"),
+            (F.count(F.lit(1)) > F.count("comp")).alias("removed"),
+        )
     )
+    members = day1.join(F.broadcast(touched), "id").select(
+        "id", F.col("comp").alias("old_comp"), "new_comp", "removed"
+    )
+    surv = members.filter(~F.col("removed"))
     sizes = surv.groupBy("new_comp").agg(
         F.count(F.lit(1)).alias("new_cluster_size")
     )
@@ -738,9 +747,9 @@ def stream_takedown(
         .alias("status"),
         "new_cluster_size",
     )
-    tomb_rows = members.join(F.broadcast(removed_all), "id").select(
+    tomb_rows = members.filter(F.col("removed")).select(
         F.col("id").alias("doc_id"),
-        F.col("comp").alias("old_component"),
+        F.col("old_comp").alias("old_component"),
         F.lit(None).cast("long").alias("new_component"),
         F.lit("removed").alias("status"),
         F.lit(None).cast("long").alias("new_cluster_size"),
@@ -1044,23 +1053,8 @@ def stream_crossmodal_dedup(
         # order within an epoch is free — idempotent epoch-keyed
         # commits, store views pinned < eid, replay reruns all three).
         # The two appends touch DISJOINT cuts (captions vs pixels) and
-        # disjoint stores, so they run as two concurrent jobs from a
-        # small pool (guide §2.6 — the second job back-fills cores the
-        # first one's tail leaves idle); either failure raises out of
-        # the handler so the epoch still replays as one transaction.
-        # Each commit is wrapped per submission, so it runs with its own
-        # copy of the handler's local properties: its jobs keep the
-        # query's job group and cancel with q.stop() (a plain pool thread
-        # carries no job group)
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            fut_sigs = pool.submit(
-                inheritable_thread_target(spark)(_commit_epoch), sigs, tsig_dir, eid
-            )
-            fut_fps = pool.submit(
-                inheritable_thread_target(spark)(_commit_epoch), fps, fp_dir, eid
-            )
-            fut_sigs.result()
-            fut_fps.result()
+        # disjoint stores, so they run as two concurrent jobs
+        _commit_concurrently(spark, eid, (sigs, tsig_dir), (fps, fp_dir))
         _commit_epoch(_xm_union_edges(tpairs, ipairs), edges_dir, eid)
 
     _stream_epochs(
@@ -1157,18 +1151,19 @@ def stream_domain_mixture(
                 F.shiftright(F.col("rkey"), _L79B_BUCKET_SHIFT).cast("int"),
             )
             .select("doc_id", "cluster", "nt", "rkey", "bucket")
-            .localCheckpoint(eager=False)  # first commit materializes it
+            .localCheckpoint(eager=False)  # its commits materialize it
         )
-        _commit_epoch(keyed, keyed_dir, eid)
-        _commit_epoch(
-            keyed.groupBy("cluster", "bucket").agg(
-                F.count(F.lit(1)).cast("bigint").alias("n"),
-                F.sum("nt").cast("bigint").alias("tokens"),
-                F.sum("doc_id").cast("bigint").alias("id_sum"),
-            ),
-            delta_dir,
-            eid,
+        aggs = keyed.groupBy("cluster", "bucket").agg(
+            F.count(F.lit(1)).cast("bigint").alias("n"),
+            F.sum("nt").cast("bigint").alias("tokens"),
+            F.sum("doc_id").cast("bigint").alias("id_sum"),
         )
+        # the keyed rows and their aggregates go to disjoint stores, so
+        # the two commits run as concurrent jobs over the one cut: a task
+        # that reaches a cut partition another task is computing waits on
+        # that block's write lock and reads it, so on one executor each
+        # partition is assigned once
+        _commit_concurrently(spark, eid, (keyed, keyed_dir), (aggs, delta_dir))
 
     _stream_epochs(
         increment.select("doc_id", "nt", "embedding"), "doc_id", n_files,

@@ -879,12 +879,18 @@ class TestStageGraph:
 
         monkeypatch.setattr(S, "screen_corr", slow_corr)
         monkeypatch.setattr(P, "cardinality_unseen_profile", boom)
-        persistent_before = sc._jsc.getPersistentRDDs().size()
+        def persistent_ids() -> list[int]:
+            return list(sc._jsc.getPersistentRDDs().keySet())
+
+        # RDD ids only grow, so an RDD the run persisted has an id above
+        # every persistent id before it; comparing counts instead races
+        # the ContextCleaner unpersisting earlier tests' RDDs mid-run
+        max_before = max(persistent_ids(), default=-1)
         with pytest.raises(StageFailure):
             run_pipeline(spark, pipeline_run[0], str(tmp_path), _test_config())
         assert slow_outcome == ["raised"]
         assert not [t for t in threading.enumerate() if t.name.startswith("eda-stage")]
-        assert sc._jsc.getPersistentRDDs().size() == persistent_before
+        assert [i for i in persistent_ids() if i > max_before] == []
         _assert_inputs_uncached(spark, pipeline_run[0])
         assert not os.path.exists(os.path.join(str(tmp_path), "EDA_REPORT.md"))
         # the status store hears of the cancelled jobs' ends asynchronously

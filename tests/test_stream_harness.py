@@ -2,9 +2,11 @@
 is the one place that fans an increment into range files, opens the
 file stream with maxFilesPerTrigger=1 and runs the foreachBatch query;
 every foreachBatch driver in ``streaming/`` calls it. These tests keep
-that shape in one function and pin the takedown epoch's job count: it
-computes its affected members once. Replay of every driver, j11's
-included, is covered by test_streaming_replay.py."""
+that shape in one function, keep every epoch write in ``_commit_epoch``,
+pin the takedown epoch's job count (it computes its affected members
+once and commits one delta) and keep an empty store's read taskless.
+Replay of every driver, j11's included, is covered by
+test_streaming_replay.py."""
 
 from __future__ import annotations
 
@@ -86,15 +88,9 @@ class TestTakedownEpochJobs:
         )
         removed = spark.createDataFrame([(2,), (21,)], "id bigint")
 
-        def edges_fn(remaining):
-            ids = remaining.select("id")
-            return (
-                edges.join(ids.withColumnRenamed("id", "id_a"), "id_a", "semi")
-                .join(ids.withColumnRenamed("id", "id_b"), "id_b", "semi")
-                .select("id_a", "id_b")
-            )
-
-        delta = D.takedown_components(labels, removed, edges_fn)
+        delta = D.takedown_components(
+            labels, removed, lambda members: D.edges_among(edges, members)
+        )
         j0 = _jobs(spark)
         rows = delta.collect()
         jobs = _jobs(spark) - j0
@@ -105,24 +101,26 @@ class TestTakedownEpochJobs:
         assert jobs <= 2, f"the delta re-derived its members: {jobs} jobs"
 
     def test_stream_takedown_epoch_jobs(self, spark, sf_dir, tmp_path, monkeypatch):
-        """j17's per-epoch jobs outside the connected-components call
-        (whose edge rebuild and rounds depend on the data): one
-        tagged-member cut per epoch, a delta that re-derives nothing and
-        a store read that plans no schema job."""
+        """j17's per-epoch jobs: the tagged-member cut, the delta commit
+        and nothing else outside the connected-components call (whose
+        edge slice and rounds depend on the data), and at most 12 in
+        all. The epoch reads only immutable inputs and commits one
+        delta: no store read plans a schema job and no store rewrite
+        runs."""
         docs = load_table(spark, sf_dir, "documents")
-        sig_path = str(tmp_path / "sigs.parquet")
-        D.minhash_signatures_portable(
-            docs, "doc_id", "text", n=3, num_hashes=32, bands=8
-        ).withColumnRenamed("doc_id", "id").write.parquet(sig_path)
-        labels = D.connected_components(
-            D.banded_pairs_from_signatures(
-                spark.read.parquet(sig_path), num_hashes=32, est_threshold=0.45
-            ).select("id_a", "id_b"),
-            "id_a",
-            "id_b",
-        )
+        edges = D.banded_pairs_from_signatures(
+            D.minhash_signatures_portable(
+                docs, "doc_id", "text", n=3, num_hashes=32, bands=8
+            ).withColumnRenamed("doc_id", "id"),
+            num_hashes=32,
+            est_threshold=0.45,
+        ).select("id_a", "id_b")
+        edges_path = str(tmp_path / "edges.parquet")
+        edges.write.parquet(edges_path)
         labels_path = str(tmp_path / "labels.parquet")
-        labels.write.parquet(labels_path)
+        D.connected_components(
+            spark.read.parquet(edges_path), "id_a", "id_b"
+        ).write.parquet(labels_path)
         requests = (
             spark.read.parquet(labels_path)
             .filter(F.col("id") != F.col("comp"))
@@ -130,7 +128,7 @@ class TestTakedownEpochJobs:
             .distinct()
         )
 
-        per_epoch, in_cc = [], []
+        per_epoch, outside_cc, in_cc = [], [], []
         real_deliver, real_cc = SD._deliver, D.connected_components
 
         def counting(handle):
@@ -138,7 +136,8 @@ class TestTakedownEpochJobs:
                 in_cc.clear()
                 j0 = _jobs(spark)
                 handle(batch_df, eid)
-                per_epoch.append(_jobs(spark) - j0 - sum(in_cc))
+                per_epoch.append(_jobs(spark) - j0)
+                outside_cc.append(per_epoch[-1] - sum(in_cc))
 
             return real_deliver(counted)
 
@@ -151,9 +150,90 @@ class TestTakedownEpochJobs:
         monkeypatch.setattr(SD, "_deliver", counting)
         monkeypatch.setattr(D, "connected_components", counted_cc)
         SD.stream_takedown(
-            spark, requests, labels_path, sig_path, str(tmp_path / "scratch")
+            spark, requests, labels_path, edges_path, str(tmp_path / "scratch")
         ).collect()
-        # 15, 15, 17 when each epoch re-read its store's schema and its
-        # delta re-derived the members
+        # 13 when each epoch rebuilt its edges with a banded self-join,
+        # cut its delta and rewrote the whole label store beside its
+        # tombstones
         assert len(per_epoch) >= 2
-        assert max(per_epoch) <= 13, per_epoch
+        assert max(outside_cc) <= 6, outside_cc
+
+    def test_stream_takedown_epoch_total_jobs(self, spark, tmp_path, monkeypatch):
+        """A whole j17 epoch is at most 12 jobs when its connected
+        components have no edges left to propagate over (17 when the
+        epoch re-ran the banded self-join and rewrote the store): 30
+        stars lose their centers, so every survivor is a singleton and
+        the count is the epoch's fixed cost — member cut, edge slice,
+        the CC's first pass, and the commit."""
+        edges = [(b, b + k) for b in range(0, 300, 10) for k in (1, 2, 3)]
+        df = spark.createDataFrame(edges, "id_a bigint, id_b bigint")
+        edges_path = str(tmp_path / "edges.parquet")
+        df.write.parquet(edges_path)
+        labels_path = str(tmp_path / "labels.parquet")
+        D.connected_components(df, "id_a", "id_b").write.parquet(labels_path)
+        requests = spark.createDataFrame(
+            [(b,) for b in range(0, 300, 10)], "id bigint"
+        )
+        per_epoch = []
+        real_deliver = SD._deliver
+
+        def counting(handle):
+            def counted(batch_df, eid):
+                j0 = _jobs(spark)
+                handle(batch_df, eid)
+                per_epoch.append(_jobs(spark) - j0)
+
+            return real_deliver(counted)
+
+        monkeypatch.setattr(SD, "_deliver", counting)
+        rows = SD.stream_takedown(
+            spark, requests, labels_path, edges_path, str(tmp_path / "scratch")
+        ).collect()
+        assert sorted(r["status"] for r in rows) == (
+            ["relabeled"] * 90 + ["removed"] * 30
+        )
+        assert len(per_epoch) == 3
+        assert max(per_epoch) <= 12, per_epoch
+
+
+class TestEpochWritesGoThroughTheCommit:
+    def test_write_only_in_commit_and_fan_out(self):
+        """Every epoch write of a stream driver goes through
+        ``_commit_epoch`` (epoch-keyed overwrite + manifest swap): a
+        ``.write`` elsewhere in ``streaming/`` is a store rewrite the
+        replay contract does not cover. The harness's fan-out of the
+        source files is the one other writer, and j14's restart test
+        stages its two source halves before any query starts."""
+        allowed = {
+            ("documents.py", "_commit_epoch"),
+            ("documents.py", "_stream_epochs"),
+            ("events.py", "stream_checkpoint_recovery_rollup"),
+        }
+        outside = []
+        for name in ("documents.py", "events.py"):
+            tree = ast.parse(open(os.path.join(_STREAMING, name)).read())
+            for fn in tree.body:
+                if not isinstance(fn, ast.FunctionDef):
+                    continue
+                outside += [
+                    f"{name}:{node.lineno} in {fn.name}"
+                    for node in ast.walk(fn)
+                    if isinstance(node, ast.Attribute)
+                    and node.attr == "write"
+                    and (name, fn.name) not in allowed
+                ]
+        assert outside == [], "epoch write outside _commit_epoch"
+
+
+class TestEmptyEpochStore:
+    def test_empty_store_reads_with_no_partition(self, spark, tmp_path):
+        """A store with no committed epoch (every handler's epoch-0 view
+        of its own log) reads as a frame with no partition, so a plan
+        that reads it schedules no task for it; an empty local list
+        would parallelize into one Python-worker task per core."""
+        root = str(tmp_path / "store")
+        os.makedirs(SD._manifest_dir(root))
+        for store in (root, str(tmp_path / "no_manifest")):
+            df = SD._read_epochs(spark, store, "id bigint, comp bigint")
+            assert df.schema.simpleString() == "struct<id:bigint,comp:bigint>"
+            assert df.rdd.getNumPartitions() == 0

@@ -10,6 +10,7 @@ accumulated result still equals the batch answer."""
 from __future__ import annotations
 
 import os
+import threading
 
 import pytest
 from pyspark.sql import functions as F
@@ -27,6 +28,28 @@ def replay_every_epoch():
         yield
     finally:
         SD._TEST_REPLAY = False
+
+
+def _mixture_increment(spark, sf_dir):
+    """j25's inputs: the day-1 mixture store (centroids, keyed rows,
+    aggregates) and the day-2 (doc_id, embedding, nt) increment."""
+    from datafusion_cyberpolka_eda_spark.functions import text as T
+    from datafusion_cyberpolka_eda_spark.registry.llm_similarity import (
+        _mixture_store,
+    )
+
+    cutoff, cent, rows_path, aggs_path = _mixture_store(spark, sf_dir)
+    emb = load_table(spark, sf_dir, "embeddings")
+    docs = load_table(spark, sf_dir, "documents")
+    inc = emb.filter(F.col("vec_id") >= cutoff).select(
+        F.col("vec_id").alias("doc_id"), "embedding"
+    ).join(
+        docs.filter(F.col("doc_id") >= cutoff).select(
+            "doc_id", T.token_count("text").cast("bigint").alias("nt")
+        ),
+        "doc_id",
+    )
+    return cent, rows_path, aggs_path, inc
 
 
 def _rows(df):
@@ -120,7 +143,7 @@ class TestReplayIdempotency:
         self, spark, sf_dir, tmp_path, replay_every_epoch
     ):
         """Replayed takedown epochs must neither double-append tombstones
-        nor throw path-exists on the version-chain write (the exact r7
+        nor throw path-exists on the label-delta commit (the exact r7
         ADVICE failure modes)."""
         docs = load_table(spark, sf_dir, "documents")
         sig_store_path = str(tmp_path / "sigs.parquet")
@@ -128,11 +151,13 @@ class TestReplayIdempotency:
             docs, "doc_id", "text", n=3, num_hashes=32, bands=8
         ).withColumnRenamed("doc_id", "id")
         sigs.write.parquet(sig_store_path)
-        edges = D.banded_pairs_from_signatures(
+        edges_path = str(tmp_path / "edges.parquet")
+        D.banded_pairs_from_signatures(
             spark.read.parquet(sig_store_path),
             num_hashes=32,
             est_threshold=0.45,
-        ).select("id_a", "id_b")
+        ).select("id_a", "id_b").write.parquet(edges_path)
+        edges = spark.read.parquet(edges_path)
         labels = D.connected_components(edges, "id_a", "id_b")
         labels_path = str(tmp_path / "labels.parquet")
         labels.write.parquet(labels_path)
@@ -148,7 +173,7 @@ class TestReplayIdempotency:
         )
 
         streamed = SD.stream_takedown(
-            spark, requests, labels_path, sig_store_path,
+            spark, requests, labels_path, edges_path,
             str(tmp_path / "scratch"),
         )
         rows = streamed.collect()
@@ -409,28 +434,44 @@ class TestAssetIngestReplay:
     def test_crossmodal_commits_keep_the_query_job_group(
         self, spark, sf_dir, tmp_path, monkeypatch
     ):
-        """j24 runs two of its three commits on pool threads: each must
-        run under the handler thread's job group (the query's run id),
-        or q.stop() cannot cancel its jobs."""
+        """j24 runs two of its three commits on pool threads, j25 both of
+        its two: each must run under the handler thread's job group (the
+        query's run id), or q.stop() cannot cancel its jobs."""
         from datafusion_cyberpolka_eda_spark.registry.llm_multimodal import (
             _mm_fp_store,
             _xm_text_store,
         )
 
         sc = spark.sparkContext
-        handler_groups, commit_groups = [], []
+        handlers, commits = [], []
         real_deliver, real_commit = SD._deliver, SD._commit_epoch
 
         def recording_deliver(handle):
             def recorded(batch_df, epoch_id):
-                handler_groups.append(sc.getLocalProperty("spark.jobGroup.id"))
+                handlers.append(
+                    (sc.getLocalProperty("spark.jobGroup.id"), threading.get_ident())
+                )
                 handle(batch_df, epoch_id)
 
             return real_deliver(recorded)
 
         def recording_commit(df, root, epoch_id):
-            commit_groups.append(sc.getLocalProperty("spark.jobGroup.id"))
+            commits.append(
+                (sc.getLocalProperty("spark.jobGroup.id"), threading.get_ident())
+            )
             real_commit(df, root, epoch_id)
+
+        def check(per_epoch: int, pooled: int) -> None:
+            groups = {g for g, _ in handlers}
+            assert handlers
+            assert None not in groups
+            assert len(groups) == 1  # one query, one run id
+            assert [g for g, _ in commits] == [*groups] * (per_epoch * len(handlers))
+            threads = {t for _, t in handlers}
+            on_pool = [t for _, t in commits if t not in threads]
+            assert len(on_pool) == pooled * len(handlers)
+            handlers.clear()
+            commits.clear()
 
         monkeypatch.setattr(SD, "_deliver", recording_deliver)
         monkeypatch.setattr(SD, "_commit_epoch", recording_commit)
@@ -442,14 +483,15 @@ class TestAssetIngestReplay:
             docs.filter(F.col("doc_id") >= cutoff),
             sig_path,
             fp_path,
-            str(tmp_path / "scratch"),
+            str(tmp_path / "xm"),
             cutoff,
         )
-        assert handler_groups
-        assert None not in handler_groups
-        assert len(set(handler_groups)) == 1  # one query, one run id
-        # three commits per epoch, two of them on pool threads
-        assert commit_groups == handler_groups[:1] * (3 * len(handler_groups))
+        check(per_epoch=3, pooled=2)
+        cent, rows_path, aggs_path, inc = _mixture_increment(spark, sf_dir)
+        SD.stream_domain_mixture(
+            spark, inc, cent, rows_path, aggs_path, str(tmp_path / "mix")
+        )
+        check(per_epoch=2, pooled=2)
 
     def test_domain_mixture_replay(
         self, spark, sf_dir, tmp_path, replay_every_epoch
@@ -458,23 +500,11 @@ class TestAssetIngestReplay:
         twice, must still reproduce l79c's one-shot incremental report
         — aggregate deltas commit exactly once per epoch (a doubled
         delta would corrupt every share/budget/selection downstream)."""
-        from datafusion_cyberpolka_eda_spark.functions import text as T
         from datafusion_cyberpolka_eda_spark.registry.llm_similarity import (
-            _mixture_store,
             l79c_domain_mixture_incremental,
         )
 
-        cutoff, cent, rows_path, aggs_path = _mixture_store(spark, sf_dir)
-        emb = load_table(spark, sf_dir, "embeddings")
-        docs = load_table(spark, sf_dir, "documents")
-        inc = emb.filter(F.col("vec_id") >= cutoff).select(
-            F.col("vec_id").alias("doc_id"), "embedding"
-        ).join(
-            docs.filter(F.col("doc_id") >= cutoff).select(
-                "doc_id", T.token_count("text").cast("bigint").alias("nt")
-            ),
-            "doc_id",
-        )
+        cent, rows_path, aggs_path, inc = _mixture_increment(spark, sf_dir)
         streamed = SD.stream_domain_mixture(
             spark, inc, cent, rows_path, aggs_path,
             str(tmp_path / "scratch"),

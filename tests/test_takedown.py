@@ -2,8 +2,8 @@
 stores must (a) re-derive affected clusters exactly as a from-scratch
 build over the remaining corpus would — including the SPLIT case where
 the removed doc was the only bridge — (b) leave untouched components out
-of the delta, and (c) never rescan day-1 text (connectivity is rebuilt
-purely from the signature store)."""
+of the delta, and (c) never rescan day-1 text (connectivity is sliced
+purely from the persisted day-1 edge list)."""
 
 from __future__ import annotations
 
@@ -18,18 +18,8 @@ from datafusion_cyberpolka_eda_spark.sources.catalog import load_table
 
 
 def _edges_fn_from(full_edges):
-    """Toy edge rebuild: restrict a full edge list to remaining members —
-    the same semantics the signature-store slice produces in production."""
-
-    def fn(remaining):
-        ids = remaining.select("id")
-        return (
-            full_edges.join(
-                ids.withColumnRenamed("id", "id_a"), "id_a", "semi"
-            ).join(ids.withColumnRenamed("id", "id_b"), "id_b", "semi")
-        ).select("id_a", "id_b")
-
-    return fn
+    """Edge rebuild over a toy edge list: the production slice."""
+    return lambda remaining: D.edges_among(full_edges, remaining)
 
 
 def _delta(df) -> dict[int, tuple]:
@@ -90,6 +80,28 @@ class TestTakedownToy:
         removed = spark.createDataFrame([(3,)], "id bigint")
         got = _delta(D.takedown_components(labels, removed, _edges_fn_from(edges)))
         assert got == {1: (1, 1), 2: (1, 1), 3: (1, None), 4: (1, 4)}
+
+    def test_gone_removed_only_inside_touched_components(self, spark):
+        """Path 1-2-3-4-5 plus pair 10-11, with 2 and 10 gone from an
+        earlier takedown: removing 4 re-derives component 1 without 2
+        (both tombstoned, 1/3/5 split into singletons), while component
+        10, which only a gone id touches, stays out of the delta.
+        Duplicate ids in either set change nothing."""
+        edges = spark.createDataFrame(
+            [(1, 2), (2, 3), (3, 4), (4, 5), (10, 11)],
+            "id_a bigint, id_b bigint",
+        )
+        labels = D.connected_components(edges, "id_a", "id_b")
+        removed = spark.createDataFrame([(4,), (4,)], "id bigint")
+        gone = spark.createDataFrame([(2,), (2,), (10,)], "id bigint")
+        got = _delta(
+            D.takedown_components(
+                labels, removed, _edges_fn_from(edges), gone=gone
+            )
+        )
+        assert got == {
+            1: (1, 1), 2: (1, None), 3: (1, 3), 4: (1, None), 5: (1, 5)
+        }
 
 
 class TestTakedownRealData:
@@ -177,31 +189,32 @@ class TestTakedownNoRescan:
             "takedown plan scanned documents text"
         )
 
-    def test_edge_rebuild_reads_only_signature_store(self, spark, sf_dir, tmp_path):
-        """The takedown edge rebuild (signature-store slice -> banded
-        pairs) must scan the store parquet and never the documents table —
-        the same no-rescan contract the insert path (l31/l33) carries."""
+    def test_edge_slice_reads_only_edge_store(self, spark, sf_dir, tmp_path):
+        """The takedown edge rebuild (dedup.edges_among over the persisted
+        day-1 edge list) must scan only the edge store: never the
+        documents table, and no banded self-join over signatures — the
+        same no-rescan contract the insert path (l31/l33) carries."""
         docs = load_table(spark, sf_dir, "documents")
-        store_path = str(tmp_path / "store.parquet")
-        D.minhash_signatures_portable(
+        sigs = D.minhash_signatures_portable(
             docs.filter(F.col("doc_id") < 100), "doc_id", "text",
             n=3, num_hashes=32, bands=8,
-        ).write.parquet(store_path)
-        store = spark.read.parquet(store_path)
+        )
+        edges_path = str(tmp_path / "edges.parquet")
+        D.banded_pairs_from_signatures(sigs).select("id_a", "id_b").write.parquet(
+            edges_path
+        )
         remaining = spark.createDataFrame([(1,), (2,)], "id bigint")
-        sub = store.join(F.broadcast(remaining), "id", "semi")
-        edges = D.banded_pairs_from_signatures(sub)
+        edges = D.edges_among(spark.read.parquet(edges_path), remaining)
         buf = io.StringIO()
         with redirect_stdout(buf):
             edges.explain(mode="formatted")
         plan = buf.getvalue()
-        blocks = [
-            b for b in plan.split("\n\n") if "Scan parquet" in b or "Location" in b
-        ]
-        assert any("store.parquet" in b for b in blocks)
-        assert not any("documents.parquet" in b for b in blocks), (
-            "takedown edge rebuild scanned documents text:\n" + "\n".join(blocks)
+        scans = [b for b in plan.split("\n\n") if "Location:" in b]
+        assert scans and all("edges.parquet" in b for b in scans), (
+            "takedown edge slice scanned more than the edge store:\n"
+            + "\n".join(scans)
         )
+        assert "documents.parquet" not in plan
 
 
 class TestTakedownPipeline:
